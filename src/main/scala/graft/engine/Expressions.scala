@@ -838,7 +838,7 @@ object Expressions {
       }
   }
 
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "expressions") {
     registrations.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")

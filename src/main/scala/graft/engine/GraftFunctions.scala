@@ -28,13 +28,11 @@ object GraftFunctions {
     */
   def indexShape(geomStr: String, res: Int): Array[String] = {
     if (geomStr == null) return null
-    indexShapeCalls.incrementAndGet()
     val g = parseGeom(geomStr)
     indexGeometry(g, res).map(H3Index.toHexString)
   }
 
   def indexGeometry(g: Geometry, res: Int): Array[Long] = {
-    indexGeometryCalls.incrementAndGet()
     import org.locationtech.jts.geom._
     g match {
       case p: Point =>
@@ -79,15 +77,6 @@ object GraftFunctions {
     if (lat == null || lng == null) null
     else H3Index.toHexString(H3.latLngToCell(lat, lng, res))
 
-  /** Planar ratio numerator/denominator in one JVM call:
-    * area(g ∩ hex) / area(g) — the PCT_AREA ratio (h3_indexer.py:257-263).
-    */
-  /** scratch diagnostics (cheap atomic bumps; used by tools.TimeOne) */
-  val ratioAreaCalls = new java.util.concurrent.atomic.AtomicLong()
-  val ratioLengthCalls = new java.util.concurrent.atomic.AtomicLong()
-  val indexShapeCalls = new java.util.concurrent.atomic.AtomicLong()
-  val indexGeometryCalls = new java.util.concurrent.atomic.AtomicLong()
-
   /** Small per-thread LRU of parsed feature geometries: the (feature, cell)
     * rows repeat each feature's WKT once per covering cell.
     */
@@ -108,9 +97,11 @@ object GraftFunctions {
     }
   }
 
+  /** Planar ratio numerator/denominator in one JVM call:
+    * area(g ∩ hex) / area(g) — the PCT_AREA ratio (h3_indexer.py:257-263).
+    */
   def ratioArea(geomWkt: String, hexWkt: String): java.lang.Double = {
     if (geomWkt == null || hexWkt == null) return null
-    ratioAreaCalls.incrementAndGet()
     val g = parseGeomCached(geomWkt)
     val denom = g.getArea
     if (denom == 0.0) return 0.0
@@ -124,7 +115,6 @@ object GraftFunctions {
     */
   def ratioAreaCell(geomWkt: String, cell: Long): java.lang.Double = {
     if (geomWkt == null) return null
-    ratioAreaCalls.incrementAndGet()
     val g = parseGeomCached(geomWkt)
     val denom = g.getArea
     if (denom == 0.0) return 0.0
@@ -147,7 +137,6 @@ object GraftFunctions {
 
   def ratioLengthCell(geomWkt: String, cell: Long): java.lang.Double = {
     if (geomWkt == null) return null
-    ratioLengthCalls.incrementAndGet()
     val g = parseGeomCached(geomWkt)
     val denom = g.getLength
     if (denom == 0.0) return 0.0
@@ -201,18 +190,7 @@ object GraftFunctions {
     * Also injects the native codegen expressions so the whole surface is
     * available from one call.
     */
-  /** Sessions already registered — repeat calls (every query fn calls
-    * register) would re-register each UDF and spam "function replaced"
-    * warnings into the bench/verify logs. Weak keys: stopped test sessions
-    * must not pin.
-    */
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  def register(spark: SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
+  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "graftfunctions") {
     Expressions.register(spark)
     val u = spark.udf
     u.register("h3_index_shape", (g: String, res: Int) => indexShape(g, res))
@@ -292,6 +270,5 @@ object GraftFunctions {
           .union(java.util.Arrays.asList(polys: _*))
         GeoIO.toWkt(union)
       })
-    ()
   }
 }

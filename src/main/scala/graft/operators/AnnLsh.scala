@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.SessionMemo
 
 /** Random-hyperplane LSH for cosine similarity over embedding vectors —
   * the scale path for similarity search (brute force is the correctness
@@ -97,13 +98,7 @@ object AnnLsh {
     if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  def register(spark: SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
+  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "annlsh") {
     val u = spark.udf
     // primitive-array signatures: Spark passes array<float/double> unboxed
     u.register("ann_band_sigs", (v: Array[Float]) => bandSignatures(v))
@@ -114,42 +109,12 @@ object AnnLsh {
     // bit-identical to this body)
     u.register("cosine_f", (a: Array[Float], b: Array[Float]) => cosine(a, b))
     u.register("cosine_d", (a: Array[Double], b: Array[Double]) => cosineD(a, b))
-    ()
   }
 
-  private val MaxMemoEntries = 128
-  private val countMemo =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.LinkedHashMap[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          java.lang.Long]]())
-
-  /** Memoized row count keyed on the canonicalized plan (same contract as
-    * Dedup.fitsBroadcast): the LSH bit width derives from the corpus size,
-    * and bench reps / twin queries must not pay the count job more than
-    * once per distinct input.
+  /** Memoized row count per input version: the LSH bit width derives from
+    * the corpus size, and bench reps / twin queries must not pay the count
+    * job more than once per distinct input.
     */
-  def memoizedCount(df: org.apache.spark.sql.DataFrame): Long = {
-    val perSession = countMemo.synchronized {
-      var m = countMemo.get(df.sparkSession)
-      if (m == null) {
-        m = new java.util.LinkedHashMap[
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-          java.lang.Long](16, 0.75f, true) {
-          override def removeEldestEntry(e: java.util.Map.Entry[
-              org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-              java.lang.Long]): Boolean = size() > MaxMemoEntries
-        }
-        countMemo.put(df.sparkSession, m)
-      }
-      m
-    }
-    val key = df.queryExecution.analyzed.canonicalized
-    val cached = perSession.synchronized(perSession.get(key))
-    if (cached != null) return cached.longValue()
-    val n = df.count()
-    perSession.synchronized(perSession.put(key, java.lang.Long.valueOf(n)))
-    n
-  }
+  def memoizedCount(df: DataFrame): Long =
+    SessionMemo.getOrCompute(df, "count")(df.count())
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.GraftFunctions
+import graft.engine.{GraftFunctions, SessionMemo}
 import graft.geo.GeoIO
 import graft.h3.{H3, LatLng}
 
@@ -117,13 +117,7 @@ object SpatialJoin {
         size() > 512
     })
 
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]()))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!registeredSessions.add(spark)) return
+  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "spatialjoin") {
     spark.udf.register("st_cover_cells", (wkt: String, res: Int) => coverCells(wkt, res))
     spark.udf.register("st_contains_point",
       (wkt: String, lat: java.lang.Double, lng: java.lang.Double) =>

@@ -33,31 +33,34 @@ object T {
     * and each call still returns a fresh plan with fresh expression ids
     * (self-join safety is unchanged).
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** Cache key = path + current (mtime, length, child count): a parquet
+  /** Version of a path = its current (mtime, length, child stats): a parquet
     * file REPLACED at the same path in-JVM (the adjacent comment documents
     * events.parquet shipping three encodings across rounds) re-infers
     * instead of silently reading the old schema — a stale schema yields
     * nulls for renamed columns rather than failing. The stat is a local
     * filesystem call, not a Spark job; directories fold in the child list
-    * so a part-file rewrite inside one is caught too.
+    * so a part-file rewrite inside one is caught too. The cache holds one
+    * (version, schema) entry per path, replaced when the version changes.
     */
-  private def versionedKey(path: String): String = {
+  private def versionKey(path: String): String = {
     val f = new java.io.File(path)
     val kids = if (f.isDirectory) {
       val l = f.listFiles()
       if (l == null) "" else l.sortBy(_.getName)
         .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString(",")
     } else ""
-    s"$path@${f.length}:${f.lastModified}:$kids"
+    s"${f.length}:${f.lastModified}:$kids"
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(versionedKey(path),
-      _ => spark.read.parquet(path).schema)
+    val version = versionKey(path)
+    val schema = schemaCache.compute(path, (_, cached) =>
+      if (cached != null && cached._1 == version) cached
+      else (version, spark.read.parquet(path).schema))._2
     spark.read.schema(schema).parquet(path)
   }
 
