@@ -51,13 +51,11 @@ object Sessions {
       // stats say the build side is small); the AQE threshold additionally
       // rewrites SMJ→SHJ at runtime when every post-shuffle partition is
       // under 128 MB — safely under execution memory per task at 4 GB+
-      // executors, and env-overridable for other cluster shapes. Measured
-      // r12 A/B (min-of-4, sf0.1): tpch_q21 1.13→0.95, events_sessionize
-      // 0.63→0.57, dedup_minhash_lsh 1.03→0.98, rest unchanged.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "134217728"))
+      // executors. Measured r12 A/B (min-of-4, sf0.1): tpch_q21 1.13→0.95,
+      // events_sessionize 0.63→0.57, dedup_minhash_lsh 1.03→0.98, rest
+      // unchanged.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

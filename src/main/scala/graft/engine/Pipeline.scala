@@ -561,8 +561,7 @@ object GraftJob {
     */
   def loadInput(spark: SparkSession, in: VectorInput): DataFrame = in.path match {
     // .shp routes through the DataSource V2 split reader (parallel record
-    // ranges via .shx); graft.sources.Shapefile.read remains as the
-    // driver-side fallback surface
+    // ranges via .shx; one sequential split when there is no .shx)
     case Some(p) if p.endsWith(".shp") =>
       spark.read.format("shapefile").load(p)
     case Some(p) if p.endsWith(".geojson") || p.endsWith(".ndjson") =>

@@ -497,7 +497,7 @@ object TextOps {
         // in the scan stage, and BOTH consumers below (the rollup and the
         // per-bucket window) reuse this exchange instead of re-scanning
         // and re-tokenizing the corpus (the pre-round-10 form paid the
-        // scan twice; A/B in tools/AbPack.scala)
+        // scan twice; round-10 A/B in ARCHITECTURE.md)
         val toks = T(s, d, "documents").select(
           col("doc_id"),
           size(split(col("text"), " +")).cast("long").as("n_tokens"),

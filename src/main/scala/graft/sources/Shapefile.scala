@@ -1,58 +1,20 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
-/** Minimal ESRI shapefile reader (S2 of SURVEY.md §2.1 — the reference uses
-  * Sedona's `shapefile` DataSource, spark/spark.py:58-73). Implements the
-  * published public format: .shp geometry records (Point / MultiPoint /
-  * PolyLine / Polygon) + the sibling .dbf attribute table (dBASE III).
+/** ESRI shapefile record decoding (S2 of SURVEY.md §2.1 — the reference
+  * uses Sedona's `shapefile` DataSource, spark/spark.py:58-73) for the
+  * DataSource V2 reader [[ShapefileV2]]. Implements the published public
+  * format: .shp geometry records (Point / MultiPoint / PolyLine / Polygon) +
+  * the sibling .dbf attribute table (dBASE III).
   *
   * Geometries surface as WKT strings (the engine's geometry-at-rest form).
-  * Parsing happens driver-side: shapefiles are bounded inputs in practice
-  * (the format caps at 2 GB); a DataSource V2 split reader would be the
-  * upgrade path for larger archives.
   */
 object Shapefile {
 
-  def read(spark: SparkSession, shpPath: String): DataFrame = {
-    val geoms = readShp(shpPath)
-    val dbfPath = shpPath.replaceAll("\\.shp$", ".dbf")
-    val (attrSchema, attrs) =
-      if (Files.exists(Paths.get(dbfPath))) readDbf(dbfPath)
-      else (Seq.empty[StructField], Seq.fill(geoms.length)(Seq.empty[Any]))
-    require(attrs.isEmpty || attrs.length == geoms.length,
-      s"shp has ${geoms.length} records but dbf has ${attrs.length}")
-
-    val schema = StructType(
-      StructField("geometry", StringType, nullable = true) +: attrSchema)
-    val rows = geoms.zip(attrs).map { case (g, a) => Row.fromSeq(g +: a) }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq), schema)
-  }
-
   // ------------------------------------------------------------------ .shp
-
-  private def readShp(path: String): Array[String] = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    require(bytes.length >= 100, "shp too short for header")
-    val be = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    require(be.getInt(0) == 9994, s"bad shp magic ${be.getInt(0)}")
-    val out = mutable.ArrayBuffer.empty[String]
-    var off = 100
-    while (off + 8 <= bytes.length) {
-      val contentWords = ByteBuffer.wrap(bytes, off + 4, 4)
-        .order(ByteOrder.BIG_ENDIAN).getInt
-      val content = ByteBuffer.wrap(bytes, off + 8, contentWords * 2)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      out += parseRecord(content)
-      off += 8 + contentWords * 2
-    }
-    out.toArray
-  }
 
   private def fmt(d: Double): String =
     if (d == d.toLong.toDouble) d.toLong.toString else d.toString
@@ -162,11 +124,9 @@ object Shapefile {
 
   final case class DbfField(name: String, typ: Char, len: Int, dec: Int)
 
-  /** dBASE III header metadata + per-record decoder — shared by the
-    * driver-side reader and the DataSource V2 split reader.
-    */
+  /** dBASE III header metadata + per-record decoder. */
   final case class DbfMeta(fields: Seq[DbfField], headerSize: Int,
-                           recordSize: Int, numRecords: Int) {
+                           recordSize: Int) {
     def schema: Seq[StructField] = fields.map { f =>
       val dt = f.typ match {
         case 'N' if f.dec == 0 && f.len < 19 => LongType
@@ -202,7 +162,6 @@ object Shapefile {
   /** Parse a .dbf header from its leading bytes (≥ 32 + 32·nFields). */
   private[sources] def dbfMeta(bytes: Array[Byte]): DbfMeta = {
     val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val numRecords = le.getInt(4)
     val headerSize = le.getShort(8).toInt & 0xffff
     val recordSize = le.getShort(10).toInt & 0xffff
     val fields = mutable.ArrayBuffer.empty[DbfField]
@@ -215,16 +174,6 @@ object Shapefile {
       fields += DbfField(name, typ, len, dec)
       off += 32
     }
-    DbfMeta(fields.toSeq, headerSize, recordSize, numRecords)
-  }
-
-  private[sources] def readDbf(path: String): (Seq[StructField], Seq[Seq[Any]]) = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val meta = dbfMeta(bytes)
-    val rows = (0 until meta.numRecords).map { r =>
-      val start = meta.headerSize + r * meta.recordSize
-      meta.decode(java.util.Arrays.copyOfRange(bytes, start, start + meta.recordSize))
-    }
-    (meta.schema, rows)
+    DbfMeta(fields.toSeq, headerSize, recordSize)
   }
 }

@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
 /** DataSource V2 shapefile reader: `spark.read.format("shapefile")
   * .load(path)` where path is a .shp file or a directory of them.
   *
-  * The scale story the driver-side reader lacks: each .shp is SPLIT into
+  * Each .shp is SPLIT into
   * record ranges using the sibling .shx index (100-byte header + one
   * 8-byte (offset, length) entry per record — the published ESRI spec), so
   * a large shapefile scans in parallel tasks, each seeking straight to its

@@ -40,15 +40,7 @@ object SimHashScaleDemo {
       new java.io.FileOutputStream(s"$DemoDir/_DONE").close()
     }
 
-    val shuf = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuf.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
+    val meter = new graft.Bench.StageMeter(spark)
 
     graft.operators.Dedup.register(spark)
     val base = spark.read.parquet(s"$DemoDir/documents.parquet")
@@ -77,15 +69,13 @@ object SimHashScaleDemo {
     }
 
     def digest(df: DataFrame): (Long, String, Double, Double) = {
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      val s0 = shuf.get(); val t0 = System.nanoTime()
+      val s0 = meter.snapshot(); val t0 = System.nanoTime()
       val row = df.agg(count(lit(1)).cast("long").as("n"),
         md5(concat_ws("|", sort_array(collect_list(
           concat_ws(":", col("a"), col("b"), col("hamming")))))).as("dg"))
         .collect()(0)
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      (row.getLong(0), row.getString(1), sec, (shuf.get() - s0) / 1048576.0)
+      (row.getLong(0), row.getString(1), sec, (meter.snapshot() - s0).shuffleWrite / 1048576.0)
     }
 
     val (nC, dC, tC, mC) = digest(pairsWith("simhash_chunks"))
@@ -96,11 +86,11 @@ object SimHashScaleDemo {
 
     // the REGISTERED query must pick the block path at this corpus size
     val registered = graft.SparkEntry.registry.find(_.name == "dedup_simhash").get
-    org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-    val s0 = shuf.get(); val t0 = System.nanoTime()
+    val s0 = meter.snapshot(); val t0 = System.nanoTime()
     registered.fn(spark, DemoDir).write.format("noop").mode("overwrite").save()
-    println(f"registered dedup_simhash @ x105: wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
-      f"shuffle=${(shuf.get() - s0) / 1048576.0}%.1fMB (scheme auto-switches past threshold)")
+    val sec = (System.nanoTime() - t0) / 1e9
+    println(f"registered dedup_simhash @ x105: wall=$sec%.1fs " +
+      f"shuffle=${(meter.snapshot() - s0).shuffleWrite / 1048576.0}%.1fMB (scheme auto-switches past threshold)")
     spark.stop()
   }
 }

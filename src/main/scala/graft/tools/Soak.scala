@@ -141,25 +141,15 @@ object Soak {
       .getOrElse(defaultQueries)
     generate(spark, src)
 
-    val shuf = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) shuf.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
+    val meter = new graft.Bench.StageMeter(spark)
 
     def run(name: String, dir: String): (Double, Double) = {
       val q = graft.SparkEntry.registry.find(_.name == name).get
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      val s0 = shuf.get()
+      val s0 = meter.snapshot()
       val t0 = System.nanoTime()
       q.fn(spark, dir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      (sec, (shuf.get() - s0) / 1048576.0)
+      (sec, (meter.snapshot() - s0).shuffleWrite / 1048576.0)
     }
 
     // JVM/codegen warm pass on the smallest SF

@@ -55,6 +55,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // null geometry: dropped
       R("g4", null, 5L))))
 
+  test("SparkEntry.entry returns rows on a bare session with nothing registered") {
+    // the entry-point smoke check: a plain session, entry(), count rows
+    assert(graft.SparkEntry.entry(spark.newSession()).count() > 0)
+  }
+
   test("validator rejects duplicate unique ids") {
     val (in, _) = pointsInput
     val dup = df("pixel_id BIGINT, latitude DOUBLE, longitude DOUBLE, population DOUBLE",

@@ -14,6 +14,17 @@ class GeoSpec extends AnyFunSuite {
     assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(line)).equalsExact(line, 1e-12))
     val mp = GeoIO.fromWkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 2, 3 2, 3 3, 2 2)))")
     assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(mp)).equalsExact(mp, 1e-12))
+    // WKT -> geometry is bit-exact (the writer's FIXED(1e17) model): a
+    // coordinate 1 ulp off a short decimal, and one needing 17 significant
+    // digits, which the default 16-digit formatter rounds away
+    for ((x, y) <- Seq((-174.375, -69.17500000000001),
+                       (-146.27285751820568, 0.30099661052837234))) {
+      val pt = GeoIO.point(x, y)
+      val back = GeoIO.fromWkt(GeoIO.toWkt(pt)).getCoordinate
+      assert(back.x == x && back.y == y, GeoIO.toWkt(pt))
+      assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(pt)).equalsExact(pt, 1e-12))
+      assert(GeoIO.fromWkbHex(GeoIO.toWkbHex(pt)).equalsExact(pt))
+    }
   }
 
   test("encoding sniff follows the reference rules") {

@@ -95,7 +95,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(dir.resolve("pts.dbf"),
       dbf(Seq(("id", 'N', 4, 0), ("name", 'C', 8, 0), ("score", 'N', 8, 2)),
         Seq(Seq("   1", "alpha   ", "   12.50"), Seq("   2", "beta    ", "    7.25"))))
-    val df = Shapefile.read(spark, dir.resolve("pts.shp").toString)
+    val df = spark.read.format("shapefile").load(dir.resolve("pts.shp").toString)
     assert(df.columns.toSeq == Seq("geometry", "id", "name", "score"))
     val rows = df.orderBy("id").collect()
     assert(rows(0).getString(0) == "POINT (-122.4 37.7)")
@@ -110,7 +110,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
     val shell = Seq((0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0))
     val hole = Seq((1.0, 1.0), (2.0, 1.0), (2.0, 2.0), (1.0, 2.0), (1.0, 1.0))
     Files.write(dir.resolve("poly.shp"), shpFile(Seq(polygonRec(Seq(shell, hole)))))
-    val df = Shapefile.read(spark, dir.resolve("poly.shp").toString)
+    val df = spark.read.format("shapefile").load(dir.resolve("poly.shp").toString)
     val wkt = df.head().getString(0)
     val g = graft.geo.GeoIO.fromWkt(wkt)
     assert(g.getGeometryType == "Polygon")
@@ -126,7 +126,7 @@ class ShapefileSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hole2 = Seq((11.0, 1.0), (12.0, 1.0), (12.0, 2.0), (11.0, 2.0), (11.0, 1.0)) // CCW, area 1
     Files.write(dir.resolve("multi.shp"),
       shpFile(Seq(polygonRec(Seq(island1, island2, hole2)))))
-    val df = Shapefile.read(spark, dir.resolve("multi.shp").toString)
+    val df = spark.read.format("shapefile").load(dir.resolve("multi.shp").toString)
     val wkt = df.head().getString(0)
     val g = graft.geo.GeoIO.fromWkt(wkt)
     assert(g.getGeometryType == "MultiPolygon", s"got $wkt")
