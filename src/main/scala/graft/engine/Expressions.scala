@@ -16,7 +16,8 @@ import graft.h3.{H3, H3Index}
   * the surrounding project/filter stays in one generated function.
   *
   * Registered under `*_native` names via GraftExtensions
-  * (SparkSessionExtensions) or GraftFunctions.registerNative.
+  * (SparkSessionExtensions) or [[Expressions.register]] (which
+  * GraftFunctions.register calls).
   */
 object Expressions {
 

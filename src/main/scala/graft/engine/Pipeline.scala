@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model._
@@ -18,6 +18,20 @@ object Cols {
   val TotalCount = "total_count"
   val TotalLengthKm = "total_length_km"
   val TotalAreaKm2 = "total_area_km2"
+
+  /** The one place engine cells become text. Cells travel as int64 from
+    * polyfill to sink; this rewrites LONG `h3_index` / `h3_r3_parent` to
+    * hex STRING in place (column order kept). Absent or already-STRING
+    * columns pass through, so it is idempotent. Built on the native
+    * expression directly: it needs no registered function.
+    */
+  def hexCells(df: DataFrame): DataFrame = {
+    val cells = Seq(H3Index, H3R3Parent).filter(c =>
+      df.schema.exists(f => f.name == c && f.dataType == LongType))
+    if (cells.isEmpty) df
+    else df.withColumns(cells.map(c =>
+      c -> GraftBridge.column(Expressions.H3HexExpr(GraftBridge.expression(col(c))))).toMap)
+  }
 }
 
 final case class ValidationError(message: String) extends RuntimeException(message)
@@ -222,16 +236,18 @@ object Validator {
   */
 object Indexer {
 
-  /** @param forWrite when true (the S5 sink path) the output is
+  /** Output h3_index / h3_r3_parent are LONG cells; they become the
+    * reference's hex text only at the output projection
+    * ([[Cols.hexCells]], applied by [[GraftJob.write]] and by queries that
+    * return cells).
+    *
+    * @param forWrite when true (the S5 sink path) the output is
     *   repartitioned by h3_r3_parent to match the partitioned write layout;
     *   the resolver path skips it (the group-by reshuffles on h3_index
     *   anyway, so the parent shuffle would be pure waste).
-    * @param asHex when true the output h3_index/h3_r3_parent are hex text
-    *   (the reference's output schema); the resolver path passes false to
-    *   keep them LONG through its group-by/fold and converts after.
     */
   def index(spark: SparkSession, in: VectorInput, validated: DataFrame,
-            res: Int, forWrite: Boolean = true, asHex: Boolean = true): DataFrame = {
+            res: Int, forWrite: Boolean = true): DataFrame = {
     // Dispatch on METHOD, not geometry type. The reference guards the ratio
     // stage on method (h3_indexer.py:129/194/257: `if input.method == ...`);
     // for the declared-but-unimplemented PASS_THROUGH/CENTROID the ratio
@@ -268,9 +284,9 @@ object Indexer {
         callUDF("st_area_spheroid_km2", col(Cols.GeomWkt)))
     }
 
-    // Cells travel as raw int64 from here to the final projection: the
-    // polyfill generator emits ARRAY<LONG>, ratio/area/parent consume the
-    // long, and hex text exists only in the output columns. Every cell
+    // Cells travel as raw int64 from here to the sink: the polyfill
+    // generator emits ARRAY<LONG>, ratio/area/parent consume the long, and
+    // hex text exists only in Cols.hexCells' output projection. Every cell
     // function on this path is a native codegen Expression (Expressions.scala)
     // — the explode + ratio + epilogue stay inside one whole-stage-codegen
     // span with no ScalaUDF closure per row.
@@ -310,33 +326,17 @@ object Indexer {
     // (h3_indexer.py:116-124): same compute-once-per-cell effect, but zero
     // extra shuffles and no hexagon WKT travelling through the rows. (The
     // reference needed the dim join because its per-row compute ran in
-    // isolated Python workers.)
-    // Experimental A/B knob (session conf, read at plan time — no process
-    // global): co-locate exploded rows by cell BEFORE the ratio stage, so
-    // the CellInfo memo sees each distinct cell's uses contiguously (≈1
-    // miss per cell at ANY cap) at the price of shuffling every
-    // (geometry, cell) pair. Default OFF: the shuffle moves the full
-    // geometry WKT per pair, and on a real cluster rows already arrive
-    // feature-clustered per executor. Exists to MEASURE the trade
-    // (PLAN_r12 h3_index_lines memo-thrash adjudication), not to ship.
-    val preRatio =
-      if (in.method != Method.Within &&
-          spark.conf.getOption("spark.graft.experimental.colocateCells").contains("true"))
-        // sort within partitions too: the exchange alone only ROUTES each
-        // cell to one task — without contiguity a cell's uses still span
-        // the task and evictions between them re-miss (measured: exchange
-        // alone kept the 2.7x thrash slope AND doubled shuffle bytes)
-        exploded.repartition(spark.sparkContext.defaultParallelism, col(Cols.H3Index))
-          .sortWithinPartitions(col(Cols.H3Index))
-      else exploded
+    // isolated Python workers.) Rows are NOT co-located by cell first:
+    // PLAN_r12 measured that exchange as strictly worse at any scale (it
+    // moves the full geometry WKT per pair).
     val withRatio = in.method match {
       case Method.Within =>
-        preRatio.withColumn(Cols.Ratio, lit(1.0))
+        exploded.withColumn(Cols.Ratio, lit(1.0))
       case Method.PctLength =>
-        preRatio.withColumn(Cols.Ratio,
+        exploded.withColumn(Cols.Ratio,
           expr(s"st_ratio_length_cell_native(${Cols.GeomWkt}, ${Cols.H3Index})"))
       case Method.PctArea =>
-        preRatio.withColumn(Cols.Ratio,
+        exploded.withColumn(Cols.Ratio,
           expr(s"st_ratio_area_cell_native(${Cols.GeomWkt}, ${Cols.H3Index})"))
       case other =>
         throw ValidationError(s"method $other has no ratio implementation") // unreachable
@@ -349,18 +349,16 @@ object Indexer {
     }
 
     // epilogue (h3_indexer.py:31-81); parent stays LONG for the repartition
-    // (hashing an int64 beats hashing a 15-char string) and both cell
-    // columns become hex text in the final projection only
+    // (hashing an int64 beats hashing a 15-char string)
     val out = withRatio
       .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached_native(${Cols.H3Index})"))
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
       .withColumn(Cols.H3Resolution, lit(res))
     val parted = if (forWrite) out.repartition(col(Cols.H3R3Parent)) else out
-    def cellOut(c: String) = if (asHex) expr(s"h3_hex($c)").as(c) else col(c)
     parted.select((Seq(
-        cellOut(Cols.H3Index),
+        col(Cols.H3Index),
         col(Cols.H3Resolution),
-        cellOut(Cols.H3R3Parent),
+        col(Cols.H3R3Parent),
         col(Cols.H3AreaKm2), col(in.uniqueId)) ++ Seq(col(Cols.Ratio), col(totalCol)) ++
         attrs): _*)
   }
@@ -399,13 +397,28 @@ object Resolver {
       .agg(sums.map(c => sum(col(c)).as(c)).head, sums.map(c => sum(col(c)).as(c)).tail: _*)
   }
 
+  /** A per-cell frame keyed by hex STRING (a resolved table fed back
+    * through mergeDelta, or a written output read back) re-keyed to the
+    * engine's LONG cell; LONG frames pass through. Folding mixed key types
+    * would let Spark coerce the join keys (hex strings cast to numeric
+    * become null) and silently mismatch every row.
+    */
+  private def longCells(df: DataFrame): DataFrame =
+    df.schema(Cols.H3Index).dataType match {
+      case LongType => df
+      case StringType => df.withColumn(Cols.H3Index, expr(s"h3_unhex(${Cols.H3Index})"))
+      case other => throw ValidationError(
+        s"h3_index must be LONG or hex STRING, got ${other.simpleString}")
+    }
+
   /** Fold per-input resolved tables on h3_index (J4, full outer), then
     * re-derive the epilogue columns (h3_resolver.py:71-96: parent/area/res
     * are recomputed after the aggregation, in the same order).
     *
-    * Accepts h3_index as either LONG (the `asHex = false` indexer path —
-    * the group-by and fold then hash int64 keys) or hex STRING (persisted
-    * indexed outputs); LONG inputs become hex text in the final projection.
+    * Accepts h3_index as LONG (the indexer's output) or hex STRING; every
+    * STRING frame is unhexed on entry, so the group-by, fold and epilogue
+    * run on int64 cells and the cells become hex text only in the final
+    * projection ([[Cols.hexCells]]).
     *
     * @param forWrite when true (the sink path) the fold output is
     *   repartitioned by h3_r3_parent to match the partitioned write
@@ -416,22 +429,7 @@ object Resolver {
     */
   def resolve(spark: SparkSession, perInput: Seq[DataFrame], res: Int,
               forWrite: Boolean = true): DataFrame = {
-    // A mixed fold (a LONG asHex=false frame joined with a persisted
-    // hex-string frame) would let Spark coerce the join keys — hex strings
-    // cast to numeric become null — silently mismatching every row, so
-    // normalize string keys to the int64 cell before the reduce.
-    val keyTypes = perInput.map(_.schema(Cols.H3Index).dataType).distinct
-    val frames =
-      if (keyTypes.size <= 1) perInput
-      else perInput.map { df =>
-        df.schema(Cols.H3Index).dataType match {
-          case LongType => df
-          case StringType =>
-            df.withColumn(Cols.H3Index, expr(s"h3_unhex(${Cols.H3Index})"))
-          case other => throw ValidationError(
-            s"h3_index must be LONG or hex STRING, got ${other.simpleString}")
-        }
-      }
+    val frames = perInput.map(longCells)
     // Fold strategy. The per-input frames are post-aggregation (one row per
     // cell) with pairwise-disjoint sum_ columns, so the N-way full-outer
     // join is exactly a union + one per-cell aggregate: pad each frame with
@@ -474,26 +472,21 @@ object Resolver {
           .agg(max(col(allSums.head)).as(allSums.head),
             allSums.tail.map(c => max(col(c)).as(c)): _*)
       } else frames.reduce(_.join(_, Seq(Cols.H3Index), "full_outer"))
-    val isLong = folded.schema(Cols.H3Index).dataType == LongType
-    val withEpilogue =
-      if (isLong) folded
-        .withColumn(Cols.H3Resolution, lit(res))
-        .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
-        .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached_native(${Cols.H3Index})"))
-      else folded
-        .withColumn(Cols.H3Resolution, lit(res))
-        .withColumn(Cols.H3R3Parent, callUDF("h3_parent_res3", col(Cols.H3Index)))
-        .withColumn(Cols.H3AreaKm2, callUDF("h3_cell_area_km2", col(Cols.H3Index)))
+    val withEpilogue = folded
+      .withColumn(Cols.H3Resolution, lit(res))
+      .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
+      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached_native(${Cols.H3Index})"))
     val parted =
       if (forWrite) withEpilogue.repartition(col(Cols.H3R3Parent))
       else withEpilogue
-    def cellOut(c: String) = if (isLong) expr(s"h3_hex($c)").as(c) else col(c)
-    parted.select((Seq(cellOut(Cols.H3Index), col(Cols.H3Resolution),
-        cellOut(Cols.H3R3Parent), col(Cols.H3AreaKm2)) ++
-        folded.columns.filter(_.startsWith("sum_")).map(col)): _*)
+    Cols.hexCells(parted.select((Seq(col(Cols.H3Index), col(Cols.H3Resolution),
+        col(Cols.H3R3Parent), col(Cols.H3AreaKm2)) ++
+        folded.columns.filter(_.startsWith("sum_")).map(col)): _*))
   }
 
-  /** Single-input fast path (main.py:78-85, h3_resolver.py:101-160). */
+  /** Single-input resolve (main.py:78-85, h3_resolver.py:101-160): the
+    * general [[resolve]] over one [[resolveInput]].
+    */
   def resolveSingle(spark: SparkSession, indexed: DataFrame,
                     inputColumns: Seq[String], res: Int,
                     forWrite: Boolean = true): DataFrame =
@@ -515,8 +508,8 @@ object Resolver {
     require(sums.nonEmpty && deltaSums == sums,
       s"mergeDelta needs matching sum_ schemas, got [$sums] vs [$deltaSums]")
     val cols = (Cols.H3Index +: sums).map(col)
-    val merged = existing.select(cols: _*)
-      .unionByName(delta.select(cols: _*))
+    val merged = longCells(existing.select(cols: _*))
+      .unionByName(longCells(delta.select(cols: _*)))
       .groupBy(Cols.H3Index)
       .agg(sums.map(c => sum(col(c)).as(c)).head,
         sums.map(c => sum(col(c)).as(c)).tail: _*)
@@ -577,7 +570,9 @@ object GraftJob {
   }
 
   /** Validate → Index → Resolve; returns (per-input indexed, resolved,
-    * final job state). Status transitions mirror the reference
+    * final job state). The indexed frames are persisted and carry LONG
+    * cells; the resolved frame carries hex text; [[write]] writes both as
+    * hex. Status transitions mirror the reference
     * (main.py:48-98): Pending → Validated → RunningIndexer →
     * CompletedIndexer → RunningResolver → CompletedResolver, or Failed with
     * the error message captured.
@@ -621,14 +616,9 @@ object GraftJob {
       }.toMap
       state = state.advance(JobStatus.CompletedIndexer)
       state = state.advance(JobStatus.RunningResolver)
-      val resolved =
-        if (vectors.size == 1)
-          Resolver.resolveSingle(spark, indexed.values.head,
-            vectors.head.inputColumns, job.h3Resolution)
-        else
-          Resolver.resolve(spark,
-            vectors.map(in => Resolver.resolveInput(indexed(in.name), in.inputColumns)),
-            job.h3Resolution)
+      val resolved = Resolver.resolve(spark,
+        vectors.map(in => Resolver.resolveInput(indexed(in.name), in.inputColumns)),
+        job.h3Resolution)
       state = state.advance(JobStatus.CompletedResolver)
       (indexed, resolved, state)
     } catch {
@@ -641,9 +631,12 @@ object GraftJob {
   final case class JobFailed(state: JobState, cause: Throwable)
     extends RuntimeException(state.errorMessage.getOrElse("job failed"), cause)
 
-  /** S5: partitioned snappy parquet (spark/spark.py:154-196). */
+  /** S5: partitioned snappy parquet (spark/spark.py:154-196). LONG cell
+    * columns are written as the reference's hex text ([[Cols.hexCells]]),
+    * so the h3_r3_parent partition directories are hex too.
+    */
   def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
+    Cols.hexCells(df).write.mode("overwrite")
       .option("compression", "snappy")
       .partitionBy(Cols.H3Resolution, Cols.H3R3Parent)
       .parquet(path)

@@ -1,6 +1,6 @@
 package graft.geo
 
-import graft.h3.{H3, H3Index}
+import graft.h3.{H3, H3Index, LatLng}
 import org.locationtech.jts.geom.{Coordinate, Polygon}
 
 /** Bridge between the H3 core and JTS geometry: the U2/U3 UDF surface of the
@@ -12,8 +12,7 @@ object H3Geo {
     * reference's h3_to_wkt swaps h3's lat/lng pairs and repeats the first
     * vertex (spark_udfs.py:48-67).
     */
-  def cellPolygon(cell: Long): Polygon = {
-    val b = H3.cellToBoundary(cell)
+  private def boundaryPolygon(b: Array[LatLng]): Polygon = {
     val cs = new Array[Coordinate](b.length + 1)
     var i = 0
     while (i < b.length) {
@@ -24,11 +23,20 @@ object H3Geo {
     GeoIO.factory.createPolygon(cs)
   }
 
+  /** Hexagon area in km² via the exact geodesic area of its boundary
+    * (geospatial.py:117-137: ST_AreaSpheroid(h3_to_wkt(ix)) / 1e6). Every
+    * area consumer evaluates this one expression, so cached and uncached
+    * areas agree bit for bit.
+    */
+  private def boundaryAreaKm2(b: Array[LatLng]): Double =
+    math.abs(GeodesicExact.ringArea(
+      b.map(v => (math.toDegrees(v.lng), math.toDegrees(v.lat))))) / 1e6
+
   /** Fast WKT writer for cell boundary polygons (JTS WKTWriter's decimal
     * formatting costs ~30µs/cell; a direct StringBuilder with
     * Double.toString is ~10× cheaper and WKT-parseable identically).
     */
-  private def boundaryWkt(b: Array[graft.h3.LatLng]): String = {
+  private def boundaryWkt(b: Array[LatLng]): String = {
     val sb = new java.lang.StringBuilder(b.length * 44 + 16)
     sb.append("POLYGON ((")
     var i = 0
@@ -44,14 +52,8 @@ object H3Geo {
   def cellToWkt(cell: Long): String = boundaryWkt(H3.cellToBoundary(cell))
   def cellToWkt(cell: String): String = cellToWkt(H3Index.fromHexString(cell))
 
-  /** Hexagon area in km² via the exact geodesic area of its boundary
-    * (geospatial.py:117-137: ST_AreaSpheroid(h3_to_wkt(ix)) / 1e6).
-    */
-  def cellAreaKm2(cell: Long): Double = {
-    val b = H3.cellToBoundary(cell)
-    math.abs(GeodesicExact.ringArea(
-      b.map(v => (math.toDegrees(v.lng), math.toDegrees(v.lat))))) / 1e6
-  }
+  /** Hexagon area in km² ([[boundaryAreaKm2]]), uncached. */
+  def cellAreaKm2(cell: Long): Double = boundaryAreaKm2(H3.cellToBoundary(cell))
 
   def cellAreaKm2(cell: String): Double = cellAreaKm2(H3Index.fromHexString(cell))
 
@@ -114,17 +116,8 @@ object H3Geo {
     if (hit != null) return hit
     memoMisses.incrementAndGet()
     val b = H3.cellToBoundary(cell)
-    val areaKm2 = math.abs(GeodesicExact.ringArea(
-      b.map(v => (math.toDegrees(v.lng), math.toDegrees(v.lat))))) / 1e6
-    val cs = new Array[Coordinate](b.length + 1)
-    var i = 0
-    while (i < b.length) {
-      cs(i) = new Coordinate(math.toDegrees(b(i).lng), math.toDegrees(b(i).lat))
-      i += 1
-    }
-    cs(b.length) = cs(0)
-    val poly = GeoIO.factory.createPolygon(cs)
-    val v = CellInfo(poly, areaKm2, ConvexClip.fromPolygon(poly))
+    val poly = boundaryPolygon(b)
+    val v = CellInfo(poly, boundaryAreaKm2(b), ConvexClip.fromPolygon(poly))
     if (m.size >= memoStripeCap) m.clear() // partial eviction: one stripe only
     m.put(boxed, v)
     v
@@ -144,8 +137,8 @@ object H3Geo {
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Double]())
   private[graft] var areaStripeCap: Int = math.max(512, memoStripeCap * 16)
 
-  /** Cell area in km², computed by the EXACT expression cellInfoCached
-    * uses (bit-identical values) but cached standalone — consults an
+  /** Cell area in km², the same [[boundaryAreaKm2]] cellInfoCached uses
+    * (bit-identical values) but cached standalone — consults an
     * already-built CellInfo first so ratio-path cells are free.
     */
   def cellAreaKm2Cached(cell: Long): Double = {
@@ -157,9 +150,7 @@ object H3Geo {
     val hit = m.get(boxed)
     if (hit != null) return hit.doubleValue
     areaMisses.incrementAndGet()
-    val b = H3.cellToBoundary(cell)
-    val areaKm2 = math.abs(GeodesicExact.ringArea(
-      b.map(v => (math.toDegrees(v.lng), math.toDegrees(v.lat))))) / 1e6
+    val areaKm2 = cellAreaKm2(cell)
     if (m.size >= areaStripeCap) m.clear() // partial eviction: one stripe only
     m.put(boxed, java.lang.Double.valueOf(areaKm2))
     areaKm2
@@ -173,11 +164,8 @@ object H3Geo {
     * surface of the memo, kept for the registered `h3_cell_info` UDF).
     */
   def cellInfo(cell: String): (String, Double) = {
-    val h = H3Index.fromHexString(cell)
-    val b = H3.cellToBoundary(h)
-    val areaKm2 = math.abs(GeodesicExact.ringArea(
-      b.map(v => (math.toDegrees(v.lng), math.toDegrees(v.lat))))) / 1e6
-    (boundaryWkt(b), areaKm2)
+    val b = H3.cellToBoundary(H3Index.fromHexString(cell))
+    (boundaryWkt(b), boundaryAreaKm2(b))
   }
 
   /** Resolution-3 ancestor as hex string (U2, the partition key). */

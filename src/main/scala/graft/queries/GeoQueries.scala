@@ -80,10 +80,9 @@ object GeoQueries {
     Method.PctArea, Seq("balance"))
 
   private def indexed(s: SparkSession, in: VectorInput, data: DataFrame,
-                      forWrite: Boolean = true, asHex: Boolean = true,
-                      res: Int = Res): DataFrame = {
+                      forWrite: Boolean = true, res: Int = Res): DataFrame = {
     GraftFunctions.register(s)
-    Indexer.index(s, in, Validator.validate(s, in, data), res, forWrite, asHex)
+    Indexer.index(s, in, Validator.validate(s, in, data), res, forWrite)
   }
 
   val qs: Seq[QueryDef] = Seq(
@@ -95,7 +94,7 @@ object GeoQueries {
     // documents on its forWrite=false path). Output columns, rows, and
     // final order are byte-identical — only the dead exchange is gone.
     QueryDef("h3_index_points",
-      (s, d) => indexed(s, pointsInput, pointsDf(s, d), forWrite = false)
+      (s, d) => Cols.hexCells(indexed(s, pointsInput, pointsDf(s, d), forWrite = false))
         .orderBy("h3_index", "point_id"),
       headline = true),
 
@@ -113,13 +112,13 @@ object GeoQueries {
     // forWrite=false — their per-row chain is a native cell call (10×
     // slope 2.1), so the dead exchange costs more than the re-execution.
     QueryDef("h3_index_lines",
-      (s, d) => indexed(s, linesInput, linesDf(s, d))
+      (s, d) => Cols.hexCells(indexed(s, linesInput, linesDf(s, d)))
         .orderBy("h3_index", "route_id"),
       headline = true),
 
     // §2.7 POLYGON/PCT_AREA recipe (centroid polyfill, area ratio, F11)
     QueryDef("h3_index_polygons",
-      (s, d) => indexed(s, polysInput, polysDf(s, d))
+      (s, d) => Cols.hexCells(indexed(s, polysInput, polysDf(s, d)))
         .orderBy("h3_index", "geo_id"),
       headline = true),
 
@@ -145,10 +144,10 @@ object GeoQueries {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val pf = Future(Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false),
+          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
           Seq("qty")).localCheckpoint())
         val gf = Future(Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false, asHex = false),
+          indexed(s, polysInput, polysDf(s, d), forWrite = false),
           Seq("balance")).localCheckpoint())
         val p = Await.result(pf, Duration.Inf)
         val g = Await.result(gf, Duration.Inf)
@@ -166,7 +165,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val perCell = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false),
+          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
           Seq("qty"))
         perCell
           .withColumn("nbr", explode(callUDF("h3_grid_disk", col("h3_index"), lit(1))))
@@ -184,7 +183,7 @@ object GeoQueries {
     QueryDef("h3_compact_coverage",
       (s, d) => {
         GraftFunctions.register(s)
-        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false, asHex = false)
+        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
         idx.groupBy("geo_id")
           .agg(collect_list("h3_index").as("cells"))
           .select(col("geo_id"),
@@ -204,7 +203,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val perCell = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false),
+          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
           Seq("qty"))
         val disks = perCell.withColumn("nbrs",
           callUDF("h3_grid_disk", col("h3_index"), lit(1)))
@@ -245,7 +244,7 @@ object GeoQueries {
     QueryDef("h3_compact_coverage_checked",
       (s, d) => {
         GraftFunctions.register(s)
-        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false, asHex = false)
+        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
         val per = idx.groupBy("geo_id")
           .agg(collect_list("h3_index").as("cells"))
           .withColumn("compact", callUDF("h3_compact", col("cells")))
@@ -278,11 +277,10 @@ object GeoQueries {
       (s, d) => {
         val p = Resolver.rollupToRes(
           Resolver.resolveInput(
-            indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false,
-              res = Res + 1),
+            indexed(s, pointsInput, pointsDf(s, d), forWrite = false, res = Res + 1),
             Seq("qty")), Res).localCheckpoint()
         val g = Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false, asHex = false),
+          indexed(s, polysInput, polysDf(s, d), forWrite = false),
           Seq("balance")).localCheckpoint()
         Resolver.resolve(s, Seq(p, g), Res, forWrite = false).orderBy("h3_index")
       }),
@@ -524,7 +522,7 @@ object GeoQueries {
         val all = pointsDf(s, d)
         def res1(batch: org.apache.spark.sql.DataFrame) =
           Resolver.resolveSingle(s,
-            indexed(s, pointsInput, batch, forWrite = false, asHex = false),
+            indexed(s, pointsInput, batch, forWrite = false),
             Seq("qty"), Res)
         val existing = res1(all.where(pmod(col("point_id"), lit(2)) === 0))
         val delta = res1(all.where(pmod(col("point_id"), lit(2)) === 1))
@@ -541,7 +539,9 @@ object GeoQueries {
     QueryDef("h3_index_points_checked",
       (s, d) => {
         graft.engine.Expressions.register(s)
-        val idx = indexed(s, pointsInput, pointsDf(s, d))
+        // h3_resolution_native reads hex text (a LONG would be cast to its
+        // decimal digits and misparsed), so the cells are hexed first
+        val idx = Cols.hexCells(indexed(s, pointsInput, pointsDf(s, d)))
         idx.agg(
           (sum(when(col("ratio") === 1.0, 0L).otherwise(1L)) === 0L).as("all_ratio_one"),
           (count(lit(1)) === countDistinct(col("point_id"))).as("one_row_per_point"),
@@ -601,7 +601,7 @@ object GeoQueries {
         val all = pointsDf(s, d)
         def res1(batch: org.apache.spark.sql.DataFrame) =
           Resolver.resolveSingle(s,
-            indexed(s, pointsInput, batch, forWrite = false, asHex = false),
+            indexed(s, pointsInput, batch, forWrite = false),
             Seq("qty"), Res)
         val merged = Resolver.mergeDelta(s,
           res1(all.where(pmod(col("point_id"), lit(2)) === 0)),
@@ -635,8 +635,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val p7 = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false,
-            res = Res + 1),
+          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, res = Res + 1),
           Seq("qty")).localCheckpoint()
         val rolled = Resolver.rollupToRes(p7, Res)
         val a = p7.agg(
@@ -785,8 +784,7 @@ object GeoQueries {
     // h3_smooth_disk_checked.
     QueryDef("h3_index_polygons_checked",
       (s, d) => {
-        val idx = indexed(s, polysInput, polysDf(s, d),
-          forWrite = false, asHex = false)
+        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
         val term = expr("CAST(round(balance * ratio, 6) AS DECIMAL(28,6))")
         val cellTot = idx.groupBy(col(Cols.H3Index))
           .agg(sum(term).as("ct"))
@@ -838,10 +836,10 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val p = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, asHex = false),
+          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
           Seq("qty")).localCheckpoint()
         val g = Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false, asHex = false),
+          indexed(s, polysInput, polysDf(s, d), forWrite = false),
           Seq("balance")).localCheckpoint()
         val folded = Resolver.resolve(s, Seq(p, g), Res, forWrite = false)
         def cents(c: String) = sum(col(c).cast("decimal(18,2)"))

@@ -85,8 +85,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getAs[Double](Cols.Ratio) == 1.0)
       assert(r.getAs[Int](Cols.TotalCount) == 1)
       assert(r.getAs[Int](Cols.H3Resolution) == 6)
-      val ix = r.getAs[String](Cols.H3Index)
-      assert(r.getAs[String](Cols.H3R3Parent) == graft.geo.H3Geo.parentRes3(ix))
+      val ix = r.getAs[Long](Cols.H3Index)
+      assert(r.getAs[Long](Cols.H3R3Parent) == graft.h3.H3Index.toParent(ix, 3))
       assert(r.getAs[Double](Cols.H3AreaKm2) > 30 && r.getAs[Double](Cols.H3AreaKm2) < 50)
     }
   }
@@ -180,7 +180,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def res1(batch: org.apache.spark.sql.DataFrame) =
       Resolver.resolveSingle(spark,
         Indexer.index(spark, in, Validator.validate(spark, in, batch), 6,
-          forWrite = false, asHex = false), Seq("qty"), 6)
+          forWrite = false), Seq("qty"), 6)
     val merged = Resolver.mergeDelta(spark,
       res1(all.where(pmod(col("point_id"), lit(2)) === 0)),
       res1(all.where(pmod(col("point_id"), lit(2)) === 1)), 6)
@@ -199,21 +199,48 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("resolver normalizes mixed LONG/hex-string h3_index keys before the fold") {
     val (pin, pdata) = polysInput
     val (lin, ldata) = linesInput
-    // hex-string frame (a persisted indexed output) + LONG frame (asHex=false)
-    val pHex = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 6)
+    // hex-string frame (a written indexed output read back) + LONG frame
+    val written = java.nio.file.Files.createTempDirectory("graft_hexkeys").toString
+    GraftJob.write(Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 6),
+      written)
+    val pHex = spark.read.parquet(written)
+    assert(pHex.schema(Cols.H3Index).dataType == org.apache.spark.sql.types.StringType)
     val lLong = Indexer.index(spark, lin, Validator.validate(spark, lin, ldata), 6,
-      forWrite = false, asHex = false)
+      forWrite = false)
     val mixed = Resolver.resolve(spark, Seq(
       Resolver.resolveInput(pHex, Seq("POPESTIMAT")),
       Resolver.resolveInput(lLong, Seq("emissions"))), 6)
     val pLong = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 6,
-      forWrite = false, asHex = false)
+      forWrite = false)
     val uniform = Resolver.resolve(spark, Seq(
       Resolver.resolveInput(pLong, Seq("POPESTIMAT")),
       Resolver.resolveInput(lLong, Seq("emissions"))), 6)
     // a mixed fold must not coerce keys to null — same rows as the uniform fold
     assert(mixed.count() == uniform.count())
     assert(mixed.collect().toSet == uniform.collect().toSet)
+  }
+
+  test("resolver: a hex-STRING-keyed frame resolves on LONG cells, no ScalaUDF") {
+    val (in, data) = polysInput
+    val perLong = Resolver.resolveInput(
+      Indexer.index(spark, in, Validator.validate(spark, in, data), 6, forWrite = false),
+      Seq("POPESTIMAT")).localCheckpoint()
+    // checkpointed so the STRING key is a genuine source column, not a
+    // h3_hex projection the optimizer could fold away
+    val perHex = perLong.withColumn(Cols.H3Index, expr(s"h3_hex(${Cols.H3Index})"))
+      .localCheckpoint()
+    val fromHex = Resolver.resolve(spark, Seq(perHex), 6)
+    val udfs = fromHex.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+    assert(udfs.isEmpty, udfs.map(_.udfName).mkString(", "))
+    val fromLong = Resolver.resolve(spark, Seq(perLong), 6)
+    val rows = fromHex.collect()
+    assert(rows.nonEmpty && rows.toSet == fromLong.collect().toSet)
+    rows.foreach { r =>
+      val cell = r.getAs[String](Cols.H3Index)
+      assert(r.getAs[Double](Cols.H3AreaKm2) == graft.geo.H3Geo.cellAreaKm2(cell))
+      assert(r.getAs[String](Cols.H3R3Parent) == graft.geo.H3Geo.parentRes3(cell))
+    }
   }
 
   test("single-input fast path equals general path") {
@@ -228,7 +255,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("mixed-resolution rollup conserves mass and lands on target-res keys") {
     val (pin, pdata) = pointsInput
     val idx7 = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 7,
-      forWrite = false, asHex = false)
+      forWrite = false)
     val per7 = Resolver.resolveInput(idx7, Seq("population"))
     val rolled = Resolver.rollupToRes(per7, 6)
     // exact conservation: re-summing under the ancestor key loses nothing
@@ -250,6 +277,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
     GraftJob.write(idx, out)
     val back = spark.read.parquet(out)
+    // cells are written as hex text, one per indexed LONG cell
+    val written = back.select(Cols.H3Index).collect().map(_.getString(0)).sorted.toSeq
+    val cells = idx.select(Cols.H3Index).collect()
+      .map(r => graft.h3.H3Index.toHexString(r.getLong(0))).sorted.toSeq
+    assert(written.nonEmpty && written == cells)
     val aParent = back.select("h3_r3_parent").head().getString(0)
     val pruned = back.where(col("h3_r3_parent") === aParent && col("h3_resolution") === 6)
     val plan = pruned.queryExecution.executedPlan.toString()
