@@ -187,6 +187,7 @@ object Bench {
       val stages0 = meter.snapshot()
       val timesGc = (1 to reps).flatMap { rep =>
         val misses0 = graft.geo.H3Geo.memoMisses.get()
+        val areaMisses0 = graft.geo.H3Geo.areaMisses.get()
         val gc0 = Bench.gcMillis
         val t0 = System.nanoTime()
         try {
@@ -203,8 +204,9 @@ object Bench {
           // a warm rep re-missing the cell memo, or rep-to-rep swings, point
           // at shared-JVM state — exactly what hid the round-3 anomaly.
           val dMiss = graft.geo.H3Geo.memoMisses.get() - misses0
+          val dAreaMiss = graft.geo.H3Geo.areaMisses.get() - areaMisses0
           System.err.println(
-            f"[bench] ${q.name} rep$rep $sec%.3fs gc=$gcSec%.2fs memoMiss=+$dMiss memoSize=${graft.geo.H3Geo.memoSize}")
+            f"[bench] ${q.name} rep$rep $sec%.3fs gc=$gcSec%.2fs memoMiss=+$dMiss areaMiss=+$dAreaMiss memoSize=${graft.geo.H3Geo.memoSize}")
           Some((sec, gcSec))
         } catch {
           case t: Throwable =>

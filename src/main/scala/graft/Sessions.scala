@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Shared session builder. Mirrors the reference's tuned execution envelope
@@ -22,11 +23,16 @@ object Sessions {
   def shufflePartitionsFor(h3Resolution: Int): Int =
     PartitionMapping.getOrElse(h3Resolution,
       PartitionMapping(h3Resolution.max(3).min(10)))
+  /** The launcher's master if set (spark-submit passes it as a system
+    * property, which `SparkConf` reads), else `local[cpus]`. */
+  private[graft] def masterFor(conf: SparkConf, cpus: String): String =
+    conf.getOption("spark.master").getOrElse(s"local[$cpus]")
+
   def local(cpus: String = sys.env.getOrElse(
               "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString),
             shufflePartitions: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(masterFor(new SparkConf(), cpus))
       .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -57,6 +57,7 @@ object Main {
           GraftJob.write(resolved, s"${job.outputPath}/resolved")
           println(s"[resolved] written")
         }
+        indexed.values.foreach(_.unpersist(true))
         println(s"[job ${state.id}] status=${state.status}")
     }
     spark.stop()

@@ -69,21 +69,21 @@ object Expressions {
   /** Static bridges invoked from generated code. */
   def indexShapeArray(geom: UTF8String, res: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(
-      GraftFunctions.indexGeometry(GraftFunctions.parseGeomCached(geom.toString), res))
+      GraftFunctions.indexGeometry(GraftFunctions.parseGeomCached(geom), res))
 
   def polyfillTasksArray(geom: UTF8String, res: Int, threshold: Double): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(
-      PolySplit.tasks(GraftFunctions.parseGeomCached(geom.toString), res, threshold))
+      PolySplit.tasks(GraftFunctions.parseGeomCached(geom), res, threshold))
 
   def cellsUnderArray(geom: UTF8String, task: Long, res: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(
-      PolySplit.cellsUnder(GraftFunctions.parseGeomCached(geom.toString), task, res))
+      PolySplit.cellsUnder(GraftFunctions.parseGeomCached(geom), task, res))
 
   def ratioAreaCell(geom: UTF8String, cell: Long): Double =
-    GraftFunctions.ratioAreaCell(geom.toString, cell).doubleValue
+    GraftFunctions.ratioAreaCell(GraftFunctions.parseGeomCached(geom), cell)
 
   def ratioLengthCell(geom: UTF8String, cell: Long): Double =
-    GraftFunctions.ratioLengthCell(geom.toString, cell).doubleValue
+    GraftFunctions.ratioLengthCell(GraftFunctions.parseGeomCached(geom), cell)
 
   /** h3_index_shape_native(geom STRING, res INT) → ARRAY<LONG> — U1 as a
     * codegen expression feeding the built-in `explode` (GenerateExec stays
@@ -252,11 +252,11 @@ object Expressions {
     override def prettyName: String = "h3_cell_area_cached_native"
 
     override protected def nullSafeEval(cell: Any): Any =
-      GraftFunctions.cellAreaKm2Cached(cell.asInstanceOf[Long])
+      graft.geo.H3Geo.cellAreaKm2Cached(cell.asInstanceOf[Long])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, cell =>
-        s"graft.engine.GraftFunctions.cellAreaKm2Cached($cell)")
+        s"graft.geo.H3Geo.cellAreaKm2Cached($cell)")
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }

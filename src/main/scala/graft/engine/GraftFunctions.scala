@@ -1,9 +1,10 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.Geometry
 import graft.h3.{H3, H3Index, LatLng}
-import graft.geo.{GeoIO, Geodesic, H3Geo}
+import graft.geo.{GeoIO, Geodesic, H3Geo, Memo}
 
 /** The engine's scalar-function surface, registered for both the DataFrame
   * API and SQL (`expr("...")`) — the role Sedona's function registry plays in
@@ -77,25 +78,18 @@ object GraftFunctions {
     if (lat == null || lng == null) null
     else H3Index.toHexString(H3.latLngToCell(lat, lng, res))
 
-  /** Small per-thread LRU of parsed feature geometries: the (feature, cell)
-    * rows repeat each feature's WKT once per covering cell.
+  /** Per-thread LRU of parsed feature geometries keyed by the row's WKT
+    * bytes: the (feature, cell) rows repeat each feature's WKT once per
+    * covering cell, and a hit decodes nothing. A miss stores a `copy()`.
     */
-  private val parsedCache = ThreadLocal.withInitial[java.util.LinkedHashMap[String, Geometry]](
-    () => new java.util.LinkedHashMap[String, Geometry](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, Geometry]): Boolean =
-        size() > 48
-    })
+  private val parsed = new Memo.PerThread[UTF8String, Geometry](48)
 
-  def parseGeomCached(s: String): Geometry = {
-    val c = parsedCache.get()
-    val hit = c.get(s)
-    if (hit != null) hit
-    else {
-      val g = parseGeom(s)
-      c.put(s, g)
-      g
-    }
+  def parseGeomCached(s: UTF8String): Geometry = {
+    val hit = parsed.get(s)
+    if (hit != null) hit else parsed.put(s.copy(), parseGeom(s.toString))
   }
+
+  def parseGeomCached(s: String): Geometry = parseGeomCached(UTF8String.fromString(s))
 
   /** Planar ratio numerator/denominator in one JVM call:
     * area(g ∩ hex) / area(g) — the PCT_AREA ratio (h3_indexer.py:257-263).
@@ -113,9 +107,7 @@ object GraftFunctions {
     * WKT is built or parsed per (feature, cell) pair, and no hex string
     * travels through the rows.
     */
-  def ratioAreaCell(geomWkt: String, cell: Long): java.lang.Double = {
-    if (geomWkt == null) return null
-    val g = parseGeomCached(geomWkt)
+  def ratioAreaCell(g: Geometry, cell: Long): Double = {
     val denom = g.getArea
     if (denom == 0.0) return 0.0
     val info = H3Geo.cellInfoCached(cell)
@@ -135,9 +127,7 @@ object GraftFunctions {
     }
   }
 
-  def ratioLengthCell(geomWkt: String, cell: Long): java.lang.Double = {
-    if (geomWkt == null) return null
-    val g = parseGeomCached(geomWkt)
+  def ratioLengthCell(g: Geometry, cell: Long): Double = {
     val denom = g.getLength
     if (denom == 0.0) return 0.0
     val info = H3Geo.cellInfoCached(cell)
@@ -152,10 +142,6 @@ object GraftFunctions {
       case None => g.intersection(info.poly).getLength / denom
     }
   }
-
-  // area-only path: rides the light scalar cache, never builds (or
-  // evicts) the geometry memo — see H3Geo.cellAreaKm2Cached
-  def cellAreaKm2Cached(cell: Long): Double = H3Geo.cellAreaKm2Cached(cell)
 
   /** length(g ∩ hex) / length(g) — the PCT_LENGTH ratio
     * (h3_indexer.py:193-199).
@@ -206,11 +192,13 @@ object GraftFunctions {
     u.register("st_ratio_area", (a: String, b: String) => ratioArea(a, b))
     u.register("st_ratio_length", (a: String, b: String) => ratioLength(a, b))
     u.register("st_ratio_area_cell", (a: String, c: java.lang.Long) =>
-      if (c == null) null else ratioAreaCell(a, c.longValue))
+      if (a == null || c == null) null
+      else java.lang.Double.valueOf(ratioAreaCell(parseGeomCached(a), c.longValue)))
     u.register("st_ratio_length_cell", (a: String, c: java.lang.Long) =>
-      if (c == null) null else ratioLengthCell(a, c.longValue))
+      if (a == null || c == null) null
+      else java.lang.Double.valueOf(ratioLengthCell(parseGeomCached(a), c.longValue)))
     u.register("h3_cell_area_cached", (c: java.lang.Long) =>
-      if (c == null) null else java.lang.Double.valueOf(cellAreaKm2Cached(c.longValue)))
+      if (c == null) null else java.lang.Double.valueOf(H3Geo.cellAreaKm2Cached(c.longValue)))
     u.register("h3_polyfill_est", (g: String, res: Int) =>
       // null-tolerant like the native expressions' nullSafeEval: the
       // shouldSplit max-estimate probe must not NPE on a dataset whose

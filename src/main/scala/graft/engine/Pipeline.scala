@@ -571,7 +571,8 @@ object GraftJob {
 
   /** Validate → Index → Resolve; returns (per-input indexed, resolved,
     * final job state). The indexed frames are persisted and carry LONG
-    * cells; the resolved frame carries hex text; [[write]] writes both as
+    * cells; the caller owns them and unpersists them once its writes are
+    * done. The resolved frame carries hex text; [[write]] writes both as
     * hex. Status transitions mirror the reference
     * (main.py:48-98): Pending → Validated → RunningIndexer →
     * CompletedIndexer → RunningResolver → CompletedResolver, or Failed with

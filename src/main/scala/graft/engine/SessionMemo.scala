@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session-scoped memo for driver-side verdicts (PK uniqueness,
   * polygon-split estimate, broadcast fit, corpus count) and for one-time
-  * function registration. ARCHITECTURE.md "Session memo" has the contract;
-  * in short:
+  * function registration; per-row executor work memoizes in graft.geo.Memo
+  * instead. ARCHITECTURE.md "Session memo" has the contract; in short:
   *   - a verdict is keyed by (plan digest, data-version signature, extra),
   *     all strings, so no key can pin a plan or a session;
   *   - a `compute` that throws propagates and is not cached;

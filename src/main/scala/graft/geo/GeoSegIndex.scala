@@ -205,10 +205,12 @@ object GeoSegIndex {
       if (isLine) null else PreparedGeometryFactory.prepare(g))
   }
 
-  // Per-thread identity LRU beside parseGeomCached: the same Geometry
+  // Per-thread identity cache beside parseGeomCached: the same Geometry
   // INSTANCE repeats across a partition's rows, so identity keying is both
-  // correct and O(1). Null results (below threshold / mixed kind) cache
-  // too — the segment recount is O(components) but not free.
+  // correct and O(1) — not a Memo.PerThread, whose equals keying is an
+  // O(n) equalsExact on these giant rings; nor may a giant index live as
+  // long as 48 parsed features. Null results (below threshold / mixed
+  // kind) cache too — the segment recount is not free.
   private val NullMarker = new Object
   private val cache = ThreadLocal.withInitial[java.util.IdentityHashMap[Geometry, AnyRef]](
     () => new java.util.IdentityHashMap[Geometry, AnyRef](16))

@@ -73,16 +73,12 @@ object H3Geo {
     * bounded and shuffle-free, unlike a distinct+join dimension which
     * shuffles every pair twice).
     *
-    * The memo is striped into [[MemoStripes]] independent maps keyed by the
-    * cell hash; when a stripe reaches its cap only THAT stripe is cleared, so
-    * one miss evicts at most 1/128 of the memo. (Round-1 shipped a single map
-    * with clear-at-cap, which wiped all 262k entries for every thread the
-    * moment distinct cells crossed the cap — measured 5× degradation on
-    * h3_index_lines once earlier queries had filled it.)
+    * A [[Memo.Striped]]: a stripe at its cap is cleared alone. (Round-1
+    * shipped a single map with clear-at-cap, which wiped all 262k entries
+    * for every thread the moment distinct cells crossed the cap — measured
+    * 5× degradation on h3_index_lines once earlier queries had filled it.)
     */
-  private[graft] val memoMisses = new java.util.concurrent.atomic.AtomicLong()
-  private[graft] val MemoStripes = 128
-  private[graft] var memoStripeCap = {
+  private val infoMemo = new Memo.Striped[CellInfo]({
     // Default cap scales with the executor heap: each CellInfo is ~800 B
     // (hexagon JTS polygon + clip region + key), and the memo may take ~10%
     // of the heap. A fixed 512k cap sat right at the working set of one
@@ -93,35 +89,8 @@ object H3Geo {
     val heapScaled = (Runtime.getRuntime.maxMemory / 10 / 800L)
       .max(524288L).min(8L * 1024 * 1024).toInt
     val total = sys.env.get("SPARK_GRAFT_H3_MEMO_CAP").map(_.toInt).getOrElse(heapScaled)
-    math.max(64, total / MemoStripes)
-  }
-  private val stripes = Array.fill(MemoStripes)(
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, CellInfo]())
-
-  /** 64-bit finalizer mix (splitmix64): raw H3 longs have near-constant low
-    * bits (unused digits are all 1s), so Long.hashCode % stripes would skew
-    * badly and over-evict hot stripes.
-    */
-  private def mix(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
-  def cellInfoCached(cell: Long): CellInfo = {
-    val boxed = java.lang.Long.valueOf(cell)
-    val m = stripes((mix(cell).toInt & 0x7fffffff) % MemoStripes)
-    val hit = m.get(boxed)
-    if (hit != null) return hit
-    memoMisses.incrementAndGet()
-    val b = H3.cellToBoundary(cell)
-    val poly = boundaryPolygon(b)
-    val v = CellInfo(poly, boundaryAreaKm2(b), ConvexClip.fromPolygon(poly))
-    if (m.size >= memoStripeCap) m.clear() // partial eviction: one stripe only
-    m.put(boxed, v)
-    v
-  }
+    math.max(64, total / Memo.Stripes)
+  })
 
   // ---- area-only cache. The epilogue/fold `h3_area_km2` lookups need ONLY
   // the scalar; paying the full CellInfo construction (JTS polygon + clip
@@ -131,34 +100,39 @@ object H3Geo {
   // h3_resolve_multi 2.6 → 10 s wall). A boxed-Double entry is ~50 B, so
   // this cache holds ~16× more cells in the same heap share and the
   // area-only traffic never evicts the geometry memo.
+  private val areaMemo =
+    new Memo.Striped[java.lang.Double](math.max(512, infoMemo.stripeCap * 16))
 
-  private[graft] val areaMisses = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val areaStripes = Array.fill(MemoStripes)(
-    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Double]())
-  private[graft] var areaStripeCap: Int = math.max(512, memoStripeCap * 16)
+  private[graft] def memoMisses: java.util.concurrent.atomic.AtomicLong = infoMemo.misses
+  private[graft] def areaMisses: java.util.concurrent.atomic.AtomicLong = areaMemo.misses
+  private[graft] val MemoStripes = Memo.Stripes
+  private[graft] def memoStripeCap: Int = infoMemo.stripeCap
+  private[graft] def memoStripeCap_=(cap: Int): Unit = infoMemo.stripeCap = cap
+  private[graft] def areaStripeCap: Int = areaMemo.stripeCap
+
+  def cellInfoCached(cell: Long): CellInfo = {
+    val hit = infoMemo.get(cell)
+    if (hit != null) return hit
+    val b = H3.cellToBoundary(cell)
+    val poly = boundaryPolygon(b)
+    infoMemo.put(cell, CellInfo(poly, boundaryAreaKm2(b), ConvexClip.fromPolygon(poly)))
+  }
 
   /** Cell area in km², the same [[boundaryAreaKm2]] cellInfoCached uses
     * (bit-identical values) but cached standalone — consults an
     * already-built CellInfo first so ratio-path cells are free.
     */
   def cellAreaKm2Cached(cell: Long): Double = {
-    val boxed = java.lang.Long.valueOf(cell)
-    val stripe = (mix(cell).toInt & 0x7fffffff) % MemoStripes
-    val gHit = stripes(stripe).get(boxed)
+    val gHit = infoMemo.get(cell)
     if (gHit != null) return gHit.areaKm2
-    val m = areaStripes(stripe)
-    val hit = m.get(boxed)
+    val hit = areaMemo.get(cell)
     if (hit != null) return hit.doubleValue
-    areaMisses.incrementAndGet()
-    val areaKm2 = cellAreaKm2(cell)
-    if (m.size >= areaStripeCap) m.clear() // partial eviction: one stripe only
-    m.put(boxed, java.lang.Double.valueOf(areaKm2))
-    areaKm2
+    areaMemo.put(cell, java.lang.Double.valueOf(cellAreaKm2(cell))).doubleValue
   }
 
-  /** Total entries across stripes (test/diagnostics only). */
-  private[graft] def memoSize: Int = { var s = 0; var i = 0; while (i < MemoStripes) { s += stripes(i).size; i += 1 }; s }
-  private[graft] def memoClear(): Unit = { stripes.foreach(_.clear()); areaStripes.foreach(_.clear()) }
+  /** Entries in the CellInfo memo (test/diagnostics only). */
+  private[graft] def memoSize: Int = infoMemo.size
+  private[graft] def memoClear(): Unit = { infoMemo.clear(); areaMemo.clear() }
 
   /** Boundary WKT + geodesic area in one boundary computation (the string
     * surface of the memo, kept for the registered `h3_cell_info` UDF).

@@ -66,6 +66,7 @@ object LocalIJ {
     */
   private final case class Frame(nbr: Array[Int], rots: Array[Int])
 
+  // not a graft.geo.Memo: a fixed 122-entry (per base cell) table, never evicted
   private val frames = new java.util.concurrent.ConcurrentHashMap[Int, Frame]()
 
   private def res0Cell(bc: Int): Long =

@@ -139,21 +139,11 @@ object Dedup {
     * once per similar partner, so the set is rebuilt O(partners) times
     * without it.
     */
-  private val shingleCache = ThreadLocal.withInitial[java.util.LinkedHashMap[String, Set[Long]]](
-    () => new java.util.LinkedHashMap[String, Set[Long]](128, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, Set[Long]]): Boolean =
-        size() > 96
-    })
+  private val shingleCache = new graft.geo.Memo.PerThread[String, Set[Long]](96)
 
   private def shingleSet(t: String): Set[Long] = {
-    val c = shingleCache.get()
-    val hit = c.get(t)
-    if (hit != null) hit
-    else {
-      val s = shingleHashes(t).toSet
-      c.put(t, s)
-      s
-    }
+    val hit = shingleCache.get(t)
+    if (hit != null) hit else shingleCache.put(t, shingleHashes(t).toSet)
   }
 
   /** Sorted distinct shingle-hash array — the SAME set shingleJaccard

@@ -243,14 +243,17 @@ object IvfIndex {
         .select(col("c"), col("f"),
           array((0 until dimT).map(i => col(s"s$i") / col(s"n$i")): _*)
             .as("newc"))
-      // empty fine cells keep their previous centroid
+      // empty fine cells keep their previous centroid, and so does a dim
+      // no ragged member reaches (else 0.0, as in the flat trainer)
       val prevExpl = cb.select(col("c"),
         posexplode(col("cents")).as(Seq("f", "prev")))
       // superseded checkpoints (kc-row frames) are dereferenced here and
       // reclaimed by the ContextCleaner on driver GC — nothing corpus-
       // sized is ever pinned
       cb = prevExpl.join(means, Seq("c", "f"), "left")
-        .withColumn("cent", coalesce(col("newc"), col("prev")))
+        .withColumn("cent", coalesce(
+          expr("transform(newc, (x, i) -> coalesce(x, try_element_at(prev, i + 1), 0D))"),
+          col("prev")))
         .groupBy("c")
         .agg(expr("transform(sort_array(collect_list(struct(f, cent))), s -> s.cent)")
           .as("cents"))

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{GraftFunctions, SessionMemo}
-import graft.geo.GeoIO
+import graft.geo.{GeoIO, Memo}
+import org.apache.spark.unsafe.types.UTF8String
+import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import graft.h3.{H3, LatLng}
 
 /** Distributed point-in-polygon spatial join, Spark-first: H3 cells as the
@@ -59,63 +61,26 @@ object SpatialJoin {
     out.toArray
   }
 
-  def containsPoint(polyWkt: String, lat: Double, lng: Double): Boolean = {
-    if (polyWkt == null) return false
-    // candidates arrive cell-clustered, so the same polygon repeats — a
-    // per-thread LRU holds the PREPARED geometry (edge index built once;
-    // JTS PreparedPolygon.contains is ~4× a plain contains on repeats)
-    preparedCached(polyWkt).contains(GeoIO.point(lng, lat))
-  }
+  def containsPoint(polyWkt: String, lat: Double, lng: Double): Boolean =
+    containsPointU(UTF8String.fromString(polyWkt), lat, lng)
 
-  private val preparedCache = ThreadLocal.withInitial(
-    () => new java.util.LinkedHashMap[String,
-        org.locationtech.jts.geom.prep.PreparedGeometry](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.locationtech.jts.geom.prep.PreparedGeometry]): Boolean =
-        size() > 512
-    })
-
-  private def preparedCached(wkt: String): org.locationtech.jts.geom.prep.PreparedGeometry = {
-    val c = preparedCache.get()
-    val hit = c.get(wkt)
-    if (hit != null) hit
-    else {
-      val p = org.locationtech.jts.geom.prep.PreparedGeometryFactory
-        .prepare(GraftFunctions.parseGeomCached(wkt))
-      c.put(wkt, p)
-      p
-    }
-  }
-
-  /** Codegen entry point (Expressions.ContainsPointExpr): keyed by
-    * UTF8String so the HIT path allocates nothing — the probe looks up with
-    * the transient row-backed UTF8String (hashCode/equals read the buffer
-    * in place) and only a MISS pays `.clone()` + WKT parse + prepare. The
-    * per-thread LRU is shared with the string path via the same eviction
-    * policy.
+  /** Candidates arrive cell-clustered, so the same polygon repeats: a
+    * per-thread LRU keyed by the row's WKT bytes holds the PREPARED geometry
+    * (JTS PreparedPolygon.contains is ~4× a plain contains on repeats). A
+    * hit allocates nothing; a miss pays `copy()` + parse + prepare.
     */
-  def containsPointU(wkt: org.apache.spark.unsafe.types.UTF8String,
-                     lat: Double, lng: Double): Boolean = {
+  private val preparedCache = new Memo.PerThread[UTF8String, PreparedGeometry](512)
+
+  def containsPointU(wkt: UTF8String, lat: Double, lng: Double): Boolean = {
     if (wkt == null) return false
-    val c = preparedCacheU.get()
-    var p = c.get(wkt)
+    var p = preparedCache.get(wkt)
     if (p == null) {
-      val owned = wkt.clone() // detach from the reused row buffer
-      p = org.locationtech.jts.geom.prep.PreparedGeometryFactory
-        .prepare(GraftFunctions.parseGeomCached(owned.toString))
-      c.put(owned, p)
+      val owned = wkt.copy() // detach from the reused row buffer
+      p = preparedCache.put(owned,
+        PreparedGeometryFactory.prepare(GraftFunctions.parseGeomCached(owned)))
     }
     p.contains(GeoIO.point(lng, lat))
   }
-
-  private val preparedCacheU = ThreadLocal.withInitial(
-    () => new java.util.LinkedHashMap[org.apache.spark.unsafe.types.UTF8String,
-        org.locationtech.jts.geom.prep.PreparedGeometry](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[org.apache.spark.unsafe.types.UTF8String,
-            org.locationtech.jts.geom.prep.PreparedGeometry]): Boolean =
-        size() > 512
-    })
 
   def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "spatialjoin") {
     spark.udf.register("st_cover_cells", (wkt: String, res: Int) => coverCells(wkt, res))

@@ -31,7 +31,8 @@ object T {
     * repeat reads skip the inference job entirely. Data is still scanned
     * from parquet on every action (this caches a StructType, never rows),
     * and each call still returns a fresh plan with fresh expression ids
-    * (self-join safety is unchanged).
+    * (self-join safety is unchanged). Driver-side and version-checked on
+    * every read, so neither a graft.geo.Memo nor a SessionMemo verdict.
     */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()

@@ -133,8 +133,9 @@ class GeoSegIndexSpec extends AnyFunSuite {
     assert(GeoSegIndex.cached(g) == null) // >256 segments, but collections never index
     // the ratio kernel must still answer through the legacy clip
     val cell = H3.latLngToCell(50.0, 10.0, 8)
-    val ratio = graft.engine.GraftFunctions.ratioAreaCell(g.toText, cell)
-    assert(ratio != null && ratio.doubleValue >= 0.0)
+    val ratio = graft.engine.GraftFunctions.ratioAreaCell(
+      graft.engine.GraftFunctions.parseGeomCached(g.toText), cell)
+    assert(!ratio.isNaN && ratio >= 0.0)
   }
 
   test("polygon with a hole: interior-of-hole cells report 0 like the full clip") {
@@ -156,7 +157,8 @@ class GeoSegIndexSpec extends AnyFunSuite {
     assert(fast === 0.0)
     assert(math.abs(full) < 1e-12)
     // and the ratio kernel end-to-end returns the exact zero
-    val ratioIdx = graft.engine.GraftFunctions.ratioAreaCell(g.toText, cell)
+    val ratioIdx = graft.engine.GraftFunctions.ratioAreaCell(
+      graft.engine.GraftFunctions.parseGeomCached(g.toText), cell)
     assert(ratioIdx === 0.0)
   }
 
@@ -173,7 +175,8 @@ class GeoSegIndexSpec extends AnyFunSuite {
     val g = reader.read(lineWkt)
     val cells = graft.engine.GraftFunctions.indexGeometry(g, 9).take(50)
     cells.foreach { cell =>
-      val viaKernel = graft.engine.GraftFunctions.ratioLengthCell(lineWkt, cell)
+      val viaKernel = graft.engine.GraftFunctions.ratioLengthCell(
+        graft.engine.GraftFunctions.parseGeomCached(lineWkt), cell)
       val info = H3Geo.cellInfoCached(cell)
       val manual = ConvexClip.lengthIn(info.clip.get, g) / g.getLength
       assert(java.lang.Double.doubleToLongBits(viaKernel.doubleValue) ===

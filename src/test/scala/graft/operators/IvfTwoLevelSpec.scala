@@ -132,6 +132,22 @@ class IvfTwoLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("ragged member vectors leave no null element in any codebook entry") {
+    // a quarter of the corpus is 2-dim and points away from the 8-dim
+    // rest, so some fine cell has no member reaching dims 2..7: its
+    // per-dim mean there is null and must not reach the codebook
+    val ragged = spark.range(160).select(col("id"), expr(
+      "case when id % 4 = 1 then array(0.01d * pmod(id, 7), 1.0d + 0.01d * pmod(id, 5)) " +
+      "else transform(sequence(0, 7), j -> case " +
+      "when j = 0 then 1.0d + 0.01d * pmod(xxhash64(id, j), 13) " +
+      "when j = 1 then 0.01d * pmod(xxhash64(id, j), 11) " +
+      "else cast(pmod(xxhash64(id, j), 997) as double) / 997.0 end) end").as("v"))
+    val m = IvfIndex.trainTwoLevel(spark, ragged, k = 16, iters = 2)
+    assert(m.coarse.centroids.head.length == 8) // fine means span 8 dims
+    assert(m.codebooks.where(
+      expr("exists(cents, cent -> cent is null or exists(cent, x -> x is null))")).count() === 0)
+  }
+
   test("null vectors keep their rows with a null cluster (flat-path parity)") {
     val e = corpus(50)
     val m = IvfIndex.trainTwoLevel(spark, e, k = 9, iters = 1)
