@@ -1,160 +1,24 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.h3.{H3, H3Index}
+import graft.h3.H3Index
 
-/** Native Catalyst expressions for the per-row H3 hot path. Unlike Scala
-  * UDFs these participate in whole-stage codegen: the generated code calls
-  * the static H3 core directly — no closure invocation, no Row boxing, and
-  * the surrounding project/filter stays in one generated function.
+/** The hand-written Catalyst expressions: the few calls that a plain
+  * `StaticInvoke` row of [[GraftFunctions.functions]] cannot express.
+  * Each generates its own code, so it stays inside whole-stage codegen.
   *
-  * Registered under `*_native` names via GraftExtensions
-  * (SparkSessionExtensions) or [[Expressions.register]] (which
-  * GraftFunctions.register calls).
+  *   - `h3_parent_long`, `h3_hex`, `h3_unhex`: [[CollapseH3Chains]]
+  *     pattern-matches them, and `Cols.hexCells` builds [[H3HexExpr]].
+  *   - the vector, dedup and IVF kernels: ragged pairs → NULL, codebooks
+  *     and bitsets embedded in the plan, or analysis-time input checks.
+  *     The table registers the four vector `*_native` names; the rest are
+  *     built as Columns by their operators.
   */
 object Expressions {
-
-  /** h3_latlng_cell_native(lat DOUBLE, lng DOUBLE, res INT) → STRING */
-  case class H3LatLngCellExpr(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-
-    override def dataType: DataType = StringType
-    override def prettyName: String = "h3_latlng_cell_native"
-
-    override protected def nullSafeEval(lat: Any, lng: Any, res: Any): Any =
-      UTF8String.fromString(H3.latLngToCellString(
-        lat.asInstanceOf[Double], lng.asInstanceOf[Double], res.asInstanceOf[Int]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (lat, lng, res) =>
-        "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.h3.H3.latLngToCellString($lat, $lng, $res))")
-
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-  }
-
-  /** h3_parent_native(cell STRING, res INT) → STRING (pure bit math). */
-  case class H3ParentExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = StringType
-    override def prettyName: String = "h3_parent_native"
-
-    override protected def nullSafeEval(cell: Any, res: Any): Any =
-      UTF8String.fromString(H3.cellToParentString(
-        cell.asInstanceOf[UTF8String].toString, res.asInstanceOf[Int]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (cell, res) =>
-        "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-          s"graft.h3.H3.cellToParentString($cell.toString(), $res))")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(l, r)
-  }
-
-  // ---- the LONG hot path: cells as raw int64 end-to-end (hex only at
-  // output). These carry the indexer's per-(feature,cell) work, so each is a
-  // real codegen Expression — no ScalaUDF closure, no UTF8String→String per
-  // cell, no boxing of the cell key.
-
-  /** Static bridges invoked from generated code. */
-  def indexShapeArray(geom: UTF8String, res: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      GraftFunctions.indexGeometry(GraftFunctions.parseGeomCached(geom), res))
-
-  def polyfillTasksArray(geom: UTF8String, res: Int, threshold: Double): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      PolySplit.tasks(GraftFunctions.parseGeomCached(geom), res, threshold))
-
-  def cellsUnderArray(geom: UTF8String, task: Long, res: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      PolySplit.cellsUnder(GraftFunctions.parseGeomCached(geom), task, res))
-
-  def ratioAreaCell(geom: UTF8String, cell: Long): Double =
-    GraftFunctions.ratioAreaCell(GraftFunctions.parseGeomCached(geom), cell)
-
-  def ratioLengthCell(geom: UTF8String, cell: Long): Double =
-    GraftFunctions.ratioLengthCell(GraftFunctions.parseGeomCached(geom), cell)
-
-  /** h3_index_shape_native(geom STRING, res INT) → ARRAY<LONG> — U1 as a
-    * codegen expression feeding the built-in `explode` (GenerateExec stays
-    * inside whole-stage codegen; the array is an UnsafeArrayData of
-    * primitive longs, never boxed).
-    */
-  case class H3IndexShapeExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "h3_index_shape_native"
-
-    override protected def nullSafeEval(geom: Any, res: Any): Any =
-      Expressions.indexShapeArray(geom.asInstanceOf[UTF8String], res.asInstanceOf[Int])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (geom, res) =>
-        s"graft.engine.Expressions.indexShapeArray($geom, $res)")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(l, r)
-  }
-
-  /** h3_polyfill_tasks_native(geom STRING, res INT, threshold DOUBLE) →
-    * ARRAY<LONG> — phase 1 of the split polyfill (PolySplit.tasks): the
-    * polygon's coarse ancestor cover when its cell estimate crosses
-    * `threshold`, the single sentinel task 0 otherwise. The threshold is an
-    * expression child (baked at plan time by the Indexer) rather than a
-    * task-side read of process state, so a scoped override cannot race a
-    * concurrently-built plan.
-    */
-  case class H3PolyfillTasksExpr(first: Expression, second: Expression,
-                                 third: Expression) extends TernaryExpression {
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "h3_polyfill_tasks_native"
-
-    override protected def nullSafeEval(geom: Any, res: Any, threshold: Any): Any =
-      Expressions.polyfillTasksArray(geom.asInstanceOf[UTF8String],
-        res.asInstanceOf[Int], threshold.asInstanceOf[Double])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (geom, res, threshold) =>
-        s"${ev.value} = graft.engine.Expressions.polyfillTasksArray($geom, $res, $threshold);")
-
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-  }
-
-  /** h3_cells_under_native(geom STRING, task LONG, res INT) → ARRAY<LONG> —
-    * phase 3 of the split polyfill (PolySplit.cellsUnder): the task's
-    * centroid-inside descendants; the sentinel task runs the whole-geometry
-    * BFS unchanged.
-    */
-  case class H3CellsUnderExpr(first: Expression, second: Expression,
-                              third: Expression) extends TernaryExpression {
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "h3_cells_under_native"
-
-    override protected def nullSafeEval(geom: Any, task: Any, res: Any): Any =
-      Expressions.cellsUnderArray(geom.asInstanceOf[UTF8String],
-        task.asInstanceOf[Long], res.asInstanceOf[Int])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (geom, task, res) =>
-        s"${ev.value} = graft.engine.Expressions.cellsUnderArray($geom, $task, $res);")
-
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-  }
 
   /** h3_parent_long(cell LONG, res INT) → LONG (pure bit math, codegen). */
   case class H3ParentLongExpr(left: Expression, right: Expression)
@@ -203,78 +67,6 @@ object Expressions {
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, cell =>
         s"graft.h3.H3Index.fromHexString($cell.toString())")
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
-
-  /** st_ratio_area_cell_native(geom STRING, cell LONG) → DOUBLE — the
-    * PCT_AREA ratio against the memoized cell polygon.
-    */
-  case class RatioAreaCellExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "st_ratio_area_cell_native"
-
-    override protected def nullSafeEval(geom: Any, cell: Any): Any =
-      Expressions.ratioAreaCell(geom.asInstanceOf[UTF8String], cell.asInstanceOf[Long])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (geom, cell) =>
-        s"graft.engine.Expressions.ratioAreaCell($geom, $cell)")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(l, r)
-  }
-
-  /** st_ratio_length_cell_native(geom STRING, cell LONG) → DOUBLE. */
-  case class RatioLengthCellExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "st_ratio_length_cell_native"
-
-    override protected def nullSafeEval(geom: Any, cell: Any): Any =
-      Expressions.ratioLengthCell(geom.asInstanceOf[UTF8String], cell.asInstanceOf[Long])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (geom, cell) =>
-        s"graft.engine.Expressions.ratioLengthCell($geom, $cell)")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(l, r)
-  }
-
-  /** h3_cell_area_cached_native(cell LONG) → DOUBLE (memoized exact area). */
-  case class CellAreaCachedExpr(child: Expression) extends UnaryExpression {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "h3_cell_area_cached_native"
-
-    override protected def nullSafeEval(cell: Any): Any =
-      graft.geo.H3Geo.cellAreaKm2Cached(cell.asInstanceOf[Long])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, cell =>
-        s"graft.geo.H3Geo.cellAreaKm2Cached($cell)")
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-  }
-
-  /** h3_resolution_native(cell STRING) → INT (bit extraction). */
-  case class H3ResolutionExpr(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-      {
-
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "h3_resolution_native"
-
-    override protected def nullSafeEval(cell: Any): Any =
-      H3Index.resolution(H3Index.fromHexString(cell.asInstanceOf[UTF8String].toString))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, cell =>
-        s"graft.h3.H3Index.resolution(graft.h3.H3Index.fromHexString($cell.toString()))")
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   }
@@ -738,72 +530,6 @@ object Expressions {
       copy(child = c)
   }
 
-  /** st_contains_point_native(wkt STRING, lat DOUBLE, lng DOUBLE) → BOOLEAN.
-    * Codegen twin of the st_contains_point UDF for the spatial join's
-    * candidate filter: the generated code passes the row-backed UTF8String
-    * straight to a UTF8String-keyed prepared-geometry LRU, so the hit path
-    * allocates nothing (the UDF path materializes a java.lang.String per
-    * probe). NULL-safe like any builtin — a NULL result is false in the
-    * join's WHERE, matching the UDF's explicit false-on-null.
-    */
-  case class ContainsPointExpr(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "st_contains_point_native"
-
-    override protected def nullSafeEval(w: Any, la: Any, lo: Any): Any =
-      graft.operators.SpatialJoin.containsPointU(
-        w.asInstanceOf[UTF8String], la.asInstanceOf[Double], lo.asInstanceOf[Double])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (w, la, lo) =>
-        s"graft.operators.SpatialJoin.containsPointU($w, $la, $lo)")
-
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-  }
-
-  // explicit input coercion at build time (AbstractDataType/ExpectsInputTypes
-  // is not public API in Spark 4, so the builders cast instead)
-  private def asD(e: Expression) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, DoubleType)
-  private def asI(e: Expression) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, IntegerType)
-  private def asS(e: Expression) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, StringType)
-  private def asL(e: Expression) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, LongType)
-  private def asAD(e: Expression) =
-    org.apache.spark.sql.catalyst.expressions.Cast(e, ArrayType(DoubleType))
-
-  private val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "h3_latlng_cell_native" -> (es => H3LatLngCellExpr(asD(es(0)), asD(es(1)), asI(es(2)))),
-    "h3_parent_native" -> (es => H3ParentExpr(asS(es(0)), asI(es(1)))),
-    "h3_resolution_native" -> (es => H3ResolutionExpr(asS(es.head))),
-    "h3_index_shape_native" -> (es => H3IndexShapeExpr(asS(es(0)), asI(es(1)))),
-    // 2-arg form bakes the CURRENT (plan-time, possibly scope-overridden)
-    // threshold in as a literal — the expression never reads process state
-    "h3_polyfill_tasks_native" -> (es => H3PolyfillTasksExpr(asS(es(0)), asI(es(1)),
-      es.lift(2).map(asD).getOrElse(
-        org.apache.spark.sql.catalyst.expressions.Literal(PolySplit.splitThreshold)))),
-    "h3_cells_under_native" -> (es => H3CellsUnderExpr(asS(es(0)), asL(es(1)), asI(es(2)))),
-    "h3_parent_long" -> (es => H3ParentLongExpr(asL(es(0)), asI(es(1)))),
-    "h3_hex" -> (es => H3HexExpr(asL(es.head))),
-    "h3_unhex" -> (es => H3UnhexExpr(asS(es.head))),
-    "st_ratio_area_cell_native" -> (es => RatioAreaCellExpr(asS(es(0)), asL(es(1)))),
-    "st_ratio_length_cell_native" -> (es => RatioLengthCellExpr(asS(es(0)), asL(es(1)))),
-    "h3_cell_area_cached_native" -> (es => CellAreaCachedExpr(asL(es.head))),
-    "l2_normalize_native" -> (es => L2NormalizeExpr(asAD(es.head))),
-    "vec_dot_native" -> (es => VecDotExpr(asAD(es(0)), asAD(es(1)))),
-    "vec_cosine_native" -> (es => VecCosineExpr(asAD(es(0)), asAD(es(1)))),
-    "vec_cosine_f_native" -> (es => VecCosineFloatExpr(
-      org.apache.spark.sql.catalyst.expressions.Cast(es(0), ArrayType(FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Cast(es(1), ArrayType(FloatType)))),
-    "st_contains_point_native" ->
-      (es => ContainsPointExpr(asS(es(0)), asD(es(1)), asD(es(2))))
-  )
-
   /** Optimizer rule: collapse H3 conversion chains that plan composition
     * creates — `h3_unhex(h3_hex(x))` → `x` (exact: toHexString/parse
     * round-trips any int64 bit pattern, null-through on both) and
@@ -838,31 +564,4 @@ object Expressions {
           }
       }
   }
-
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "expressions") {
-    registrations.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    // post-hoc sessions can't inject optimizer rules; extraOptimizations
-    // runs at the end of optimization, after SimplifyCasts
-    if (!spark.experimental.extraOptimizations.contains(CollapseH3Chains))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CollapseH3Chains
-  }
-
-  def inject(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => CollapseH3Chains)
-    registrations.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.engine.Expressions", name), builder))
-    }
-  }
-}
-
-/** `spark.sql.extensions=graft.engine.GraftExtensions` injects the native
-  * H3 expressions into every session of the cluster.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = Expressions.inject(ext)
 }

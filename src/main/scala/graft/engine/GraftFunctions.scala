@@ -1,16 +1,28 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.Geometry
 import graft.h3.{H3, H3Index, LatLng}
 import graft.geo.{GeoIO, Geodesic, H3Geo, Memo}
+import graft.operators.SpatialJoin
 
-/** The engine's scalar-function surface, registered for both the DataFrame
-  * API and SQL (`expr("...")`) — the role Sedona's function registry plays in
-  * the reference (SURVEY.md §2.5-2.6). All functions are JVM-native Scala
-  * UDFs over the graft.h3/graft.geo cores: no Python workers, no Arrow
-  * serialization tax (BASELINE.md "Implication" note).
+/** The engine's SQL function surface — the role Sedona's function registry
+  * plays in the reference (SURVEY.md §2.5-2.6). One table, [[functions]],
+  * binds every name once; [[register]] installs it into a session and
+  * [[GraftExtensions]] injects the same table into every session of a
+  * cluster.
+  *
+  * Each geo/H3 row is a Catalyst `StaticInvoke` of a static bridge below:
+  * the call stays inside whole-stage codegen (no ScalaUDF closure, no Row
+  * boxing) and plans name the kernel it runs, e.g.
+  * `static_invoke(graft.engine.GraftFunctions.indexShapeArray(geom_wkt, 8))`.
+  * A NULL argument gives NULL without calling the kernel.
   *
   * Geometry at rest is WKT (or GeoJSON/hex-WKB, sniffed), matching the
   * reference's string round-tripping between every Sedona call
@@ -18,21 +30,15 @@ import graft.geo.{GeoIO, Geodesic, H3Geo, Memo}
   */
 object GraftFunctions {
 
-  // ---- plain-Scala implementations (usable without Spark, unit-testable)
+  // ---- plain-Scala kernels (usable without Spark, unit-testable)
 
   def parseGeom(s: String): Geometry = GeoIO.parseString(s)
 
-  /** U1 index_shape: geometry (any string encoding) + res → covering cells.
+  /** U1 index_shape: geometry + res → covering cells.
     * Point → containing cell; LineString → cells along the path between
     * consecutive vertices; Polygon → centroid polyfill; Multi* → union.
     * (h3-pyspark 1.2.6 indexing semantics, SURVEY.md §2.6 U1.)
     */
-  def indexShape(geomStr: String, res: Int): Array[String] = {
-    if (geomStr == null) return null
-    val g = parseGeom(geomStr)
-    indexGeometry(g, res).map(H3Index.toHexString)
-  }
-
   def indexGeometry(g: Geometry, res: Int): Array[Long] = {
     import org.locationtech.jts.geom._
     g match {
@@ -61,23 +67,6 @@ object GraftFunctions {
     }
   }
 
-  /** U2: null-safe res-3 parent (partition key). */
-  def parentRes3(ix: String): String =
-    if (ix == null) null else H3Geo.parentRes3(ix)
-
-  /** U3: cell boundary as WKT polygon (declared StringType — the reference's
-    * BinaryType declaration is a latent bug we do not reproduce,
-    * SURVEY.md §2.6 U3).
-    */
-  def cellToWkt(ix: String): String = if (ix == null) null else H3Geo.cellToWkt(ix)
-
-  def cellAreaKm2(ix: String): java.lang.Double =
-    if (ix == null) null else H3Geo.cellAreaKm2(ix)
-
-  def latLngCell(lat: java.lang.Double, lng: java.lang.Double, res: Int): String =
-    if (lat == null || lng == null) null
-    else H3Index.toHexString(H3.latLngToCell(lat, lng, res))
-
   /** Per-thread LRU of parsed feature geometries keyed by the row's WKT
     * bytes: the (feature, cell) rows repeat each feature's WKT once per
     * covering cell, and a hit decodes nothing. A miss stores a `copy()`.
@@ -90,17 +79,6 @@ object GraftFunctions {
   }
 
   def parseGeomCached(s: String): Geometry = parseGeomCached(UTF8String.fromString(s))
-
-  /** Planar ratio numerator/denominator in one JVM call:
-    * area(g ∩ hex) / area(g) — the PCT_AREA ratio (h3_indexer.py:257-263).
-    */
-  def ratioArea(geomWkt: String, hexWkt: String): java.lang.Double = {
-    if (geomWkt == null || hexWkt == null) return null
-    val g = parseGeomCached(geomWkt)
-    val denom = g.getArea
-    if (denom == 0.0) return 0.0
-    g.intersection(parseGeom(hexWkt)).getArea / denom
-  }
 
   /** ratio against a cell given by raw long index: the hexagon boundary
     * comes from the per-executor memo as a parsed JTS polygon — no hexagon
@@ -143,23 +121,6 @@ object GraftFunctions {
     }
   }
 
-  /** length(g ∩ hex) / length(g) — the PCT_LENGTH ratio
-    * (h3_indexer.py:193-199).
-    */
-  def ratioLength(geomWkt: String, hexWkt: String): java.lang.Double = {
-    if (geomWkt == null || hexWkt == null) return null
-    val g = parseGeom(geomWkt)
-    val denom = g.getLength
-    if (denom == 0.0) return 0.0
-    g.intersection(parseGeom(hexWkt)).getLength / denom
-  }
-
-  def areaSpheroidKm2(wkt: String): java.lang.Double =
-    if (wkt == null) null else Geodesic.areaSqMeters(parseGeom(wkt)) / 1e6
-
-  def lengthSpheroidKm(wkt: String): java.lang.Double =
-    if (wkt == null) null else Geodesic.lengthMeters(parseGeom(wkt)) / 1000.0
-
   def makeValidWkt(s: String): String =
     if (s == null) null
     else try GeoIO.makeValid(parseGeom(s)).map(GeoIO.toWkt).orNull
@@ -170,93 +131,251 @@ object GraftFunctions {
       case scala.util.control.NonFatal(_) => null
     }
 
-  // --------------------------------------------------------- registration
+  // ---- Catalyst bridges: the methods the table's StaticInvokes call.
+  // They take and return Catalyst physical types (UTF8String, primitives,
+  // ArrayData, InternalRow) and never see a NULL argument.
 
-  /** Register every function for SQL/expr use (Sedona-registry parity).
-    * Also injects the native codegen expressions so the whole surface is
-    * available from one call.
+  private def utf(s: String): UTF8String = UTF8String.fromString(s)
+  private def longs(a: Array[Long]): ArrayData = UnsafeArrayData.fromPrimitiveArray(a)
+  private def geom(s: UTF8String): Geometry = parseGeom(s.toString)
+  private def cell(s: UTF8String): Long = H3Index.fromHexString(s.toString)
+
+  def latLngCell(lat: Double, lng: Double, res: Int): UTF8String =
+    utf(H3.latLngToCellString(lat, lng, res))
+  def parent(c: UTF8String, res: Int): UTF8String = utf(H3.cellToParentString(c.toString, res))
+  def parentRes3(c: UTF8String): UTF8String = utf(H3Geo.parentRes3(c.toString))
+  def resolution(c: UTF8String): Int = H3Index.resolution(cell(c))
+
+  /** U3: cell boundary as WKT polygon (declared StringType — the reference's
+    * BinaryType declaration is a latent bug we do not reproduce,
+    * SURVEY.md §2.6 U3).
     */
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "graftfunctions") {
-    Expressions.register(spark)
-    val u = spark.udf
-    u.register("h3_index_shape", (g: String, res: Int) => indexShape(g, res))
-    u.register("h3_parent_res3", (ix: String) => parentRes3(ix))
-    u.register("h3_parent", (ix: String, res: Int) =>
-      if (ix == null) null else H3.cellToParentString(ix, res))
-    u.register("h3_to_wkt", (ix: String) => cellToWkt(ix))
-    u.register("h3_cell_area_km2", (ix: String) => cellAreaKm2(ix))
-    u.register("h3_cell_info", (ix: String) =>
-      if (ix == null) null else H3Geo.cellInfo(ix))
-    u.register("h3_latlng_cell",
-      (lat: java.lang.Double, lng: java.lang.Double, res: Int) => latLngCell(lat, lng, res))
-    u.register("st_ratio_area", (a: String, b: String) => ratioArea(a, b))
-    u.register("st_ratio_length", (a: String, b: String) => ratioLength(a, b))
-    u.register("st_ratio_area_cell", (a: String, c: java.lang.Long) =>
-      if (a == null || c == null) null
-      else java.lang.Double.valueOf(ratioAreaCell(parseGeomCached(a), c.longValue)))
-    u.register("st_ratio_length_cell", (a: String, c: java.lang.Long) =>
-      if (a == null || c == null) null
-      else java.lang.Double.valueOf(ratioLengthCell(parseGeomCached(a), c.longValue)))
-    u.register("h3_cell_area_cached", (c: java.lang.Long) =>
-      if (c == null) null else java.lang.Double.valueOf(H3Geo.cellAreaKm2Cached(c.longValue)))
-    u.register("h3_polyfill_est", (g: String, res: Int) =>
-      // null-tolerant like the native expressions' nullSafeEval: the
-      // shouldSplit max-estimate probe must not NPE on a dataset whose
-      // null geometries the legacy single-generator path simply skipped
-      if (g == null) 0.0 else PolySplit.estimateCells(parseGeomCached(g), res))
-    u.register("st_area_spheroid_km2", (s: String) => areaSpheroidKm2(s))
-    u.register("st_length_spheroid_km", (s: String) => lengthSpheroidKm(s))
-    u.register("st_astext", (s: String) =>
-      if (s == null) null else GeoIO.toWkt(parseGeom(s)))
-    u.register("st_asgeojson", (s: String) =>
-      if (s == null) null else GeoIO.toGeoJson(parseGeom(s)))
-    u.register("st_point", (lon: java.lang.Double, lat: java.lang.Double) =>
-      if (lon == null || lat == null) null else GeoIO.toWkt(GeoIO.point(lon, lat)))
-    u.register("st_x", (s: String) =>
-      if (s == null) null else java.lang.Double.valueOf(parseGeom(s).getCoordinate.x))
-    u.register("st_y", (s: String) =>
-      if (s == null) null else java.lang.Double.valueOf(parseGeom(s).getCoordinate.y))
-    u.register("st_isvalid", (s: String) =>
-      if (s == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(GeoIO.isValid(parseGeom(s))))
-    u.register("st_makevalid", (s: String) => makeValidWkt(s))
-    u.register("st_area", (s: String) =>
-      if (s == null) null else java.lang.Double.valueOf(parseGeom(s).getArea))
-    u.register("st_length", (s: String) =>
-      if (s == null) null else java.lang.Double.valueOf(parseGeom(s).getLength))
-    u.register("st_intersection", (a: String, b: String) =>
-      if (a == null || b == null) null
-      else GeoIO.toWkt(parseGeom(a).intersection(parseGeom(b))))
+  def cellToWkt(c: UTF8String): UTF8String = utf(H3Geo.cellToWkt(c.toString))
+  def cellAreaKm2(c: UTF8String): Double = H3Geo.cellAreaKm2Cached(cell(c))
+  def cellInfo(c: UTF8String): InternalRow = {
+    val (wkt, area) = H3Geo.cellInfo(c.toString)
+    InternalRow(utf(wkt), area)
+  }
+
+  /** U1 as ARRAY<BIGINT> for the built-in `explode`: the array is an
+    * UnsafeArrayData of primitive longs, never boxed.
+    */
+  def indexShapeArray(g: UTF8String, res: Int): ArrayData =
+    longs(indexGeometry(parseGeomCached(g), res))
+
+  /** Phase 1 of the split polyfill (PolySplit.tasks): the polygon's coarse
+    * ancestor cover when its cell estimate crosses `threshold`, the single
+    * sentinel task 0 otherwise. The threshold is an argument (baked at plan
+    * time by the Indexer) rather than a task-side read of process state, so
+    * a scoped override cannot race a concurrently-built plan.
+    */
+  def polyfillTasksArray(g: UTF8String, res: Int, threshold: Double): ArrayData =
+    longs(PolySplit.tasks(parseGeomCached(g), res, threshold))
+
+  /** Phase 3 of the split polyfill (PolySplit.cellsUnder): the task's
+    * centroid-inside descendants; the sentinel task runs the whole-geometry
+    * BFS unchanged.
+    */
+  def cellsUnderArray(g: UTF8String, task: Long, res: Int): ArrayData =
+    longs(PolySplit.cellsUnder(parseGeomCached(g), task, res))
+
+  def polyfillEstimate(g: UTF8String, res: Int): Double =
+    PolySplit.estimateCells(parseGeomCached(g), res)
+
+  /** The PCT_AREA / PCT_LENGTH ratios against the memoized cell polygon. */
+  def ratioAreaCell(g: UTF8String, c: Long): Double = ratioAreaCell(parseGeomCached(g), c)
+  def ratioLengthCell(g: UTF8String, c: Long): Double = ratioLengthCell(parseGeomCached(g), c)
+
+  /** Planar ratio area(g ∩ hex) / area(g) — the PCT_AREA ratio
+    * (h3_indexer.py:257-263); [[ratioLength]] is PCT_LENGTH
+    * (h3_indexer.py:193-199).
+    */
+  def ratioArea(g: UTF8String, hex: UTF8String): Double = {
+    val a = parseGeomCached(g)
+    val denom = a.getArea
+    if (denom == 0.0) 0.0 else a.intersection(geom(hex)).getArea / denom
+  }
+
+  def ratioLength(g: UTF8String, hex: UTF8String): Double = {
+    val a = geom(g)
+    val denom = a.getLength
+    if (denom == 0.0) 0.0 else a.intersection(geom(hex)).getLength / denom
+  }
+
+  def areaSpheroidKm2(g: UTF8String): Double = Geodesic.areaSqMeters(geom(g)) / 1e6
+  def lengthSpheroidKm(g: UTF8String): Double = Geodesic.lengthMeters(geom(g)) / 1000.0
+  def asText(g: UTF8String): UTF8String = utf(GeoIO.toWkt(geom(g)))
+  def asGeoJson(g: UTF8String): UTF8String = utf(GeoIO.toGeoJson(geom(g)))
+  def point(lon: Double, lat: Double): UTF8String = utf(GeoIO.toWkt(GeoIO.point(lon, lat)))
+  def x(g: UTF8String): Double = geom(g).getCoordinate.x
+  def y(g: UTF8String): Double = geom(g).getCoordinate.y
+  def isValid(g: UTF8String): Boolean = GeoIO.isValid(geom(g))
+  /** Null on malformed or irreparable input. */
+  def makeValid(g: UTF8String): UTF8String = utf(makeValidWkt(g.toString))
+  def area(g: UTF8String): Double = geom(g).getArea
+  def length(g: UTF8String): Double = geom(g).getLength
+  def intersection(a: UTF8String, b: UTF8String): UTF8String =
+    utf(GeoIO.toWkt(geom(a).intersection(geom(b))))
+
+  def gridDisk(c: Long, k: Int): ArrayData = longs(H3.gridDisk(c, k))
+  def gridDistance(a: Long, b: Long): Int = H3.gridDistance(a, b)
+  def isValidCell(c: Long): Boolean = H3Index.isValidCell(c)
+  def isPentagon(c: Long): Boolean = H3Index.isPentagon(c)
+  def children(c: Long, res: Int): ArrayData = longs(H3.cellToChildren(c, res))
+  def compact(cells: ArrayData): ArrayData = longs(H3.compactCells(cells.toLongArray))
+  def uncompact(cells: ArrayData, res: Int): ArrayData =
+    longs(H3.uncompactCells(cells.toLongArray, res))
+
+  /** Coverage set → dissolved boundary geometry (the h3 API's
+    * cellsToMultiPolygon): union of the cell polygons via JTS overlay,
+    * emitted as WKT (POLYGON or MULTIPOLYGON as the union dictates).
+    */
+  def cellsToMultiPolygon(cells: ArrayData): UTF8String =
+    if (cells.numElements() == 0) utf("MULTIPOLYGON EMPTY")
+    else {
+      val polys = cells.toLongArray.map(c => GeoIO.fromWkt(H3Geo.cellToWkt(c)))
+      utf(GeoIO.toWkt(org.locationtech.jts.operation.union.UnaryUnionOp
+        .union(java.util.Arrays.asList(polys: _*))))
+    }
+
+  def coverCells(wkt: UTF8String, res: Int): ArrayData =
+    longs(SpatialJoin.coverCells(wkt.toString, res))
+
+  // ------------------------------------------------------ the function table
+
+  private type Builder = Seq[Expression] => Expression
+
+  // explicit input coercion at build time (AbstractDataType/ExpectsInputTypes
+  // is not public API in Spark 4, so the builders cast instead)
+  private def asD(e: Expression): Expression = Cast(e, DoubleType)
+  private def asI(e: Expression): Expression = Cast(e, IntegerType)
+  private def asS(e: Expression): Expression = Cast(e, StringType)
+  private def asL(e: Expression): Expression = Cast(e, LongType)
+  private def asAL(e: Expression): Expression = Cast(e, ArrayType(LongType))
+  private def asAD(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
+
+  private val longCells = ArrayType(LongType, containsNull = false)
+
+  /** `method` of `obj` over the cast arguments. `orNull` marks a result
+    * type that is nullable even on non-null input (StaticInvoke's
+    * `returnNullable`).
+    */
+  private def invoke(obj: AnyRef, method: String, dt: DataType, orNull: Boolean,
+                     casts: Seq[Expression => Expression]): Builder = { es =>
+    require(es.length == casts.length,
+      s"$method takes ${casts.length} argument(s), got ${es.length}")
+    StaticInvoke(obj.getClass, dt, method, casts.zip(es).map { case (c, e) => c(e) },
+      returnNullable = orNull)
+  }
+
+  /** NULL only on a NULL argument. */
+  private def exact(dt: DataType, method: String, casts: (Expression => Expression)*) =
+    invoke(this, method, dt, orNull = false, casts)
+
+  /** Nullable result type: st_makevalid returns NULL on irreparable input;
+    * the other rows keep the always-nullable type they had as Scala UDFs,
+    * so output schemas do not move.
+    */
+  private def nullable(dt: DataType, method: String, casts: (Expression => Expression)*) =
+    invoke(this, method, dt, orNull = true, casts)
+
+  /** Every SQL name the engine registers, bound once. The names that the
+    * indexer, resolver and spatial join call per (feature, cell) row are
+    * `exact`: their plans keep non-nullable ratio/area columns.
+    */
+  private[engine] val functions: Seq[(String, Builder)] = Seq(
+    // H3 cells as hex text
+    "h3_latlng_cell" -> exact(StringType, "latLngCell", asD, asD, asI),
+    "h3_parent" -> exact(StringType, "parent", asS, asI),
+    "h3_resolution" -> exact(IntegerType, "resolution", asS),
+    "h3_parent_res3" -> nullable(StringType, "parentRes3", asS),
+    "h3_to_wkt" -> nullable(StringType, "cellToWkt", asS),
+    "h3_cell_area_km2" -> nullable(DoubleType, "cellAreaKm2", asS),
+    "h3_cell_info" -> nullable(StructType(Seq(StructField("_1", StringType),
+      StructField("_2", DoubleType, nullable = false))), "cellInfo", asS),
+    // the indexer's LONG-cell hot path
+    "h3_index_shape" -> exact(longCells, "indexShapeArray", asS, asI),
+    // the 2-arg form bakes the CURRENT (plan-time, possibly scope-overridden)
+    // threshold in as a literal — the expression never reads process state
+    "h3_polyfill_tasks" -> { es =>
+      exact(longCells, "polyfillTasksArray", asS, asI, asD)(
+        if (es.length == 2) es :+ Literal(PolySplit.splitThreshold) else es)
+    },
+    "h3_cells_under" -> exact(longCells, "cellsUnderArray", asS, asL, asI),
+    "h3_polyfill_est" -> exact(DoubleType, "polyfillEstimate", asS, asI),
+    "st_ratio_area_cell" -> exact(DoubleType, "ratioAreaCell", asS, asL),
+    "st_ratio_length_cell" -> exact(DoubleType, "ratioLengthCell", asS, asL),
+    "h3_cell_area_cached" ->
+      invoke(H3Geo, "cellAreaKm2Cached", DoubleType, orNull = false, Seq(asL)),
+    // case classes, not StaticInvoke: CollapseH3Chains pattern-matches
+    // them and Cols.hexCells builds H3HexExpr
+    "h3_parent_long" -> (es => Expressions.H3ParentLongExpr(asL(es(0)), asI(es(1)))),
+    "h3_hex" -> (es => Expressions.H3HexExpr(asL(es.head))),
+    "h3_unhex" -> (es => Expressions.H3UnhexExpr(asS(es.head))),
     // hierarchy/traversal surface (beyond the reference's own usage; the
     // standard H3 API a user of an H3 engine expects)
-    u.register("h3_grid_disk", (c: java.lang.Long, k: Int) =>
-      if (c == null) null else H3.gridDisk(c.longValue, k))
-    u.register("h3_grid_distance", (a: java.lang.Long, b: java.lang.Long) =>
-      if (a == null || b == null) null.asInstanceOf[java.lang.Integer]
-      else Int.box(H3.gridDistance(a.longValue, b.longValue)))
-    u.register("h3_is_valid", (c: java.lang.Long) =>
-      if (c == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(H3Index.isValidCell(c.longValue)))
-    u.register("h3_is_pentagon", (c: java.lang.Long) =>
-      if (c == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(H3Index.isPentagon(c.longValue)))
-    u.register("h3_children", (c: java.lang.Long, res: Int) =>
-      if (c == null) null else H3.cellToChildren(c.longValue, res))
-    u.register("h3_compact", (cells: Array[Long]) =>
-      if (cells == null) null else H3.compactCells(cells))
-    u.register("h3_uncompact", (cells: Array[Long], res: Int) =>
-      if (cells == null) null else H3.uncompactCells(cells, res))
-    // coverage set → dissolved boundary geometry (the h3 API's
-    // cellsToMultiPolygon): union of the cell polygons via JTS overlay,
-    // emitted as WKT (POLYGON or MULTIPOLYGON as the union dictates)
-    u.register("h3_cells_to_multipolygon", (cells: Array[Long]) =>
-      if (cells == null) null
-      else if (cells.isEmpty) "MULTIPOLYGON EMPTY"
-      else {
-        val polys = cells.map(c => GeoIO.fromWkt(H3Geo.cellToWkt(c)))
-        val union = org.locationtech.jts.operation.union.UnaryUnionOp
-          .union(java.util.Arrays.asList(polys: _*))
-        GeoIO.toWkt(union)
-      })
+    "h3_grid_disk" -> nullable(longCells, "gridDisk", asL, asI),
+    "h3_grid_distance" -> nullable(IntegerType, "gridDistance", asL, asL),
+    "h3_is_valid" -> nullable(BooleanType, "isValidCell", asL),
+    "h3_is_pentagon" -> nullable(BooleanType, "isPentagon", asL),
+    "h3_children" -> nullable(longCells, "children", asL, asI),
+    "h3_compact" -> nullable(longCells, "compact", asAL),
+    "h3_uncompact" -> nullable(longCells, "uncompact", asAL, asI),
+    "h3_cells_to_multipolygon" -> nullable(StringType, "cellsToMultiPolygon", asAL),
+    // geometry (WKT, GeoJSON or hex-WKB in; WKT out)
+    "st_point" -> nullable(StringType, "point", asD, asD),
+    "st_x" -> nullable(DoubleType, "x", asS),
+    "st_y" -> nullable(DoubleType, "y", asS),
+    "st_astext" -> nullable(StringType, "asText", asS),
+    "st_asgeojson" -> nullable(StringType, "asGeoJson", asS),
+    "st_makevalid" -> nullable(StringType, "makeValid", asS),
+    "st_isvalid" -> nullable(BooleanType, "isValid", asS),
+    "st_area" -> nullable(DoubleType, "area", asS),
+    "st_length" -> nullable(DoubleType, "length", asS),
+    "st_area_spheroid_km2" -> nullable(DoubleType, "areaSpheroidKm2", asS),
+    "st_length_spheroid_km" -> nullable(DoubleType, "lengthSpheroidKm", asS),
+    "st_intersection" -> nullable(StringType, "intersection", asS, asS),
+    "st_ratio_area" -> nullable(DoubleType, "ratioArea", asS, asS),
+    "st_ratio_length" -> nullable(DoubleType, "ratioLength", asS, asS),
+    // spatial join: superset cover, then the exact filter over a
+    // UTF8String-keyed prepared-geometry LRU
+    "st_cover_cells" -> nullable(longCells, "coverCells", asS, asI),
+    "st_contains_point" ->
+      invoke(SpatialJoin, "containsPointU", BooleanType, orNull = false, Seq(asS, asD, asD)),
+    // vector kernels (ragged pair → NULL, see VecDotExpr)
+    "l2_normalize_native" -> (es => Expressions.L2NormalizeExpr(asAD(es.head))),
+    "vec_dot_native" -> (es => Expressions.VecDotExpr(asAD(es(0)), asAD(es(1)))),
+    "vec_cosine_native" -> (es => Expressions.VecCosineExpr(asAD(es(0)), asAD(es(1)))),
+    "vec_cosine_f_native" -> (es => Expressions.VecCosineFloatExpr(
+      Cast(es(0), ArrayType(FloatType)), Cast(es(1), ArrayType(FloatType))))
+  )
+
+  /** Register the table for SQL/expr use (Sedona-registry parity), plus the
+    * H3 chain-collapsing optimizer rule.
+    */
+  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "graftfunctions") {
+    functions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+    // post-hoc sessions can't inject optimizer rules; extraOptimizations
+    // runs at the end of optimization, after SimplifyCasts
+    if (!spark.experimental.extraOptimizations.contains(Expressions.CollapseH3Chains))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ Expressions.CollapseH3Chains
   }
+
+  def inject(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => Expressions.CollapseH3Chains)
+    functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(getClass.getName.stripSuffix("$"), name), builder))
+    }
+  }
+}
+
+/** `spark.sql.extensions=graft.engine.GraftExtensions` injects the whole
+  * [[GraftFunctions]] table into every session of the cluster.
+  */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = GraftFunctions.inject(ext)
 }

@@ -287,8 +287,8 @@ object Indexer {
     // Cells travel as raw int64 from here to the sink: the polyfill
     // generator emits ARRAY<LONG>, ratio/area/parent consume the long, and
     // hex text exists only in Cols.hexCells' output projection. Every cell
-    // function on this path is a native codegen Expression (Expressions.scala)
-    // — the explode + ratio + epilogue stay inside one whole-stage-codegen
+    // function on this path is a codegen call (GraftFunctions.functions) —
+    // the explode + ratio + epilogue stay inside one whole-stage-codegen
     // span with no ScalaUDF closure per row.
     //
     // Polygon inputs carry one extra hazard at fleet scale: a single
@@ -308,16 +308,16 @@ object Indexer {
           .withColumn("h3_task",
             // threshold baked as a literal at plan time: executor tasks
             // never read the (scope-overridable) global
-            explode(expr(s"h3_polyfill_tasks_native(${Cols.GeomWkt}, $res, " +
+            explode(expr(s"h3_polyfill_tasks(${Cols.GeomWkt}, $res, " +
               s"${PolySplit.splitThreshold})")))
           .repartition(spark.sparkContext.defaultParallelism,
             col(in.uniqueId), col("h3_task"))
           .withColumn(Cols.H3Index,
-            explode(expr(s"h3_cells_under_native(${Cols.GeomWkt}, h3_task, $res)")))
+            explode(expr(s"h3_cells_under(${Cols.GeomWkt}, h3_task, $res)")))
           .drop("h3_task")
       } else {
         withTotal.withColumn(Cols.H3Index,
-          explode(expr(s"h3_index_shape_native(${Cols.GeomWkt}, $res)")))
+          explode(expr(s"h3_index_shape(${Cols.GeomWkt}, $res)")))
       }
 
     // Hexagon boundary + area come from a bounded per-executor memo keyed by
@@ -334,10 +334,10 @@ object Indexer {
         exploded.withColumn(Cols.Ratio, lit(1.0))
       case Method.PctLength =>
         exploded.withColumn(Cols.Ratio,
-          expr(s"st_ratio_length_cell_native(${Cols.GeomWkt}, ${Cols.H3Index})"))
+          expr(s"st_ratio_length_cell(${Cols.GeomWkt}, ${Cols.H3Index})"))
       case Method.PctArea =>
         exploded.withColumn(Cols.Ratio,
-          expr(s"st_ratio_area_cell_native(${Cols.GeomWkt}, ${Cols.H3Index})"))
+          expr(s"st_ratio_area_cell(${Cols.GeomWkt}, ${Cols.H3Index})"))
       case other =>
         throw ValidationError(s"method $other has no ratio implementation") // unreachable
     }
@@ -351,7 +351,7 @@ object Indexer {
     // epilogue (h3_indexer.py:31-81); parent stays LONG for the repartition
     // (hashing an int64 beats hashing a 15-char string)
     val out = withRatio
-      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached_native(${Cols.H3Index})"))
+      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached(${Cols.H3Index})"))
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
       .withColumn(Cols.H3Resolution, lit(res))
     val parted = if (forWrite) out.repartition(col(Cols.H3R3Parent)) else out
@@ -475,7 +475,7 @@ object Resolver {
     val withEpilogue = folded
       .withColumn(Cols.H3Resolution, lit(res))
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
-      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached_native(${Cols.H3Index})"))
+      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached(${Cols.H3Index})"))
     val parted =
       if (forWrite) withEpilogue.repartition(col(Cols.H3R3Parent))
       else withEpilogue

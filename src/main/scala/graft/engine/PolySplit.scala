@@ -6,19 +6,19 @@ import org.locationtech.jts.geom.{Geometry, GeometryCollection, Polygon}
 import graft.h3.{H3, LatLng}
 
 /** Split polyfill planning: a country-sized polygon polyfilled by the
-  * single-row generator (`h3_index_shape_native` → explode) is ONE task —
+  * single-row generator (`h3_index_shape` → explode) is ONE task —
   * the classic skew scale-killer once real-world geometries mix with small
   * ones. When any input polygon's ESTIMATED cell count exceeds
   * [[splitThreshold]], the Indexer switches the polygon stage to a
   * two-phase plan:
   *
-  *   1. `h3_polyfill_tasks_native(geom, res)` explodes each polygon into
+  *   1. `h3_polyfill_tasks(geom, res)` explodes each polygon into
   *      its coarse ancestor cover at res − [[CoarseDepth]]
   *      (H3.polygonCoarseCover — a SUPERSET of every output cell's
   *      ancestor), or the single sentinel task 0 for small polygons;
   *   2. a hash repartition on (feature, task) spreads the units across
   *      executors;
-  *   3. `h3_cells_under_native(geom, task, res)` enumerates each task's
+  *   3. `h3_cells_under(geom, task, res)` enumerates each task's
   *      ≤ 7^CoarseDepth descendants and keeps centroid-inside cells —
   *      sentinel tasks run the whole-polygon BFS unchanged.
   *
@@ -43,7 +43,7 @@ object PolySplit {
     * could leak into another suite's plan construction). The override is
     * a DynamicVariable read ONLY at plan time — [[shouldSplit]] on the
     * driver thread, and the Indexer bakes the effective value into the
-    * `h3_polyfill_tasks_native` expression as a literal, so executor
+    * `h3_polyfill_tasks` expression as a literal, so executor
     * tasks never consult the global.
     */
   private val thresholdOverride =
@@ -212,6 +212,8 @@ object PolySplit {
     */
   def shouldSplit(df: DataFrame, geomCol: String, res: Int): Boolean = {
     val maxEst = SessionMemo.getOrCompute(df, s"split:$geomCol:$res") {
+      // a null geometry estimates NULL, which max skips; an empty or
+      // all-null input has no maximum and never splits
       val row = df.agg(max(callUDF("h3_polyfill_est", col(geomCol), lit(res)))).head()
       if (row.isNullAt(0)) 0.0 else row.getDouble(0)
     }

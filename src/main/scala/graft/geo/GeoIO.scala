@@ -1,7 +1,7 @@
 package graft.geo
 
 import org.locationtech.jts.geom._
-import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
+import org.locationtech.jts.io.{OrdinateFormat, WKBReader, WKBWriter, WKTReader, WKTWriter}
 import org.locationtech.jts.geom.util.GeometryFixer
 import org.locationtech.jts.operation.valid.IsValidOp
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -27,13 +27,17 @@ object GeoIO {
   private val wktReader = ThreadLocal.withInitial[WKTReader](() => new WKTReader(gf))
   private val wktWriter = ThreadLocal.withInitial[WKTWriter](() => {
     val w = new WKTWriter()
-    // Full-precision ordinates: the default formatter (16 significant
-    // digits, via the factory's FLOATING model) perturbs a coordinate by
-    // up to 1 ulp on every WKT round-trip. A FIXED(1e17) model only
-    // selects the formatter width here (the writer never snaps
-    // coordinates), and ≥18 fraction digits uniquely identifies any
-    // double in lon/lat range — WKT-at-rest becomes lossless.
-    w.setPrecisionModel(new PrecisionModel(1e17))
+    // Lossless ordinates. The writer never snaps coordinates; its precision
+    // model only sets how many fraction digits the formatter may print.
+    // The default (16 significant digits) and any fixed width (FIXED(1e17)
+    // gives 18 fraction digits, under 17 significant digits once |x| < 0.1)
+    // drop the last bits of some doubles. With the formatter's maximum,
+    // every ordinate prints as the shortest decimal that parses back to the
+    // same double, in plain notation: `POINT (-122.42 0.005)` stays as is,
+    // and WKT at rest round-trips bit-exact.
+    w.setPrecisionModel(new PrecisionModel {
+      override def getMaximumSignificantDigits: Int = OrdinateFormat.MAX_FRACTION_DIGITS
+    })
     w
   })
   private val wkbReader = ThreadLocal.withInitial[WKBReader](() => new WKBReader(gf))

@@ -135,7 +135,7 @@ object H3Geo {
   private[graft] def memoClear(): Unit = { infoMemo.clear(); areaMemo.clear() }
 
   /** Boundary WKT + geodesic area in one boundary computation (the string
-    * surface of the memo, kept for the registered `h3_cell_info` UDF).
+    * surface of the memo, kept for the registered `h3_cell_info` function).
     */
   def cellInfo(cell: String): (String, Double) = {
     val b = H3.cellToBoundary(H3Index.fromHexString(cell))

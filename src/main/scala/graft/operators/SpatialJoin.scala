@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.engine.{GraftFunctions, SessionMemo}
+import graft.engine.GraftFunctions
 import graft.geo.{GeoIO, Memo}
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
@@ -61,9 +61,6 @@ object SpatialJoin {
     out.toArray
   }
 
-  def containsPoint(polyWkt: String, lat: Double, lng: Double): Boolean =
-    containsPointU(UTF8String.fromString(polyWkt), lat, lng)
-
   /** Candidates arrive cell-clustered, so the same polygon repeats: a
     * per-thread LRU keyed by the row's WKT bytes holds the PREPARED geometry
     * (JTS PreparedPolygon.contains is ~4× a plain contains on repeats). A
@@ -72,7 +69,6 @@ object SpatialJoin {
   private val preparedCache = new Memo.PerThread[UTF8String, PreparedGeometry](512)
 
   def containsPointU(wkt: UTF8String, lat: Double, lng: Double): Boolean = {
-    if (wkt == null) return false
     var p = preparedCache.get(wkt)
     if (p == null) {
       val owned = wkt.copy() // detach from the reused row buffer
@@ -82,22 +78,13 @@ object SpatialJoin {
     p.contains(GeoIO.point(lng, lat))
   }
 
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "spatialjoin") {
-    spark.udf.register("st_cover_cells", (wkt: String, res: Int) => coverCells(wkt, res))
-    spark.udf.register("st_contains_point",
-      (wkt: String, lat: java.lang.Double, lng: java.lang.Double) =>
-        if (wkt == null || lat == null || lng == null) false
-        else containsPoint(wkt, lat, lng))
-  }
-
   /** points(latCol, lngCol) ⨝ polygons(wktCol) by containment. Both inputs
     * keep all their columns; the cell key is dropped from the output.
     */
   def pointsInPolygons(points: DataFrame, lat: Column, lng: Column,
                        polygons: DataFrame, wkt: Column, res: Int): DataFrame = {
     val spark = points.sparkSession
-    register(spark)
-    graft.engine.Expressions.register(spark)
+    GraftFunctions.register(spark)
     // the cover computation is ms-per-polygon CPU work: a small input (one
     // parquet file) scans as one partition and would cover every polygon
     // serially in a single task — fan out first (no-op when the scan
@@ -105,7 +92,7 @@ object SpatialJoin {
     def fan(df: DataFrame) = graft.engine.Fanout.ensure(spark, df)
     // explode(array_compact(array(...))) instead of a bare withColumn: the
     // inner join implies isnotnull(_cell), and PushDownPredicates would
-    // substitute the whole h3_latlng_cell_native chain into a filter BELOW
+    // substitute the whole h3_latlng_cell chain into a filter BELOW
     // the fan-out exchange — recomputing it serially inside the single scan
     // task (measured: a 1-task 1.3 s stage on geo_spatial_join at sf0.1). A
     // Generate can't be pushed through an Exchange, so the cell is computed
@@ -117,13 +104,15 @@ object SpatialJoin {
     // (measured: containment-stage CPU drops ~3× at sf0.1).
     def ptsWithCell(df: DataFrame) = df.withColumn("_cell",
       explode(expr(
-        s"array_compact(array(h3_unhex(h3_latlng_cell_native(${lat.toString}, ${lng.toString}, $res))))")))
+        s"array_compact(array(h3_unhex(h3_latlng_cell(${lat.toString}, ${lng.toString}, $res))))")))
     val polys = fan(polygons).withColumn("_cell",
       explode(callUDF("st_cover_cells", wkt, lit(res))))
-    // native codegen filter: the row-backed UTF8String keys the prepared
-    // LRU directly, no String materialization per candidate probe
+    // codegen filter: the row-backed UTF8String keys the prepared LRU
+    // directly, no String materialization per candidate probe. It is NULL
+    // on a NULL wkt or coordinate, so Spark infers isnotnull filters on
+    // those inputs at the scans
     val containsF = expr(
-      s"st_contains_point_native(${wkt.toString}, ${lat.toString}, ${lng.toString})")
+      s"st_contains_point(${wkt.toString}, ${lat.toString}, ${lng.toString})")
     // Build-side choice by MEASURED size, not the planner's file-size
     // estimate: the cover explode inflates the polygon side ~30-60× (one
     // row per cover cell, each dragging the full WKT string), which the

@@ -521,7 +521,7 @@ object DedupQueries {
   private[graft] def semanticScaffold(s: SparkSession, d: String,
       forceTwoLevel: Boolean = false)
       : (SemQuantizer, DataFrame, DataFrame) = {
-    graft.engine.Expressions.register(s)
+    graft.engine.GraftFunctions.register(s)
     val e = embWithDups(s, d)
     val n = graft.operators.AnnLsh.memoizedCount(e)
     val k = graft.operators.IvfIndex.kFor(n)
@@ -1028,7 +1028,7 @@ object DedupQueries {
     QueryDef("embedding_neardup_pairs",
       (s, d) => {
         AnnLsh.register(s)
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val e = embWithDups(s, d)
         // the nested-loop pair evaluation is CPU-bound: spread the streamed
         // side across cores (the broadcast side is tiny)
@@ -1158,7 +1158,7 @@ object DedupQueries {
           .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
           .distinct()
           .repartition(s.sparkContext.defaultParallelism)
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         cand
           .join(all.select(col("vec_id").as("a"), col("ve").as("va")), "a")
           .join(all.select(col("vec_id").as("b"), col("ve").as("vb")), "b")
@@ -1210,7 +1210,7 @@ object DedupQueries {
     // perturbed copies (cos ≈ 0.93 vs their originals) give the flags.
     QueryDef("embedding_decontaminate",
       (s, d) => {
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val all = embWithDups(s, d)
         val eval_ = all.where(col("vec_id") < 100000 && pmod(col("vec_id"), lit(97)) === 0)
           .select(col("vec_id").as("eval_id"), col("ve").as("ev"))

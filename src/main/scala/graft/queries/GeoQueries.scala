@@ -339,28 +339,29 @@ object GeoQueries {
     QueryDef("h3_sql_surface",
       (s, d) => {
         GraftFunctions.register(s)
-        graft.engine.Expressions.register(s)
         pointsDf(s, d).limit(1000)
           .withColumn("cell", expr(s"h3_latlng_cell(latitude, longitude, $Res)"))
           .selectExpr(
             "point_id", "cell",
-            // codegen-native expressions must agree with the UDF surface
-            s"h3_latlng_cell_native(latitude, longitude, $Res) AS cell_native",
+            // the *_native column names predate the single function table
+            // and stay so the dump does not move; they now read the cell
+            // back through the LONG-cell path
+            "h3_hex(h3_unhex(cell)) AS cell_native",
             "h3_parent(cell, 3) AS parent",
-            "h3_parent_native(cell, 3) AS parent_native",
-            "h3_resolution_native(cell) AS res_native",
+            "h3_hex(h3_parent_long(h3_unhex(cell), 3)) AS parent_native",
+            "h3_resolution(cell) AS res_native",
             "h3_cell_area_km2(cell) AS area_km2",
             "st_length(h3_to_wkt(cell)) AS boundary_len_deg",
             "st_isvalid(h3_to_wkt(cell)) AS boundary_valid")
           .orderBy("point_id")
       }),
 
-    // ORACLED twin for h3_sql_surface — the last rows-only query without a
-    // driver-visible green row. The same registered SQL functions (UDF and
-    // codegen-native) run over a FIXED 1000-point lattice derived from a
-    // range, not from any table, so the pinned golden values hold at every
-    // SF: n rows, every native-vs-UDF agreement folded to booleans, all
-    // boundaries valid with positive length, the DECIMAL-summed cell area,
+    // ORACLED twin for h3_sql_surface — the last rows-only query without an
+    // oracle-checked twin. The same registered SQL functions run over
+    // a FIXED 1000-point lattice derived from a range, not from any table,
+    // so the pinned golden values hold at every SF: n rows, the hex-vs-LONG
+    // cell and parent agreements folded to booleans, all boundaries valid
+    // with positive length, the DECIMAL-summed cell area,
     // and an md5 over the sorted cell ids (pinning the exact cell
     // assignment of all 1000 coordinates — a golden-vector oracle). The
     // constants were computed once by this engine and cross-checked
@@ -369,20 +370,19 @@ object GeoQueries {
     QueryDef("h3_sql_surface_checked",
       (s, d) => {
         GraftFunctions.register(s)
-        graft.engine.Expressions.register(s)
         s.range(1, 1001).toDF("pid")
           .withColumn("latitude", expr("(pmod(pid * 31 + 17, 14000)) / 100.0 - 70 + 0.005"))
           .withColumn("longitude", expr("(pmod(pid * 13 + 7, 35000)) / 100.0 - 175 + 0.005"))
           .withColumn("cell", expr(s"h3_latlng_cell(latitude, longitude, $Res)"))
-          .withColumn("cell_native", expr(s"h3_latlng_cell_native(latitude, longitude, $Res)"))
+          .withColumn("cell_native", expr("h3_hex(h3_unhex(cell))"))
           .withColumn("wkt", expr("h3_to_wkt(cell)"))
           .agg(
             count(lit(1)).cast("long").as("n_rows"),
             (sum(when(col("cell") === col("cell_native"), 0L).otherwise(1L)) === 0L)
               .as("cell_native_agree"),
-            (sum(when(expr("h3_parent(cell, 3) = h3_parent_native(cell, 3)"), 0L)
+            (sum(when(expr("h3_parent(cell, 3) = h3_hex(h3_parent_long(h3_unhex(cell), 3))"), 0L)
               .otherwise(1L)) === 0L).as("parent_native_agree"),
-            (sum(when(expr(s"h3_resolution_native(cell) = $Res"), 0L).otherwise(1L)) === 0L)
+            (sum(when(expr(s"h3_resolution(cell) = $Res"), 0L).otherwise(1L)) === 0L)
               .as("all_res6"),
             (sum(when(expr("st_isvalid(wkt)"), 0L).otherwise(1L)) === 0L)
               .as("all_boundary_valid"),
@@ -538,16 +538,16 @@ object GeoQueries {
     // H3CoreSpec), not the pipeline's shape.
     QueryDef("h3_index_points_checked",
       (s, d) => {
-        graft.engine.Expressions.register(s)
-        // h3_resolution_native reads hex text (a LONG would be cast to its
+        GraftFunctions.register(s)
+        // h3_resolution reads hex text (a LONG would be cast to its
         // decimal digits and misparsed), so the cells are hexed first
         val idx = Cols.hexCells(indexed(s, pointsInput, pointsDf(s, d)))
         idx.agg(
           (sum(when(col("ratio") === 1.0, 0L).otherwise(1L)) === 0L).as("all_ratio_one"),
           (count(lit(1)) === countDistinct(col("point_id"))).as("one_row_per_point"),
-          (sum(when(expr("h3_resolution_native(h3_index) = 6"), 0L).otherwise(1L)) === 0L)
+          (sum(when(expr("h3_resolution(h3_index) = 6"), 0L).otherwise(1L)) === 0L)
             .as("all_res6"),
-          (sum(when(expr("h3_resolution_native(h3_r3_parent) = 3"), 0L).otherwise(1L)) === 0L)
+          (sum(when(expr("h3_resolution(h3_r3_parent) = 3"), 0L).otherwise(1L)) === 0L)
             .as("all_parent_res3"),
           (sum(when(col("h3_area_km2") > 0.0, 0L).otherwise(1L)) === 0L).as("all_area_pos"),
           count(lit(1)).cast("long").as("n_points"),

@@ -25,7 +25,7 @@ object SimilarityQ {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("ve").as("qe"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         // vec_cosine_native replicates the HOF dot/(sqrt·sqrt) arithmetic
         // left-to-right, so scores are bit-identical to the DuckDB oracle —
         // but the kernel runs inside whole-stage codegen (one static call
@@ -141,7 +141,7 @@ object SimilarityQ {
           .select(col("vec_id").as("nid"), col("cand").as("cluster"), col("ve").as("nv"))
         val queries = assigned.where(col("vec_id") < 5 && col("ark") <= 2)
           .select(col("vec_id").as("qid"), col("cand").as("cluster"), col("ve").as("qv"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid"))
         queries.join(corpus, "cluster")
           .withColumn("score", round(expr("vec_cosine_native(qv, nv)"), 6))
@@ -324,7 +324,7 @@ object SimilarityQ {
             Window.partitionBy("qid").orderBy(col("adist"), col("nid"))))
           .where(col("arn") <= 20)
           .select("qid", "nid")
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("ve").as("qv"))
         val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid"))
@@ -468,7 +468,7 @@ object SimilarityQ {
             Window.partitionBy("qid").orderBy(col("adist"), col("nid"))))
           .where(col("arn") <= 20)
           .select("qid", "nid")
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("ve").as("qv"))
         val w = Window.partitionBy("qid").orderBy(col("score").desc, col("nid"))
@@ -884,7 +884,7 @@ object SimilarityQ {
             col("ark"), col("ve").as("qv"))
           .withColumn("np", explode(array(lit(1L), lit(2L), lit(4L))))
           .where(col("ark") <= col("np"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val w = Window.partitionBy("np", "qid").orderBy(col("score").desc, col("nid"))
         val top = sweep.join(corpus, "cluster")
           .withColumn("score", round(expr("vec_cosine_native(qv, nv)"), 6))
@@ -957,7 +957,7 @@ object SimilarityQ {
         val pre = full.withColumn("vp", expr("slice(vf, 1, 16)"))
         val q = pre.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("vf").as("qf"), col("vp").as("qp"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val wPre = Window.partitionBy("qid").orderBy(col("ps").desc, col("vec_id"))
         val short50 = pre.crossJoin(broadcast(q))
           .withColumn("ps", round(expr("vec_cosine_native(vp, qp)"), 6))
@@ -1021,7 +1021,7 @@ object SimilarityQ {
             col("embedding").cast("array<double>").as("ve"))
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("ve").as("qe"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val scored = e.crossJoin(broadcast(q))
           .where(col("label") =!= col("qlabel"))
           .withColumn("score", round(expr("vec_cosine_native(ve, qe)"), 6))
@@ -1055,7 +1055,7 @@ object SimilarityQ {
             expr("slice(CAST(embedding AS ARRAY<DOUBLE>), 1, 16)").as("ve"))
         val q = e.where(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("ve").as("qe"))
-        graft.engine.Expressions.register(s)
+        graft.engine.GraftFunctions.register(s)
         val scored = e.crossJoin(broadcast(q))
           .withColumn("score", round(expr("vec_cosine_native(ve, qe)"), 6))
         val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))

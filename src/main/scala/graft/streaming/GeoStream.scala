@@ -25,10 +25,10 @@ object GeoStream {
     */
   def pointsCellRollup(spark: SparkSession, points: DataFrame, res: Int,
                        latCol: String, lngCol: String, valueCol: String): DataFrame = {
-    graft.engine.Expressions.register(spark)
+    graft.engine.GraftFunctions.register(spark)
     val indexed = points
       .withColumn("h3_index",
-        expr(s"h3_unhex(h3_latlng_cell_native($latCol, $lngCol, $res))"))
+        expr(s"h3_unhex(h3_latlng_cell($latCol, $lngCol, $res))"))
     val agg = indexed.groupBy("h3_index")
       .agg(count(lit(1)).as("n_points"),
         sum(col(valueCol).cast("decimal(18,2)")).cast("double").as("sum_value"))

@@ -18,7 +18,7 @@ object SemRecall {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val force = args.lift(1).contains("twolevel")
     val spark = graft.Sessions.local()
-    graft.engine.Expressions.register(spark)
+    graft.engine.GraftFunctions.register(spark)
 
     val (quant, _, pairsPlan) =
       graft.queries.DedupQueries.semanticScaffold(spark, dir, force)

@@ -21,34 +21,38 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  test("native expressions agree with the UDF surface and stay in codegen") {
+  test("cell functions keep their golden values and stay in codegen") {
     val df = spark.range(500)
       .selectExpr("cast(id % 140 - 70 + 0.17 as double) AS lat",
         "cast(id % 350 - 175 + 0.29 as double) AS lng")
-      .selectExpr(
-        "h3_latlng_cell_native(lat, lng, 9) AS native",
-        "h3_latlng_cell(lat, lng, 9) AS viaUdf")
-    df.collect().foreach(r => assert(r.getString(0) == r.getString(1)))
-    // known golden through the native path
+      .selectExpr("h3_latlng_cell(lat, lng, 9) AS cell")
+    // all 500 cells, pinned from the Scala-UDF surface (and its codegen
+    // twin, which agreed with it cell for cell)
+    val digest = df.selectExpr(
+      "md5(concat_ws(',', sort_array(collect_list(cell))))", "count(DISTINCT cell)").head()
+    assert(digest.getString(0) == "2294a8269e9ed484ecacb40ed47128e5")
+    assert(digest.getLong(1) == 500L)
+    // known golden
     val sf = spark.sql(
-      "SELECT h3_latlng_cell_native(37.7752702151959D, -122.418307270836D, 9) c")
+      "SELECT h3_latlng_cell(37.7752702151959D, -122.418307270836D, 9) c")
       .head().getString(0)
     assert(sf == "8928308280fffff")
-    // parent + resolution natives
+    // parent + resolution
     val row = spark.sql(
-      """SELECT h3_parent_native('8928308280fffff', 3) p,
-        |h3_resolution_native('8928308280fffff') r""".stripMargin).head()
+      """SELECT h3_parent('8928308280fffff', 3) p,
+        |h3_resolution('8928308280fffff') r""".stripMargin).head()
     assert(row.getString(0) == H3GoldenHelper.parent)
     assert(row.getInt(1) == 9)
     // the projection must be inside WholeStageCodegen (the "*(n)" marker);
     // a codegen fallback would print a bare Project
     val plan = df.queryExecution.executedPlan.toString()
-    assert(plan.contains("*(1) Project [h3_latlng_cell_native"), plan)
+    assert(plan.contains("*(1) Project [static_invoke(graft.engine.GraftFunctions.latLngCell("),
+      plan)
   }
 
   test("nulls propagate") {
     val r = spark.sql(
-      "SELECT h3_parent_native(CAST(NULL AS STRING), 3) p").head()
+      "SELECT h3_parent(CAST(NULL AS STRING), 3) p").head()
     assert(r.isNullAt(0))
   }
 
@@ -60,16 +64,16 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getString(0) == "8928308280fffff")
     assert(row.getString(1) == H3GoldenHelper.parent)
 
-    // index_shape_native over a polygon: explode to cells, PCT_AREA ratios
+    // index_shape over a polygon: explode to cells, PCT_AREA ratios
     // sum to area(g ∩ ∪cells)/area(g) — ≤ 1 exactly, and close to 1 since
     // centroid polyfill only misses boundary slivers whose cell centroid
     // falls outside
     val wkt = "POLYGON ((-122.46 37.73, -122.38 37.73, -122.38 37.81, " +
       "-122.46 37.81, -122.46 37.73))"
     val cells = spark.sql(
-      s"""SELECT cell, st_ratio_area_cell_native('$wkt', cell) ratio,
-         |h3_cell_area_cached_native(cell) area
-         |FROM (SELECT explode(h3_index_shape_native('$wkt', 8)) cell)""".stripMargin)
+      s"""SELECT cell, st_ratio_area_cell('$wkt', cell) ratio,
+         |h3_cell_area_cached(cell) area
+         |FROM (SELECT explode(h3_index_shape('$wkt', 8)) cell)""".stripMargin)
       .collect()
     assert(cells.length > 5)
     val ratioSum = cells.map(_.getDouble(1)).sum
@@ -78,15 +82,13 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     cells.foreach(r => assert(r.getDouble(2) > 0.3 && r.getDouble(2) < 1.5,
       s"res-8 cell area ${r.getDouble(2)} km2 out of range"))
 
-    // the long surface agrees with the string UDF surface
-    val both = spark.sql(
-      s"""SELECT h3_hex(l.cell) hx, s.cell sc FROM
-         |(SELECT explode(h3_index_shape_native('$wkt', 8)) cell) l
-         |FULL OUTER JOIN
-         |(SELECT explode(h3_index_shape('$wkt', 8)) cell) s
-         |ON h3_hex(l.cell) = s.cell""".stripMargin).collect()
-    both.foreach(r => assert(!r.isNullAt(0) && !r.isNullAt(1),
-      "long and string index_shape surfaces disagree"))
+    // the cover set, pinned from the hex-string Scala UDF that
+    // h3_index_shape was before it returned LONG cells
+    val cover = spark.sql(
+      s"""SELECT md5(concat_ws(',', sort_array(transform(h3_index_shape('$wkt', 8),
+         |  c -> h3_hex(c))))), size(h3_index_shape('$wkt', 8))""".stripMargin).head()
+    assert(cover.getString(0) == "21ba27c583c5702efe1920e586af8ad6")
+    assert(cover.getInt(1) == 81)
   }
 
   test("minhash/shingle natives are bit-identical to the UDF surface and stay in codegen") {
@@ -142,7 +144,7 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.range(100)
       .selectExpr("cast(id % 140 - 70 + 0.17 as double) AS lat",
         "cast(id % 350 - 175 + 0.29 as double) AS lng")
-      .selectExpr("h3_unhex(h3_latlng_cell_native(lat, lng, 9)) AS cell")
+      .selectExpr("h3_unhex(h3_latlng_cell(lat, lng, 9)) AS cell")
       .localCheckpoint() // pin the plan so each selectExpr below starts clean
 
     val roundTrip = df.selectExpr("h3_unhex(h3_hex(cell)) AS c")

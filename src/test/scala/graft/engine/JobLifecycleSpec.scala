@@ -120,6 +120,64 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a zero-reject rerun must clear the input's stale quarantine partition")
   }
 
+  /** A polygon (PCT_AREA) job over `rows` of (gid, wkt, v), with its
+    * rejects quarantined; runs and writes it like `graft.cli.Main run-all`.
+    * Returns the state, the written resolved rows and the rejects.
+    */
+  private def runPolygonJob(tag: String, rows: Seq[org.apache.spark.sql.Row]) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graftdeg_$tag")
+    df("gid BIGINT, wkt STRING, v DOUBLE", rows)
+      .write.mode("overwrite").parquet(s"$dir/polys.parquet")
+    val job = Job("j", "1.0.0", 6, s"$dir/out", Seq(VectorInput(
+      "polys", Some(s"$dir/polys.parquet"), None, None, None, "gid",
+      GeometryType.Polygon, Some("wkt"), None, None, Method.PctArea, Seq("v"))),
+      quarantinePath = Some(s"$dir/rejects"))
+    val (indexed, resolved, state) = GraftJob.run(spark, job)
+    indexed.foreach { case (n, f) => GraftJob.write(f, s"$dir/out/indexed/$n") }
+    GraftJob.write(resolved, s"$dir/out/resolved")
+    indexed.values.foreach(_.unpersist(true))
+    val rejects = spark.read.schema("gid BIGINT, reject_reason STRING")
+      .parquet(s"$dir/rejects/input_name=polys")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // an explicit schema: a write of zero rows leaves no file to infer from
+    val resolvedRows = spark.read.schema("h3_index STRING")
+      .parquet(s"$dir/out/resolved").count()
+    (state, resolvedRows, rejects)
+  }
+
+  test("degenerate input: an empty polygon input completes with 0 resolved rows") {
+    val (state, resolvedRows, rejects) = runPolygonJob("empty", Seq.empty)
+    assert(state.status == JobStatus.CompletedResolver)
+    assert(resolvedRows == 0)
+    assert(rejects.isEmpty)
+  }
+
+  test("degenerate input: an all-null geometry column completes, never splits") {
+    val rows = Seq(R(1L, null, 1.0), R(2L, null, 2.0))
+    // the split probe's estimate is NULL for every row: no maximum, no split
+    val probe = df("gid BIGINT, wkt STRING, v DOUBLE", rows).select("wkt")
+    assert(!PolySplit.withThreshold(0.0)(PolySplit.shouldSplit(probe, "wkt", 6)))
+    val (state, resolvedRows, rejects) = runPolygonJob("allnull", rows)
+    assert(state.status == JobStatus.CompletedResolver)
+    assert(resolvedRows == 0)
+    assert(rejects == Map(1L -> "null_geometry", 2L -> "null_geometry"))
+  }
+
+  test("degenerate input: a malformed WKT row is quarantined, the rest resolves") {
+    val (state, resolvedRows, rejects) = runPolygonJob("malformed", Seq(
+      R(1L, "POLYGON ((0 0, 1 1))", 1.0), // unclosed 2-point ring
+      R(2L, "POLYGON ((-122.46 37.73, -122.38 37.73, -122.38 37.81, " +
+        "-122.46 37.81, -122.46 37.73))", 2.0)))
+    assert(state.status == JobStatus.CompletedResolver)
+    assert(resolvedRows > 0)
+    assert(rejects == Map(1L -> "irreparable_geometry"))
+    val (state1, resolvedRows1, rejects1) =
+      runPolygonJob("malformed_only", Seq(R(1L, "POLYGON ((0 0, 1 1))", 1.0)))
+    assert(state1.status == JobStatus.CompletedResolver)
+    assert(resolvedRows1 == 0)
+    assert(rejects1 == Map(1L -> "irreparable_geometry"))
+  }
+
   test("quarantine_path parses from yaml and normalizes s3 scheme") {
     val y =
       """name: j

@@ -172,8 +172,8 @@ class PolySplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     val p = graft.queries.GeoQueries.qs.find(_.name == "h3_index_polygons").get
       .fn(spark, dir).queryExecution.executedPlan.toString()
-    assert(!p.contains("h3_cells_under_native"), p.take(3000))
-    assert(p.contains("h3_index_shape_native"), p.take(3000))
+    assert(!p.contains("cellsUnderArray"), p.take(3000))
+    assert(p.contains("indexShapeArray"), p.take(3000))
   }
 
   test("end-to-end: forced split Indexer plan matches the default plan on sf0.001") {

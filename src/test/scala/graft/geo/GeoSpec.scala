@@ -14,9 +14,9 @@ class GeoSpec extends AnyFunSuite {
     assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(line)).equalsExact(line, 1e-12))
     val mp = GeoIO.fromWkt("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((2 2, 3 2, 3 3, 2 2)))")
     assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(mp)).equalsExact(mp, 1e-12))
-    // WKT -> geometry is bit-exact (the writer's FIXED(1e17) model): a
-    // coordinate 1 ulp off a short decimal, and one needing 17 significant
-    // digits, which the default 16-digit formatter rounds away
+    // WKT -> geometry is bit-exact: a coordinate 1 ulp off a short
+    // decimal, and one needing 17 significant digits, which the default
+    // 16-digit formatter rounds away
     for ((x, y) <- Seq((-174.375, -69.17500000000001),
                        (-146.27285751820568, 0.30099661052837234))) {
       val pt = GeoIO.point(x, y)
@@ -25,6 +25,26 @@ class GeoSpec extends AnyFunSuite {
       assert(GeoIO.fromGeoJson(GeoIO.toGeoJson(pt)).equalsExact(pt, 1e-12))
       assert(GeoIO.fromWkbHex(GeoIO.toWkbHex(pt)).equalsExact(pt))
     }
+  }
+
+  test("WKT at rest round-trips 100k random points bit-exact, small magnitudes too") {
+    val rnd = new scala.util.Random(20261018L)
+    // lon/lat range, and ordinates near the prime meridian and the equator
+    // (|x| < 0.1 and < 1e-3), where a fixed fraction width runs out of
+    // significant digits
+    val scales = Array(180.0, 0.1, 1e-3)
+    val lost = (0 until 100000).flatMap { i =>
+      val x = (rnd.nextDouble() * 2 - 1) * scales(i % 3)
+      val y = (rnd.nextDouble() * 2 - 1) * scales((i / 3) % 3) / 2
+      val wkt = GeoIO.toWkt(GeoIO.point(x, y))
+      val c = GeoIO.fromWkt(wkt).getCoordinate
+      if (c.x == x && c.y == y) None else Some(s"($x, $y) -> $wkt")
+    }
+    assert(lost.isEmpty, s"${lost.size} lost, e.g. ${lost.take(3).mkString("; ")}")
+    // ordinary values print as before, in plain notation
+    assert(GeoIO.toWkt(GeoIO.point(-122.42, 0.005)) == "POINT (-122.42 0.005)")
+    assert(GeoIO.toWkt(GeoIO.point(-6.520574964241632E-4, 1e-7)) ==
+      "POINT (-0.0006520574964241632 0.0000001)")
   }
 
   test("encoding sniff follows the reference rules") {

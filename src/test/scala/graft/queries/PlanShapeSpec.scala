@@ -231,6 +231,19 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.SparkEntry.registry.filterNot(q => excluded(q.name))
       .map(q => q.name -> q.fn(spark, sf).queryExecution.executedPlan)
 
+  test("the headline geo queries plan no ScalaUDF: every call is codegen") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    for (q <- Seq("h3_index_points", "h3_index_lines", "h3_index_polygons",
+                  "h3_resolve_multi", "geo_spatial_join")) {
+      val plan = graft.SparkEntry.registry.find(_.name == q).get
+        .fn(spark, sf).queryExecution.optimizedPlan
+      val udfs = plan.collectWithSubqueries { case n =>
+        n.expressions.flatMap(_.collect { case u: ScalaUDF => u.udfName.getOrElse("?") })
+      }.flatten
+      assert(udfs.isEmpty, s"$q plans ScalaUDFs ${udfs.distinct.mkString(", ")}")
+    }
+  }
+
   test("no registered batch query plans a CartesianProduct") {
     val offenders = sweptPlans.collect {
       case (n, p) if p.toString().contains("CartesianProduct") => n

@@ -41,7 +41,7 @@ class SemanticDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // ground truth: FULL all-pairs sweep (spec-only cross join), flagged by
     // whether the two vectors land in the same cluster
-    graft.engine.Expressions.register(spark)
+    graft.engine.GraftFunctions.register(spark)
     val x = assigned.select(col("vec_id").as("a"), col("cluster").as("ca"),
       col("ve").as("va"))
     val y = assigned.select(col("vec_id").as("b"), col("cluster").as("cb"),
