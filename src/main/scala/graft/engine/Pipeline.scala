@@ -411,9 +411,10 @@ object Resolver {
         s"h3_index must be LONG or hex STRING, got ${other.simpleString}")
     }
 
-  /** Fold per-input resolved tables on h3_index (J4, full outer), then
-    * re-derive the epilogue columns (h3_resolver.py:71-96: parent/area/res
-    * are recomputed after the aggregation, in the same order).
+  /** Fold per-input resolved tables on h3_index (J4, full outer, computed
+    * as a union fold), then re-derive the epilogue columns
+    * (h3_resolver.py:71-96: parent/area/res are recomputed after the
+    * aggregation, in the same order).
     *
     * Accepts h3_index as LONG (the indexer's output) or hex STRING; every
     * STRING frame is unhexed on entry, so the group-by, fold and epilogue
@@ -430,33 +431,30 @@ object Resolver {
   def resolve(spark: SparkSession, perInput: Seq[DataFrame], res: Int,
               forWrite: Boolean = true): DataFrame = {
     val frames = perInput.map(longCells)
-    // Fold strategy. The per-input frames are post-aggregation (one row per
-    // cell) with pairwise-disjoint sum_ columns, so the N-way full-outer
-    // join is exactly a union + one per-cell aggregate: pad each frame with
-    // nulls for the other inputs' columns, union, groupBy(h3_index),
-    // max(col) — each column has at most ONE non-null value per cell, so
-    // max() is pure selection (no arithmetic; values pass through
-    // bit-identical, nulls stay null exactly like the outer join). The
-    // join fold planned 2(N−1) exchanges + sorts and N−1 SortMergeJoins —
-    // with AQE each a serially-materialized stage; the union fold is ONE
-    // exchange + hash aggregate at any N, and the per-input subtrees
-    // materialize concurrently as independent AQE stages. Falls back to
-    // the join fold if sum_ names collide across inputs (ambiguous there
-    // too) or any frame carries columns beyond (h3_index, its own sum_*) —
-    // the padded select would silently drop such columns where the join
-    // fold preserved them. Distinct cells per frame and non-null cells are
-    // ASSUMED (resolveInput guarantees both: its groupBy(h3_index) emits
-    // one row per non-null cell), not detected: a duplicate cell would be
-    // max-merged and null cells grouped where the outer join kept rows
-    // apart.
+    // Fold: the per-input frames are post-aggregation (one row per cell),
+    // so the N-way full-outer join on h3_index is exactly a union + one
+    // per-cell aggregate: keep each frame's h3_index and own sum_*, pad
+    // with nulls for the other inputs' columns, union, groupBy(h3_index),
+    // max(col). Each column has at most ONE non-null value per cell, so
+    // max() is pure selection (values pass through bit-identical, nulls
+    // stay null exactly like the outer join). ONE exchange + hash
+    // aggregate at any N, and the per-input subtrees materialize
+    // concurrently as independent AQE stages. Columns other than h3_index
+    // and sum_* are not carried (the output projection drops them anyway).
+    // Distinct cells per frame and non-null cells are ASSUMED
+    // (resolveInput guarantees both: its groupBy(h3_index) emits one row
+    // per non-null cell), not detected: a duplicate cell would be
+    // max-merged. A single frame passes through with no aggregate.
     val sumCols = frames.map(_.columns.filter(_.startsWith("sum_")).toSeq)
     val allSums = sumCols.flatten
-    val shapeOk = frames.zip(sumCols).forall { case (df, own) =>
-      df.columns.toSet == (own.toSet + Cols.H3Index)
-    }
+    val clashes = allSums.diff(allSums.distinct).distinct
+    if (clashes.nonEmpty) throw ValidationError(
+      s"resolver inputs share sum_ columns: ${clashes.mkString(", ")}")
+    if (frames.size > 1 && allSums.isEmpty) throw ValidationError(
+      "resolver inputs carry no sum_ columns")
     val folded =
-      if (frames.size > 1 && allSums.nonEmpty && shapeOk &&
-          allSums.distinct.size == allSums.size) {
+      if (frames.size == 1) frames.head
+      else {
         val sumType: Map[String, DataType] =
           frames.zip(sumCols).flatMap { case (df, own) =>
             own.map(c => c -> df.schema(c).dataType)
@@ -471,7 +469,7 @@ object Resolver {
           .groupBy(Cols.H3Index)
           .agg(max(col(allSums.head)).as(allSums.head),
             allSums.tail.map(c => max(col(c)).as(c)): _*)
-      } else frames.reduce(_.join(_, Seq(Cols.H3Index), "full_outer"))
+      }
     val withEpilogue = folded
       .withColumn(Cols.H3Resolution, lit(res))
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))

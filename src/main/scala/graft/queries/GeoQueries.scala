@@ -682,12 +682,7 @@ object GeoQueries {
           col("c_name").as("name"),
           col("c_acctbal").as("balance"),
           callUDF("st_point", lonD, latD).as("geom_wkt"))
-        // per-SESSION temp dir: keyed by data dir alone, two concurrent
-        // sessions over the same testdata would overwrite each other's
-        // files mid-read (round-5 judge finding)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_geojson_rt_" +
-          java.lang.Integer.toHexString(System.identityHashCode(s)) + "_" +
-          java.lang.Integer.toHexString(d.hashCode)
+        val dir = graft.streaming.Scratch.dir("graft_geojson_rt").toString
         graft.sources.GeoJson.write(src, "geom_wkt", dir)
         graft.sources.GeoJson.read(s, dir)
           .select(col("geo_id"), col("name"), col("balance"),

@@ -273,8 +273,7 @@ object LayoutOps {
           .withColumn("part_key", date_format(col("o_orderdate"), "yyyy-MM"))
           .withColumn("cents", expr("CAST(round(o_totalprice * 100.0D, 0) AS BIGINT)"))
           .select("o_orderkey", "part_key", "cents")
-        val fragDir = java.nio.file.Files.createTempDirectory("graft_frag")
-        fragDir.toFile.deleteOnExit()
+        val fragDir = graft.streaming.Scratch.dir("graft_frag")
         monthly.write.mode("overwrite").option("maxRecordsPerFile", 200)
           .partitionBy("part_key").parquet(fragDir.toString)
         val frag = s.read.parquet(fragDir.toString)
@@ -286,8 +285,7 @@ object LayoutOps {
             coalesce(sum("est_bytes").over(w) - col("est_bytes"), lit(0L)))
           .withColumn("total", sum("est_bytes").over(Window.partitionBy(lit(1))))
           .select(col("part_key"), expr("(cum_before * 8) div total").as("file_id"))
-        val outDir = java.nio.file.Files.createTempDirectory("graft_compacted")
-        outDir.toFile.deleteOnExit()
+        val outDir = graft.streaming.Scratch.dir("graft_compacted")
         frag.join(broadcast(plan), Seq("part_key"))
           .repartition(col("file_id"))
           .write.mode("overwrite").partitionBy("file_id").parquet(outDir.toString)

@@ -217,8 +217,7 @@ object PipelineOps {
             to_json(struct(col("doc_id"), col("source"), col("n_chars"))).as("j"))
           .select(when(expr("doc_id % 53 = 0"), expr("substring(j, 1, 10)"))
             .otherwise(col("j")).as("value"))
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_json_src")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_json_src")
         staged.write.mode("overwrite").text(dirOut.toString)
         s.read
           .schema("doc_id LONG, source STRING, n_chars LONG, _corrupt STRING")
@@ -451,8 +450,7 @@ object PipelineOps {
     QueryDef(
       "multimodal_binary_ingest",
       (s, d) => {
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_media")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_media")
         val outPath = dirOut.toString
         graft.operators.Multimodal.mediaTable(s, d)
           .where(expr("media_id % 7 = 0"))

@@ -325,7 +325,7 @@ object Relational {
         // name also keeps concurrent sessions out of each other's paths.
         val hex = java.lang.Integer.toHexString(d.hashCode) + "_" +
           java.lang.Integer.toHexString(System.identityHashCode(s))
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_bkt_$hex"
+        val base = graft.streaming.Scratch.root.resolve(s"graft_bkt_$hex")
         val (oT, cT) = (s"graft_bkt_orders_$hex", s"graft_bkt_customer_$hex")
         if (!s.catalog.tableExists(oT)) {
           T(s, d, "orders").write.mode("overwrite").format("parquet")
@@ -535,8 +535,7 @@ object Relational {
           when(expr("o_orderkey % 97 = 0"), lit("X"))
             .otherwise(expr("CAST(CAST(round(o_totalprice * 100.0D, 0) AS BIGINT) AS STRING)")),
           lit("|"), col("o_orderpriority")).as("value"))
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_csv_src")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_csv_src")
         staged.write.mode("overwrite").text(dirOut.toString)
         s.read
           .schema("o_orderkey LONG, o_custkey LONG, cents LONG, prio STRING, _corrupt STRING")
@@ -568,8 +567,7 @@ object Relational {
     QueryDef(
       "orc_partitioned_roundtrip",
       (s, d) => {
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_orc")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_orc")
         T(s, d, "orders")
           .withColumn("cents", expr("CAST(round(o_totalprice * 100.0D, 0) AS BIGINT)"))
           .select("o_orderkey", "cents", "o_orderpriority")
@@ -599,8 +597,7 @@ object Relational {
       (s, d) => {
         val o = T(s, d, "orders")
           .withColumn("cents", expr("CAST(round(o_totalprice * 100.0D, 0) AS BIGINT)"))
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_evo")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_evo")
         o.where(expr("o_orderkey % 2 = 1"))
           .select("o_orderkey", "o_orderpriority")
           .write.mode("overwrite").parquet(s"$dirOut/part=old")

@@ -142,8 +142,7 @@ object TpchOps {
     QueryDef(
       "j13_dpp_partitioned_join",
       (s, d) => {
-        val dirOut = java.nio.file.Files.createTempDirectory("graft_dpp")
-        dirOut.toFile.deleteOnExit()
+        val dirOut = graft.streaming.Scratch.dir("graft_dpp")
         T(s, d, "orders")
           .withColumn("cents", expr("CAST(round(o_totalprice * 100.0D, 0) AS BIGINT)"))
           .select("o_orderkey", "cents", "o_orderpriority")

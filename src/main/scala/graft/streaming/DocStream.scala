@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming document-pipeline gates — the training-data curation passes a
   * continuously-arriving corpus needs, expressed as stateful Structured
@@ -44,58 +43,27 @@ object DocStream {
     }
   }
 
-  /** Stage a frame as one parquet file per 100000-wide doc-id band,
-    * written in band order (coalesce(1): a band split across files could
-    * process out of order WITHIN the band and break min-pick
-    * determinism), and open it as a one-file-per-trigger stream.
+  /** Stage a frame as one parquet file per 100000-wide doc-id band, in
+    * band order, as a one-file-per-trigger stream (one file per band: a
+    * band split across files could process out of order WITHIN the band
+    * and break min-pick determinism).
     */
   private def stageByBand(spark: SparkSession, typed: DataFrame,
-                          prefix: String, width: Long = 100000L): DataFrame = {
+                          width: Long = 100000L): StreamRun.Source = {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory(prefix)
-    srcDir.toFile.deleteOnExit()
     val bands = typed.select(expr(s"doc_id div ${width}L").as("b"))
       .distinct().orderBy("b").as[Long].collect()
-    // The file-stream source orders files by modification time; bands
-    // written back-to-back can land on the SAME mtime (filesystem
-    // granularity) and a tie would let a later band process first,
-    // breaking the earlier-batch-wins gate. Pin each band's files to a
-    // strictly increasing mtime so band order IS arrival order.
-    val mtimeBase = System.currentTimeMillis() - (bands.length + 1) * 2000L
-    bands.zipWithIndex.foreach { case (b, idx) =>
-      val bandDir = srcDir.resolve(f"$b%02d_band")
-      typed.where(expr(s"doc_id div ${width}L = $b"))
-        .coalesce(1).write.mode("overwrite").parquet(bandDir.toString)
-      val t = java.nio.file.attribute.FileTime.fromMillis(mtimeBase + idx * 2000L)
-      val listing = Files.list(bandDir)
-      try listing.forEach(p => Files.setLastModifiedTime(p, t))
-      finally listing.close()
-    }
-    spark.readStream.schema(typed.schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
+    val parts = bands.toSeq.map(b => typed.where(expr(s"doc_id div ${width}L = $b")))
+    // an empty corpus still stages one (empty) part, for its schema
+    StreamRun.parts(spark, if (parts.isEmpty) Seq(typed) else parts,
+      oneFilePerTrigger = true)
   }
 
-  /** Drive a streaming frame to completion into a memory sink; returns the
-    * result plus the number of non-empty micro-batches.
+  /** Drive the gate over `src` to completion; returns the kept rows plus
+    * the number of non-empty micro-batches.
     */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def runToMemory(spark: SparkSession, df: DataFrame,
-                          tag: String): (DataFrame, Long) = {
-    val sinkName = s"graft_stream_${tag}_${sinkSeq.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"graft_${tag}_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    (spark.table(sinkName), nBatches)
-  }
+  private def run(df: DataFrame, src: StreamRun.Source): (DataFrame, Long) =
+    StreamRun.toMemory(df, src.dir, OutputMode.Append())
 
   /** Stateless streaming quality gate: the Gopher rule projection over a
     * band-ordered document stream — map-only (no state, no watermark),
@@ -106,8 +74,8 @@ object DocStream {
     */
   def gopherGate(spark: SparkSession, docs: DataFrame): (DataFrame, Long) = {
     val typed = docs.select(col("doc_id").cast("long"), col("text"))
-    val raw = stageByBand(spark, typed, "graft_gopher_src", width = 200L)
-    val scored = raw
+    val src = stageByBand(spark, typed, width = 200L)
+    val scored = src.stream()
       .withColumn("words", split(trim(col("text")), "\\s+"))
       .withColumn("n_words", expr("CAST(size(words) AS BIGINT)"))
       .withColumn("char_sum",
@@ -120,7 +88,7 @@ object DocStream {
           |  AND mean_wl_milli BETWEEN 2000 AND 10000
           |  AND stop_hits >= 2 AS INT)""".stripMargin))
       .select("doc_id", "n_words", "mean_wl_milli", "stop_hits", "keep")
-    runToMemory(spark, scored, "gopher")
+    run(scored, src)
   }
 
   /** Run the gate over `segs` (doc_id, seg_idx, seg, seg_h). Returns the
@@ -130,11 +98,11 @@ object DocStream {
     import spark.implicits._
     val typed = segs.select(col("doc_id").cast("long"),
       col("seg_idx").cast("long"), col("seg"), col("seg_h"))
-    val raw = stageByBand(spark, typed, "graft_segdedup_src")
-    val kept = raw.as[SegRow].groupByKey(_.seg_h)
+    val src = stageByBand(spark, typed)
+    val kept = src.stream().as[SegRow].groupByKey(_.seg_h)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         firstOccurrenceFn)
-    runToMemory(spark, kept.toDF(), "segdedup")
+    run(kept.toDF(), src)
   }
 
   // -------------------------------------------- CDC chunk-level gate
@@ -166,11 +134,11 @@ object DocStream {
   def cdcChunkGate(spark: SparkSession, chunks: DataFrame): (DataFrame, Long) = {
     import spark.implicits._
     val typed = chunks.select(col("doc_id").cast("long"), col("ch"))
-    val raw = stageByBand(spark, typed, "graft_cdc_src", width = 200L)
-    val kept = raw.as[ChunkRow].groupByKey(_.ch)
+    val src = stageByBand(spark, typed, width = 200L)
+    val kept = src.stream().as[ChunkRow].groupByKey(_.ch)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         chunkFirstFn)
-    runToMemory(spark, kept.toDF(), "cdc")
+    run(kept.toDF(), src)
   }
 
   // -------------------------------------------------------- TTL'd gate
@@ -227,12 +195,12 @@ object DocStream {
     val typed = segs.select(col("doc_id").cast("long"),
       col("seg_idx").cast("long"), col("seg"), col("seg_h"),
       col("ts").cast("timestamp"))
-    val raw = stageByBand(spark, typed, "graft_segttl_src")
-      .withWatermark("ts", delayThreshold)
+    val src = stageByBand(spark, typed)
+    val raw = src.stream().withWatermark("ts", delayThreshold)
     val kept = raw.as[SegRowT].groupByKey(_.seg_h)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(ttlGateFn(ttlMillis))
-    runToMemory(spark, kept.toDF(), "segttl")
+    run(kept.toDF(), src)
   }
 
   final case class CurSeg(doc_id: Long, source: String, seg_idx: Long, seg_h: String)
@@ -263,8 +231,8 @@ object DocStream {
   def curationGate(spark: SparkSession, docs: DataFrame): (DataFrame, Long) = {
     import spark.implicits._
     val typed = docs.select(col("doc_id").cast("long"), col("source"), col("text"))
-    val raw = stageByBand(spark, typed, "graft_curation_src")
-    val segs = raw
+    val src = stageByBand(spark, typed)
+    val segs = src.stream()
       .withColumn("ws", expr("filter(split(text, ' +'), x -> x != '')"))
       .where(expr("size(ws) >= 2"))
       .withColumn("g", expr(
@@ -281,6 +249,6 @@ object DocStream {
     val kept = segs.as[CurSeg].groupByKey(_.seg_h)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         curFirstFn)
-    runToMemory(spark, kept.toDF(), "curation")
+    run(kept.toDF(), src)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface: event-time windowed aggregation with a
   * watermark over the events table, consumed as a file stream.
@@ -18,16 +17,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  def hourlyRollup(spark: SparkSession, dir: String): DataFrame = {
-    // file-stream sources read directories; stage the single parquet file
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_stream_src")
-    srcDir.toFile.deleteOnExit()
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  /** The events table staged as a file stream (`n` copies of the file). */
+  private def eventsSource(spark: SparkSession, dir: String, n: Int = 1) =
+    StreamRun.copies(spark, s"$dir/events.parquet", n)
 
-    val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-    val events = graft.queries.T.normTs(raw)
+  private def complete(df: DataFrame, src: StreamRun.Source): DataFrame =
+    StreamRun.toMemory(df, src.dir, OutputMode.Complete())._1
+
+  private def append(df: DataFrame, src: StreamRun.Source): DataFrame =
+    StreamRun.toMemory(df, src.dir, OutputMode.Append())._1
+
+  def hourlyRollup(spark: SparkSession, dir: String): DataFrame = {
+    val src = eventsSource(spark, dir)
+    val events = graft.queries.T.normTs(src.stream())
 
     val agg = events
       .withWatermark("ts", "1 hour")
@@ -38,16 +40,7 @@ object EventStream {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         col("event_type"), col("n"), col("sum_value"))
 
-    val sinkName = s"graft_stream_rollup_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h", "event_type")
+    complete(agg, src).orderBy("h", "event_type")
   }
 
   /** Stream-static enrichment: the event stream joins a STATIC dimension
@@ -58,14 +51,8 @@ object EventStream {
     * AvailableNow; oracle = the equivalent batch join + rollup.
     */
   def enrichRollup(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_enrich_src")
-    srcDir.toFile.deleteOnExit()
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-    val events = graft.queries.T.normTs(raw)
+    val src = eventsSource(spark, dir)
+    val events = graft.queries.T.normTs(src.stream())
     val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_nationkey")))
 
@@ -74,16 +61,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
 
-    val sinkName = s"graft_enrich_rollup_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_enrich_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("nation", "event_type")
+    complete(agg, src).orderBy("nation", "event_type")
   }
 
   /** Streaming ingestion dedup: the source delivers every file TWICE
@@ -96,17 +74,9 @@ object EventStream {
     * events, so it shares that DuckDB oracle.
     */
   def dedupRollup(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_dedup_src")
-    srcDir.toFile.deleteOnExit()
     // duplicate delivery: same payload, two files
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("a_events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("b_events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-    val events = graft.queries.T.normTs(raw)
+    val src = eventsSource(spark, dir, n = 2)
+    val events = graft.queries.T.normTs(src.stream())
 
     val agg = events
       .withWatermark("ts", "1 hour")
@@ -118,16 +88,7 @@ object EventStream {
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         col("event_type"), col("n"), col("sum_value"))
 
-    val sinkName = s"graft_stream_dedup_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_dedup_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h", "event_type")
+    complete(agg, src).orderBy("h", "event_type")
   }
 
   /** Streaming Count-Min per hour: each window's state is the FIXED
@@ -141,29 +102,15 @@ object EventStream {
   def hourlyCmsTopUsers(spark: SparkSession, dir: String): DataFrame = {
     spark.udf.register("cms_user_stream",
       org.apache.spark.sql.functions.udaf(graft.operators.CountMin.agg(4, 256)))
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_cms_src")
-    srcDir.toFile.deleteOnExit()
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-    val events = graft.queries.T.normTs(raw)
+    val src = eventsSource(spark, dir)
+    val events = graft.queries.T.normTs(src.stream())
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(expr("cms_user_stream(CAST(user_id AS STRING))").as("cms"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         col("cms"))
-    val sinkName = s"graft_stream_cms_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_cms_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val sketches = spark.table(sinkName)
+    val sketches = complete(agg, src)
 
     // probe each window's sketch with that hour's exact top-3 users
     import org.apache.spark.sql.expressions.Window
@@ -195,17 +142,10 @@ object EventStream {
                           streaming: Boolean = true): DataFrame = {
     spark.udf.register("hll_distinct_stream",
       org.apache.spark.sql.functions.udaf(graft.operators.Hll.hll))
+    val src = if (streaming) Some(eventsSource(spark, dir)) else None
     val events =
       if (!streaming) graft.queries.T.events(spark, dir)
-      else {
-        val batch = spark.read.parquet(s"$dir/events.parquet")
-        val srcDir = Files.createTempDirectory("graft_hll_src")
-        srcDir.toFile.deleteOnExit()
-        Files.copy(Paths.get(s"$dir/events.parquet"),
-          srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-        val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-        graft.queries.T.normTs(raw)
-      }
+      else graft.queries.T.normTs(src.get.stream())
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
@@ -215,16 +155,7 @@ object EventStream {
         col("approx_users"), col("n_events"))
     if (!streaming) return agg.orderBy("h")
 
-    val sinkName = s"graft_stream_hll_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_hll_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h")
+    complete(agg, src.get).orderBy("h")
   }
 
   /** Streaming file sink (S5's layout, streaming-side): the duplicated
@@ -237,34 +168,15 @@ object EventStream {
     * exactly-once under redelivery.
     */
   def dedupToParquetSink(spark: SparkSession, dir: String): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_fsink_src")
-    srcDir.toFile.deleteOnExit()
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("a_events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("b_events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-
-    val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-    val events = graft.queries.T.normTs(raw)
-    val outDir = Files.createTempDirectory("graft_fsink_out").toString
-
-    val q = events
+    val src = eventsSource(spark, dir, n = 2)
+    val events = graft.queries.T.normTs(src.stream())
+    val outDir = StreamRun.toParquet(events
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_fsink_ckpt").toString)
-      .partitionBy("event_type")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .select("event_id", "ts", "user_id", "event_type", "value"),
+      src.dir, "event_type")
 
-    spark.read.parquet(outDir)
+    spark.read.parquet(outDir.toString)
       .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss")
         .as("h"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -286,17 +198,10 @@ object EventStream {
     spark.udf.register("approx_quantiles_stream",
       org.apache.spark.sql.functions.udaf(
         graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9))))
+    val src = if (streaming) Some(eventsSource(spark, dir)) else None
     val events =
       if (!streaming) graft.queries.T.events(spark, dir)
-      else {
-        val batch = spark.read.parquet(s"$dir/events.parquet")
-        val srcDir = Files.createTempDirectory("graft_kll_src")
-        srcDir.toFile.deleteOnExit()
-        Files.copy(Paths.get(s"$dir/events.parquet"),
-          srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
-        val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-        graft.queries.T.normTs(raw)
-      }
+      else graft.queries.T.normTs(src.get.stream())
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
@@ -307,16 +212,7 @@ object EventStream {
       .select("h", "q_idx", "q_value", "n_events")
     if (!streaming) return agg.orderBy("h", "q_idx")
 
-    val sinkName = s"graft_stream_kll_${math.abs(dir.hashCode)}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_kll_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h", "q_idx")
+    complete(agg, src.get).orderBy("h", "q_idx")
   }
 
   /** Stream-stream interval join: clicks matched to the views they
@@ -327,15 +223,10 @@ object EventStream {
     * DuckDB oracle.
     */
   def viewClickJoin(spark: SparkSession, dir: String, windowMinutes: Int): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_ssj_src")
-    srcDir.toFile.deleteOnExit()
-    Files.copy(Paths.get(s"$dir/events.parquet"),
-      srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val src = eventsSource(spark, dir)
 
     def side(tag: String) = {
-      val raw = spark.readStream.schema(batch.schema).parquet(srcDir.toString)
-      val ev = graft.queries.T.normTs(raw)
+      val ev = graft.queries.T.normTs(src.stream())
       ev.where(col("event_type") === (if (tag == "v") "view" else "click"))
         .select(col("event_id").as(s"${tag}_id"), col("user_id").as(s"${tag}_user"),
           col("ts").as(s"${tag}_ts"))
@@ -348,16 +239,7 @@ object EventStream {
       .select(col("v_id").as("view_id"), col("c_id").as("click_id"),
         col("v_user").as("user_id"))
 
-    val sinkName = s"graft_stream_ssj_${math.abs(dir.hashCode)}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_ssj_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("view_id", "click_id")
+    append(joined, src).orderBy("view_id", "click_id")
   }
 
   // ------------------------------------------------- stateful sessionization
@@ -419,8 +301,6 @@ object EventStream {
     }
   }
 
-  private val anomSinkSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** Spec harness: run the anomaly gate with events SPLIT across
     * micro-batches (one file per trigger, mtime-pinned order, sentinel
     * last) to prove the hour→count state accumulates across batches —
@@ -430,75 +310,35 @@ object EventStream {
     */
   private[streaming] def anomalyMultiBatch(
       spark: SparkSession, events: DataFrame): (DataFrame, Long) = {
-    import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft_anom_mb")
-    srcDir.toFile.deleteOnExit()
     val typed = events.select(col("event_type"), col("hr").cast("long"),
       lit(false).as("sentinel"))
-    val parts = Seq(
+    val src = StreamRun.parts(spark, Seq(
       typed.where(col("hr") % 2 === 0),
       typed.where(col("hr") % 2 =!= 0),
-      typed.select("event_type").distinct()
-        .select(col("event_type"), lit(Long.MaxValue).as("hr"), lit(true).as("sentinel")))
-    val base = System.currentTimeMillis() - (parts.length + 1) * 2000L
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val partDir = srcDir.resolve(f"$i%02d_part")
-      p.coalesce(1).write.mode("overwrite").parquet(partDir.toString)
-      val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L)
-      val listing = Files.list(partDir)
-      try listing.forEach(pp => Files.setLastModifiedTime(pp, t))
-      finally listing.close()
-    }
-    val raw = spark.readStream.schema(typed.schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
-      .as[AnomEv]
-    val out = raw.groupByKey(_.event_type)
+      anomSentinels(typed)), oneFilePerTrigger = true)
+    val (out, nBatches) = StreamRun.toMemory(anomalies(spark, src), src.dir,
+      OutputMode.Append())
+    (out.orderBy("event_type", "hr"), nBatches)
+  }
+
+  /** One flush sentinel per event_type, after every real hour. */
+  private def anomSentinels(typed: DataFrame): DataFrame =
+    typed.select("event_type").distinct()
+      .select(col("event_type"), lit(Long.MaxValue).as("hr"), lit(true).as("sentinel"))
+
+  private def anomalies(spark: SparkSession, src: StreamRun.Source): DataFrame = {
+    import spark.implicits._
+    src.stream().as[AnomEv].groupByKey(_.event_type)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(anomFn)
-    val sinkName = s"graft_anom_mb_${anomSinkSeq.incrementAndGet()}"
-    val q = out.toDF().writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_anom_mb_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    (spark.table(sinkName).orderBy("event_type", "hr"), nBatches)
+      .toDF()
   }
 
   def anomalyTrailing(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val batch = graft.queries.T.normTs(spark.read.parquet(s"$dir/events.parquet"))
-    val srcDir = Files.createTempDirectory("graft_anom_src")
-    srcDir.toFile.deleteOnExit()
     val normalized = batch.select(col("event_type"),
       expr("unix_micros(ts) div 3600000000").as("hr"), lit(false).as("sentinel"))
-    normalized.write.mode("overwrite").parquet(srcDir.resolve("00_events").toString)
-    normalized.select("event_type").distinct()
-      .select(col("event_type"), lit(Long.MaxValue).as("hr"), lit(true).as("sentinel"))
-      .write.mode("overwrite").parquet(srcDir.resolve("zz_sentinel").toString)
-
-    val raw = spark.readStream
-      .schema(normalized.schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-      .as[AnomEv]
-    val out = raw.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(anomFn)
-
-    val sinkName = s"graft_stream_anom_${math.abs(dir.hashCode)}"
-    val q = out.toDF().writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_anom_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("event_type", "hr")
+    val src = StreamRun.parts(spark, Seq(normalized, anomSentinels(normalized)))
+    append(anomalies(spark, src), src).orderBy("event_type", "hr")
   }
 
   private def sessionFn(gapMicros: Long)(
@@ -533,23 +373,15 @@ object EventStream {
     // and a file stream can't mix those with the µs sentinels): the real
     // events, plus one sentinel per user far past the global max timestamp
     // (flushes the final open sessions through the ordinary gap rule)
-    val srcDir = Files.createTempDirectory("graft_sess_src")
-    srcDir.toFile.deleteOnExit()
     val normalized = batch.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("ts"), col("value").cast("double"))
-    normalized.write.mode("overwrite").parquet(srcDir.resolve("00_events").toString)
     val maxTs = batch.agg(max(expr("unix_micros(ts)"))).head().getLong(0)
-    normalized.select("user_id").distinct()
-      .select(col("user_id"), lit(-1L).as("event_id"),
-        expr(s"timestamp_micros(${maxTs + 10 * gapMicros}L)").as("ts"),
-        lit(0.0).as("value"))
-      .write.mode("overwrite").parquet(srcDir.resolve("zz_sentinel").toString)
-
-    val raw = spark.readStream
-      .schema(normalized.schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-    val evs = raw.select(col("user_id"), col("event_id"),
+    val src = StreamRun.parts(spark, Seq(normalized,
+      normalized.select("user_id").distinct()
+        .select(col("user_id"), lit(-1L).as("event_id"),
+          expr(s"timestamp_micros(${maxTs + 10 * gapMicros}L)").as("ts"),
+          lit(0.0).as("value"))))
+    val evs = src.stream().select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("tsu"),
         col("value").cast("decimal(18,2)").as("v"))
       .as[Ev]
@@ -558,16 +390,7 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         sessionFn(gapMicros))
 
-    val sinkName = s"graft_stream_sess_${math.abs(dir.hashCode)}"
-    val q = sessions.toDF().writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_sess_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("user_id", "session_idx")
+    append(sessions.toDF(), src).orderBy("user_id", "session_idx")
   }
 
   final case class Scd2Ev(user_id: Long, event_id: Long, tsu: Long, event_type: String)
@@ -610,48 +433,35 @@ object EventStream {
     out.iterator
   }
 
-  def scd2Dimension(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val batch = graft.queries.T.events(spark, dir)
-    val srcDir = Files.createTempDirectory("graft_scd2_src")
-    srcDir.toFile.deleteOnExit()
-    val normalized = batch.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("ts"), col("event_type"))
-    normalized.write.mode("overwrite").parquet(srcDir.resolve("00_events").toString)
-    val maxTs = batch.agg(max(expr("unix_micros(ts)"))).head().getLong(0)
+  /** One flush sentinel per user, after every real event. */
+  private def scd2Sentinels(normalized: DataFrame, afterUs: Long): DataFrame =
     normalized.select("user_id").distinct()
       .select(col("user_id"), lit(-1L).as("event_id"),
-        expr(s"timestamp_micros(${maxTs + 1000000L}L)").as("ts"),
+        expr(s"timestamp_micros(${afterUs + 1000000L}L)").as("ts"),
         lit("~sentinel").as("event_type"))
-      .write.mode("overwrite").parquet(srcDir.resolve("zz_sentinel").toString)
 
-    val raw = spark.readStream
-      .schema(normalized.schema)
-      .option("recursiveFileLookup", "true")
-      .parquet(srcDir.toString)
-    val evs = raw.select(col("user_id"), col("event_id"),
+  private def scd2Versions(spark: SparkSession, src: StreamRun.Source): DataFrame = {
+    import spark.implicits._
+    src.stream().select(col("user_id"), col("event_id"),
         expr("unix_micros(ts)").as("tsu"), col("event_type"))
-      .as[Scd2Ev]
-
-    val versions = evs.groupByKey(_.user_id)
+      .as[Scd2Ev].groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(scd2Fn)
-
-    val sinkName = s"graft_scd2_stream_${math.abs(dir.hashCode)}"
-    val q = versions.toDF().writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_scd2_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
-      .select("user_id", "version", "status", "valid_from_us", "valid_to_us",
-        "is_current")
-      .orderBy("user_id", "version")
+      .toDF()
   }
 
-  private val scd2SinkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private def scd2Ordered(versions: DataFrame): DataFrame =
+    versions.select("user_id", "version", "status", "valid_from_us", "valid_to_us",
+        "is_current")
+      .orderBy("user_id", "version")
+
+  def scd2Dimension(spark: SparkSession, dir: String): DataFrame = {
+    val batch = graft.queries.T.events(spark, dir)
+    val normalized = batch.select(col("user_id").cast("long"),
+      col("event_id").cast("long"), col("ts"), col("event_type"))
+    val maxTs = batch.agg(max(expr("unix_micros(ts)"))).head().getLong(0)
+    val src = StreamRun.parts(spark, Seq(normalized, scd2Sentinels(normalized, maxTs)))
+    scd2Ordered(append(scd2Versions(spark, src), src))
+  }
 
   /** Spec hook: the SCD2 machine driven across FORCED multiple batches
     * (maxFilesPerTrigger=1 over time-split files with pinned ascending
@@ -660,56 +470,19 @@ object EventStream {
     */
   private[streaming] def scd2MultiBatch(
       spark: SparkSession, dir: String): (DataFrame, Long) = {
-    import spark.implicits._
     val batch = graft.queries.T.events(spark, dir)
       .withColumn("us", expr("unix_micros(ts)"))
     val bounds = batch.agg(min("us"), max("us")).head()
     val split = (bounds.getLong(0) + bounds.getLong(1)) / 2
     val normalized = batch.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("ts"), col("event_type"), col("us"))
-    val srcDir = Files.createTempDirectory("graft_scd2_mb")
-    srcDir.toFile.deleteOnExit()
-    val parts = Seq(
-      normalized.where(col("us") < split),
-      normalized.where(col("us") >= split),
-      normalized.select("user_id").distinct()
-        .select(col("user_id"), lit(-1L).as("event_id"),
-          expr(s"timestamp_micros(${bounds.getLong(1) + 1000000L}L)").as("ts"),
-          lit("~sentinel").as("event_type"), lit(Long.MaxValue).as("us")))
-    val base = System.currentTimeMillis() - (parts.length + 1) * 2000L
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val partDir = srcDir.resolve(f"$i%02d_part")
-      p.drop("us").coalesce(1).write.mode("overwrite").parquet(partDir.toString)
-      val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L)
-      val listing = Files.list(partDir)
-      try listing.forEach(pp => Files.setLastModifiedTime(pp, t))
-      finally listing.close()
-    }
-    val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id LONG, event_id LONG, ts TIMESTAMP, event_type STRING"))
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
-    val evs = raw.select(col("user_id"), col("event_id"),
-        expr("unix_micros(ts)").as("tsu"), col("event_type"))
-      .as[Scd2Ev]
-    val out = evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(scd2Fn)
-    val sinkName = s"graft_scd2_mb_${scd2SinkSeq.incrementAndGet()}"
-    val q = out.toDF().writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_scd2_mb_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    val nBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-    (spark.table(sinkName)
-      .select("user_id", "version", "status", "valid_from_us", "valid_to_us",
-        "is_current")
-      .orderBy("user_id", "version"), nBatches)
+    val src = StreamRun.parts(spark, Seq(
+      normalized.where(col("us") < split).drop("us"),
+      normalized.where(col("us") >= split).drop("us"),
+      scd2Sentinels(normalized, bounds.getLong(1))), oneFilePerTrigger = true)
+    val (out, nBatches) = StreamRun.toMemory(scd2Versions(spark, src), src.dir,
+      OutputMode.Append())
+    (scd2Ordered(out), nBatches)
   }
 
   /** Lambda-architecture unification: BATCH partial aggregates over the
@@ -734,23 +507,8 @@ object EventStream {
 
     val base = partials(ev.where(col("us") < split))
 
-    val staged = ev.where(col("us") >= split)
-    val srcDir = Files.createTempDirectory("graft_incr_src")
-    srcDir.toFile.deleteOnExit()
-    staged.write.mode("overwrite").parquet(srcDir.toString)
-    val raw = spark.readStream.schema(staged.schema).parquet(srcDir.toString)
-
-    val sinkName = s"graft_incr_delta_${math.abs(dir.hashCode)}"
-    val q = partials(raw).writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_incr_ckpt").toString)
-      .start()
-    q.awaitTermination()
-
-    base.unionByName(spark.table(sinkName), allowMissingColumns = false)
+    val src = StreamRun.parts(spark, Seq(ev.where(col("us") >= split)))
+    base.unionByName(complete(partials(src.stream()), src), allowMissingColumns = false)
       .groupBy("event_type")
       .agg(sum("pn").as("n_events"),
         sum("psum").cast("double").as("sum_value"),

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming H3 indexing: points are indexed to cells AS THEY ARRIVE and
   * rolled up per cell — the continuous-ingestion shape of the reference's
@@ -40,28 +39,11 @@ object GeoStream {
     * the per-cell aggregate is the only state).
     */
   def pointsRollupStream(spark: SparkSession, dir: String, res: Int): DataFrame = {
-    val src = graft.queries.GeoQueries.pointsDf(spark, dir)
     // file-stream sources read directories; stage the source parquet
-    val srcDir = Files.createTempDirectory("graft_geostream_src")
-    srcDir.toFile.deleteOnExit()
-    src.write.mode("overwrite").parquet(srcDir.toString)
-
-    val streamed = spark.readStream
-      .schema(src.schema).parquet(srcDir.toString)
-
-    val rolled = pointsCellRollup(spark, streamed, res,
+    val src = StreamRun.parts(spark, Seq(graft.queries.GeoQueries.pointsDf(spark, dir)))
+    val rolled = pointsCellRollup(spark, src.stream(), res,
       "latitude", "longitude", "qty")
-
-    val sinkName = s"graft_geostream_${math.abs(dir.hashCode)}"
-    val q = rolled.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_geostream_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h3_index")
+    StreamRun.toMemory(rolled, src.dir, OutputMode.Complete())._1.orderBy("h3_index")
   }
 
   /** Batch twin over the same source (for the spec's exact-equality check
@@ -85,8 +67,9 @@ object GeoStream {
     val src = graft.queries.GeoQueries.pointsDf(spark, dir)
       .select(col("point_id"), col("qty"),
         callUDF("st_point", col("longitude"), col("latitude")).as("geom_wkt"))
-    val srcDir = Files.createTempDirectory("graft_geojson_stream_src")
-    srcDir.toFile.deleteOnExit()
+    // a stream run deletes this directory on return; the batch twin reads
+    // it lazily, so there it lives until JVM exit
+    val srcDir = Scratch.dir("graft_geojson_stream_src")
     graft.sources.GeoJson.write(src, "geom_wkt", srcDir.toString)
 
     val lines =
@@ -104,15 +87,6 @@ object GeoStream {
     val rolled = pointsCellRollup(spark, pts, res, "latitude", "longitude", "qty")
     if (!streaming) return rolled.orderBy("h3_index")
 
-    val sinkName = s"graft_geojson_stream_${math.abs(dir.hashCode)}"
-    val q = rolled.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_geojson_stream_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("h3_index")
+    StreamRun.toMemory(rolled, srcDir, OutputMode.Complete())._1.orderBy("h3_index")
   }
 }

@@ -172,6 +172,31 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(resolved.count() == resolved.select(Cols.H3Index).distinct().count())
   }
 
+  private def perCell(in: (VectorInput, DataFrame)): DataFrame = {
+    val (vi, data) = in
+    Resolver.resolveInput(
+      Indexer.index(spark, vi, Validator.validate(spark, vi, data), 6, forWrite = false),
+      vi.inputColumns)
+  }
+
+  test("resolver: inputs sharing a sum_ column fail up front, naming it") {
+    val a = perCell(polysInput).withColumnRenamed("sum_POPESTIMAT", "sum_x")
+    val b = perCell(linesInput).withColumnRenamed("sum_emissions", "sum_x")
+    val e = intercept[ValidationError](Resolver.resolve(spark, Seq(a, b), 6))
+    assert(e.getMessage.contains("sum_x"), e.getMessage)
+  }
+
+  test("resolver: a frame's extra non-sum_ column does not change the folded rows") {
+    val p = perCell(polysInput)
+    val l = perCell(linesInput)
+    val plain = Resolver.resolve(spark, Seq(p, l), 6, forWrite = false)
+    val noted = Resolver.resolve(spark, Seq(p.withColumn("note", lit("x")), l), 6,
+      forWrite = false)
+    assert(noted.columns.toSeq == plain.columns.toSeq)
+    val rows = plain.collect().toSet
+    assert(rows.nonEmpty && noted.collect().toSet == rows)
+  }
+
   test("resolver: mergeDelta on a split corpus equals the from-scratch resolve") {
     import graft.queries.GeoQueries
     val d = "/root/testdata/sf0.001"
