@@ -7,16 +7,21 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.h3.H3Index
 
-/** The hand-written Catalyst expressions: the few calls that a plain
-  * `StaticInvoke` row of [[GraftFunctions.functions]] cannot express.
-  * Each generates its own code, so it stays inside whole-stage codegen.
+/** The hand-written Catalyst expressions. The rule: a SQL name is a row of
+  * [[GraftFunctions.functions]]; every other kernel is a Column (a
+  * `udf`/`udaf` value, or a `StaticInvoke` through `GraftFunctions.kernel`,
+  * with plan-time constants as ObjectType literals). A case class exists
+  * here only for a call that a `StaticInvoke` cannot express. Each
+  * generates its own code, so it stays inside whole-stage codegen.
   *
   *   - `h3_parent_long`, `h3_hex`, `h3_unhex`: [[CollapseH3Chains]]
   *     pattern-matches them, and `Cols.hexCells` builds [[H3HexExpr]].
-  *   - the vector, dedup and IVF kernels: ragged pairs → NULL, codebooks
-  *     and bitsets embedded in the plan, or analysis-time input checks.
-  *     The table registers the four vector `*_native` names; the rest are
-  *     built as Columns by their operators.
+  *   - `vec_dot_native`, `vec_cosine_native`: a ragged pair gives NULL,
+  *     which a primitive-returning `StaticInvoke` cannot.
+  *   - `sorted_intersect_count`: dispatches on the arrays' element type.
+  *   - `shingle_hashes_sorted_native`, `minhash_bands_native`: a mistyped
+  *     input fails at analysis, where an implicit-cast `StaticInvoke`
+  *     would accept it.
   */
 object Expressions {
 
@@ -170,52 +175,15 @@ object Expressions {
       org.apache.spark.sql.GraftBridge.expression(a),
       org.apache.spark.sql.GraftBridge.expression(b)))
 
-  /** vec_cosine_f_native(a ARRAY<FLOAT>, b ARRAY<FLOAT>) → DOUBLE — the
-    * candidate-verify cosine as a codegen kernel over the float arrays in
-    * place. Semantics (min-length, fused accumulators, float→double
-    * widening) are bit-identical to the legacy `cosine_f` UDF
-    * (OperatorPropertySpec pins doubleToLongBits equality), without the UDF's
-    * Array[Float] encoder materialization or the vec_cosine_native
-    * builder's per-row array<float>→array<double> Cast.
-    */
-  case class VecCosineFloatExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "vec_cosine_f_native"
-
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      VecOps.cosineFloat(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.engine.VecOps.cosineFloat($a, $b)")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(l, r)
-  }
-
-  /** Column wrapper for VecCosineFloatExpr (the embedding near-dup verify).
-    * Inputs are cast to ARRAY<FLOAT> like the SQL-registration path —
-    * without the cast, an array<double> column would silently read
-    * 4-byte halves of 8-byte doubles (BinaryExpression does no input
-    * validation); the cast is a no-op on float arrays. */
-  def vecCosineFloat(a: org.apache.spark.sql.Column,
-                     b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftBridge.column(VecCosineFloatExpr(
-      org.apache.spark.sql.catalyst.expressions.Cast(
-        org.apache.spark.sql.GraftBridge.expression(a), ArrayType(FloatType)),
-      org.apache.spark.sql.catalyst.expressions.Cast(
-        org.apache.spark.sql.GraftBridge.expression(b), ArrayType(FloatType))))
-
   /** shingle_hashes_sorted_native(text STRING) → ARRAY<BIGINT> — the
     * sorted-distinct shingle-hash build (Dedup.shingleHashesSorted) as a
     * codegen expression: the tokenize/shingle/hash/sort runs identically,
-    * but the result lands as a primitive-backed UnsafeArrayData instead of
-    * round-tripping through the Scala UDF's CatalystTypeConverters element
-    * walk. Null text → null (nullSafeEval), matching the other native
-    * expressions; callers needing the legacy UDF's hash-null-as-empty
-    * behavior coalesce the text to '' at the call site (the minhash
-    * plans do), byte-identical to what the UDF computed on null.
+    * but the result lands as a primitive-backed UnsafeArrayData with no
+    * CatalystTypeConverters element walk. Null text → null (nullSafeEval),
+    * matching the other native expressions; callers needing the Scala
+    * kernel's hash-null-as-empty behavior coalesce the text to '' at the
+    * call site (the minhash plans do), byte-identical to what
+    * Dedup.shingleHashesSorted computes on null.
     */
   case class ShingleHashesSortedExpr(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
@@ -247,8 +215,7 @@ object Expressions {
     * hashes from an already-built shingle-hash array, reading the longs in
     * place (no Seq[Long] boxing per row). Arithmetic and order are exactly
     * Dedup.bandHashes(minHashSignature(_)), so bands are bit-identical to
-    * both the `minhash_bands_hashed` UDF and `minhash_bands(text)`
-    * (DedupSpec pins the chain).
+    * Dedup.minHashBands(text) (DedupSpec and ExpressionsSpec pin the chain).
     */
   case class MinhashBandsExpr(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
@@ -273,262 +240,6 @@ object Expressions {
   def minhashBandsNative(shs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftBridge.column(MinhashBandsExpr(
       org.apache.spark.sql.GraftBridge.expression(shs)))
-
-  /** nearest_centroid(v ARRAY<DOUBLE>) → INT against a plan-embedded
-    * centroid matrix (k×dim, a few KB — small enough to ship in the
-    * serialized plan; a broadcast would only add a lookup). Replaces the
-    * per-row Seq[Double]-boxing assignment UDF in IVF k-means: generated
-    * code hands the row-backed ArrayData straight to a primitive kernel
-    * with the UDF's exact operation order, so assignments are identical
-    * and each Lloyd pass skips ~corpus×dim box allocations.
-    */
-  case class NearestCentroidExpr(child: Expression, centroids: Array[Array[Double]])
-      extends UnaryExpression {
-
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "nearest_centroid_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      VecOps.nearestCentroid(v.asInstanceOf[ArrayData], centroids)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", centroids, "double[][]")
-      defineCodeGen(ctx, ev, v => s"graft.engine.VecOps.nearestCentroid($v, $ref)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** nearest_centroids(v ARRAY<DOUBLE>) → ARRAY<INT>: the n nearest
-    * centroid indices (probe list), distance asc / index tie-break —
-    * ordering-identical to Model.nearest's stable sort.
-    */
-  case class NearestCentroidsExpr(child: Expression,
-      centroids: Array[Array[Double]], n: Int) extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "nearest_centroids_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      VecOps.nearestCentroids(v.asInstanceOf[ArrayData], centroids, n)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", centroids, "double[][]")
-      defineCodeGen(ctx, ev, v =>
-        s"graft.engine.VecOps.nearestCentroids($v, $ref, $n)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** nearest_in_codebook(v ARRAY<DOUBLE>, cents ARRAY<ARRAY<DOUBLE>>) → INT:
-    * argmin cosine distance over a codebook carried in a COLUMN — the fine
-    * level of the two-level IVF quantizer. Unlike NearestCentroidExpr the
-    * centroid matrix never rides in the serialized plan (that path caps at
-    * ~2 MB of plan bytes); it arrives per-row from a broadcast/shuffle join
-    * on the coarse cell id, so total k scales with the cluster, not the
-    * plan. Same distance arithmetic and first-min tie-break as the flat
-    * kernel (VecOps.cosineDistAD mirrors cosineDistCent op-for-op).
-    */
-  case class NearestInCodebookExpr(left: Expression, right: Expression)
-      extends BinaryExpression with ExpectsInputTypes {
-
-    override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "nearest_in_codebook_native"
-
-    override protected def nullSafeEval(v: Any, cents: Any): Any =
-      VecOps.nearestInCodebook(v.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (v, c) => s"graft.engine.VecOps.nearestInCodebook($v, $c)")
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
-  def nearestInCodebook(v: org.apache.spark.sql.Column,
-      cents: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftBridge.column(NearestInCodebookExpr(
-      org.apache.spark.sql.GraftBridge.expression(v),
-      org.apache.spark.sql.GraftBridge.expression(cents)))
-
-  /** pq_assign(sub INT, sv ARRAY<DOUBLE>) → INT: nearest code in the
-    * sub-th PQ codebook by L2² — the native twin of the boxed PQ training
-    * assignment UDF (same loop, first-min tie-break).
-    */
-  case class PqAssignExpr(left: Expression, right: Expression,
-      codebooks: Array[Array[Array[Double]]]) extends BinaryExpression {
-
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "pq_assign_native"
-
-    override protected def nullSafeEval(s: Any, sv: Any): Any =
-      VecOps.nearestSubCode(codebooks(s.asInstanceOf[Int]),
-        sv.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", codebooks, "double[][][]")
-      defineCodeGen(ctx, ev, (s, sv) =>
-        s"graft.engine.VecOps.nearestSubCode($ref[$s], $sv)")
-    }
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
-  /** l2_normalize_native(v ARRAY<DOUBLE>) → ARRAY<DOUBLE>: unit-scaled copy
-    * with ProductQuantizer.l2normalize's arithmetic (zero vector → zeros).
-    */
-  case class L2NormalizeExpr(child: Expression) extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "l2_normalize_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      VecOps.l2normalized(v.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, v => s"graft.engine.VecOps.l2normalized($v)")
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** pq_encode(v ARRAY<DOUBLE>) → ARRAY<INT>: the m PQ codes of a vector
-    * against plan-embedded codebooks — PQModel.encodeOne (same subspace L2²
-    * loops, first-min ties) reading straight from the row buffer. Replaces
-    * the per-row Seq-boxing encode UDF on the full-corpus scan.
-    */
-  case class PqEncodeExpr(child: Expression,
-      codebooks: Array[Array[Array[Double]]], dsub: Int, normalizeInput: Boolean)
-      extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "pq_encode_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      VecOps.pqEncode(v.asInstanceOf[ArrayData], codebooks, dsub, normalizeInput)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", codebooks, "double[][][]")
-      defineCodeGen(ctx, ev, v =>
-        s"graft.engine.VecOps.pqEncode($v, $ref, $dsub, $normalizeInput)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** pq_adc(key BIGINT, codes ARRAY<INT>) → DOUBLE: ADC distance against a
-    * plan-embedded per-key table map (key = qid, or qid<<32|cluster for the
-    * per-probed-cell residual tables). The map is Q·m·k doubles — a few
-    * hundred KB at most, the same rides-in-the-plan envelope as the
-    * centroid matrices.
-    */
-  case class PqAdcExpr(left: Expression, right: Expression,
-      tables: Map[Long, Array[Array[Double]]]) extends BinaryExpression {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "pq_adc_native"
-
-    override protected def nullSafeEval(k: Any, codes: Any): Any =
-      VecOps.adcLookup(tables, k.asInstanceOf[Long], codes.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("tables", tables,
-        "scala.collection.immutable.Map")
-      defineCodeGen(ctx, ev, (k, codes) =>
-        s"graft.engine.VecOps.adcLookup($ref, $k, $codes)")
-    }
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  }
-
-  /** ivf_residual(v ARRAY<DOUBLE>) → ARRAY<DOUBLE>: l2normalize(v) minus
-    * the unit centroid of its nearest IVF cell — the residual-training map
-    * (IvfPq.trainResidual) without per-row boxing.
-    */
-  case class IvfResidualExpr(child: Expression,
-      centroids: Array[Array[Double]], unitCentroids: Array[Array[Double]])
-      extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "ivf_residual_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      ArrayData.toArrayData(VecOps.ivfResidual(
-        v.asInstanceOf[ArrayData], centroids, unitCentroids))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val c = ctx.addReferenceObj("cents", centroids, "double[][]")
-      val u = ctx.addReferenceObj("ucents", unitCentroids, "double[][]")
-      defineCodeGen(ctx, ev, v =>
-        s"org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(" +
-          s"graft.engine.VecOps.ivfResidual($v, $c, $u))")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** ivf_residual_encode(v ARRAY<DOUBLE>) → STRUCT<cluster INT, codes
-    * ARRAY<INT>>: the IVFADC index row (nearest cell + residual PQ codes)
-    * in ONE pass — the argmin over centroids runs once for both outputs,
-    * where the UDF pair ran it twice.
-    */
-  case class IvfResidualEncodeExpr(child: Expression,
-      centroids: Array[Array[Double]], unitCentroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], dsub: Int)
-      extends UnaryExpression {
-
-    override def dataType: DataType = StructType(Seq(
-      StructField("cluster", IntegerType, nullable = false),
-      StructField("codes", ArrayType(IntegerType, containsNull = false),
-        nullable = false)))
-    override def prettyName: String = "ivf_residual_encode_native"
-
-    override protected def nullSafeEval(v: Any): Any =
-      VecOps.ivfResidualEncode(v.asInstanceOf[ArrayData],
-        centroids, unitCentroids, codebooks, dsub)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val c = ctx.addReferenceObj("cents", centroids, "double[][]")
-      val u = ctx.addReferenceObj("ucents", unitCentroids, "double[][]")
-      val b = ctx.addReferenceObj("books", codebooks, "double[][][]")
-      defineCodeGen(ctx, ev, v =>
-        s"graft.engine.VecOps.ivfResidualEncode($v, $c, $u, $b, $dsub)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** bloom_all_set(positions ARRAY<INT>) → BOOLEAN against a plan-embedded
-    * bitset (m/64 longs — fixed size regardless of build-corpus size).
-    * True = all bits set ("maybe present"); any clear bit proves absence,
-    * so filtering on NOT bloom_all_set never drops a genuinely new row.
-    */
-  case class BloomAllSetExpr(child: Expression, words: Array[Long])
-      extends UnaryExpression {
-
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "bloom_all_set"
-
-    override protected def nullSafeEval(ps: Any): Any =
-      BitsetOps.allSet(words, ps.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("words", words, "long[]")
-      defineCodeGen(ctx, ev, ps => s"graft.engine.BitsetOps.allSet($ref, $ps)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
 
   /** Optimizer rule: collapse H3 conversion chains that plan composition
     * creates — `h3_unhex(h3_hex(x))` → `x` (exact: toHexString/parse

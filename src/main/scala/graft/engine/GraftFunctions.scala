@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
@@ -16,7 +16,8 @@ import graft.operators.SpatialJoin
   * plays in the reference (SURVEY.md §2.5-2.6). One table, [[functions]],
   * binds every name once; [[register]] installs it into a session and
   * [[GraftExtensions]] injects the same table into every session of a
-  * cluster.
+  * cluster. No other code binds a SQL name: an operator's kernel is a
+  * Column — a `udf`/`udaf` value, or [[kernel]] over a static method.
   *
   * Each geo/H3 row is a Catalyst `StaticInvoke` of a static bridge below:
   * the call stays inside whole-stage codegen (no ScalaUDF closure, no Row
@@ -253,6 +254,7 @@ object GraftFunctions {
   private def asL(e: Expression): Expression = Cast(e, LongType)
   private def asAL(e: Expression): Expression = Cast(e, ArrayType(LongType))
   private def asAD(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
+  private def asAF(e: Expression): Expression = Cast(e, ArrayType(FloatType))
 
   private val longCells = ArrayType(LongType, containsNull = false)
 
@@ -260,13 +262,27 @@ object GraftFunctions {
     * type that is nullable even on non-null input (StaticInvoke's
     * `returnNullable`).
     */
-  private def invoke(obj: AnyRef, method: String, dt: DataType, orNull: Boolean,
+  private[graft] def invoke(obj: AnyRef, method: String, dt: DataType, orNull: Boolean,
                      casts: Seq[Expression => Expression]): Builder = { es =>
     require(es.length == casts.length,
       s"$method takes ${casts.length} argument(s), got ${es.length}")
     StaticInvoke(obj.getClass, dt, method, casts.zip(es).map { case (c, e) => c(e) },
       returnNullable = orNull)
   }
+
+  /** [[invoke]] over Columns taken as they are (no casts): an operator's
+    * kernel call, NULL only on a NULL argument. */
+  private[graft] def kernel(obj: AnyRef, method: String, dt: DataType, args: Column*): Column = {
+    val es = args.map(GraftBridge.expression)
+    val asIs = es.map(_ => identity[Expression] _)
+    GraftBridge.column(invoke(obj, method, dt, orNull = false, asIs)(es))
+  }
+
+  /** A plan-time constant (centroid matrix, codebook, bitset) as a kernel
+    * argument: it rides in the serialized plan, as a field of a
+    * hand-written expression would. */
+  private[graft] def const[T <: AnyRef](v: T)(implicit ct: scala.reflect.ClassTag[T]): Column =
+    GraftBridge.column(Literal(v, ObjectType(ct.runtimeClass)))
 
   /** NULL only on a NULL argument. */
   private def exact(dt: DataType, method: String, casts: (Expression => Expression)*) =
@@ -283,7 +299,7 @@ object GraftFunctions {
     * indexer, resolver and spatial join call per (feature, cell) row are
     * `exact`: their plans keep non-nullable ratio/area columns.
     */
-  private[engine] val functions: Seq[(String, Builder)] = Seq(
+  private[graft] val functions: Seq[(String, Builder)] = Seq(
     // H3 cells as hex text
     "h3_latlng_cell" -> exact(StringType, "latLngCell", asD, asD, asI),
     "h3_parent" -> exact(StringType, "parent", asS, asI),
@@ -342,26 +358,35 @@ object GraftFunctions {
     "st_cover_cells" -> nullable(longCells, "coverCells", asS, asI),
     "st_contains_point" ->
       invoke(SpatialJoin, "containsPointU", BooleanType, orNull = false, Seq(asS, asD, asD)),
-    // vector kernels (ragged pair → NULL, see VecDotExpr)
-    "l2_normalize_native" -> (es => Expressions.L2NormalizeExpr(asAD(es.head))),
+    // vector kernels (vec_dot/vec_cosine: ragged pair → NULL, see VecDotExpr)
+    "l2_normalize_native" -> invoke(VecOps, "l2normalized",
+      ArrayType(DoubleType, containsNull = false), orNull = false, Seq(asAD)),
     "vec_dot_native" -> (es => Expressions.VecDotExpr(asAD(es(0)), asAD(es(1)))),
     "vec_cosine_native" -> (es => Expressions.VecCosineExpr(asAD(es(0)), asAD(es(1)))),
-    "vec_cosine_f_native" -> (es => Expressions.VecCosineFloatExpr(
-      Cast(es(0), ArrayType(FloatType)), Cast(es(1), ArrayType(FloatType))))
+    // cast to ARRAY<FLOAT>: an ARRAY<DOUBLE> would be read as 4-byte halves
+    "vec_cosine_f_native" ->
+      invoke(VecOps, "cosineFloat", DoubleType, orNull = false, Seq(asAF, asAF))
   )
 
   /** Register the table for SQL/expr use (Sedona-registry parity), plus the
-    * H3 chain-collapsing optimizer rule.
+    * H3 chain-collapsing optimizer rule. It checks before it installs: only
+    * names missing from the session's registry are added, and the rule only
+    * when neither an earlier call nor [[GraftExtensions]] put it there, so
+    * calling it per query build, or on an extension-built session, changes
+    * nothing.
     */
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "graftfunctions") {
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     // post-hoc sessions can't inject optimizer rules; extraOptimizations
     // runs at the end of optimization, after SimplifyCasts
-    if (!spark.experimental.extraOptimizations.contains(Expressions.CollapseH3Chains))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ Expressions.CollapseH3Chains
+    val rule = Expressions.CollapseH3Chains
+    if (!spark.experimental.extraOptimizations.contains(rule) &&
+        !GraftBridge.injectedOptimizerRules(spark).contains(rule))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
   }
 
   def inject(ext: SparkSessionExtensions): Unit = {

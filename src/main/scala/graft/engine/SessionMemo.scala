@@ -3,9 +3,9 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one session-scoped memo for driver-side verdicts (PK uniqueness,
-  * polygon-split estimate, broadcast fit, corpus count) and for one-time
-  * function registration; per-row executor work memoizes in graft.geo.Memo
-  * instead. ARCHITECTURE.md "Session memo" has the contract; in short:
+  * polygon-split estimate, broadcast fit, corpus count); per-row executor
+  * work memoizes in graft.geo.Memo instead. ARCHITECTURE.md "Session memo"
+  * has the contract; in short:
   *   - a verdict is keyed by (plan digest, data-version signature, extra),
   *     all strings, so no key can pin a plan or a session;
   *   - a `compute` that throws propagates and is not cached;
@@ -19,21 +19,19 @@ object SessionMemo {
 
   private type Key = (String, String, String)
 
-  private final class PerSession {
-    val verdicts = new java.util.LinkedHashMap[Key, AnyRef](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Key, AnyRef]): Boolean =
-        size() > MaxEntries
-    }
-    val registered = new java.util.HashSet[String]()
+  private final class Verdicts
+      extends java.util.LinkedHashMap[Key, AnyRef](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, AnyRef]): Boolean =
+      size() > MaxEntries
   }
 
   /** Guarded by its own monitor. */
-  private val sessions = new java.util.WeakHashMap[SparkSession, PerSession]()
+  private val sessions = new java.util.WeakHashMap[SparkSession, Verdicts]()
 
-  private def perSession[T](spark: SparkSession)(f: PerSession => T): T =
+  private def verdicts[T](spark: SparkSession)(f: Verdicts => T): T =
     sessions.synchronized {
       var p = sessions.get(spark)
-      if (p == null) { p = new PerSession; sessions.put(spark, p) }
+      if (p == null) { p = new Verdicts; sessions.put(spark, p) }
       f(p)
     }
 
@@ -47,22 +45,14 @@ object SessionMemo {
   def getOrCompute[V](df: DataFrame, extra: String)(compute: => V): V = {
     val key = (planDigest(df), dataVersionSig(df), extra)
     val spark = df.sparkSession
-    val hit = perSession(spark)(_.verdicts.get(key))
+    val hit = verdicts(spark)(_.get(key))
     if (hit != null) hit.asInstanceOf[V]
     else {
       val v = compute
-      perSession(spark)(_.verdicts.put(key, v.asInstanceOf[AnyRef]))
+      verdicts(spark)(_.put(key, v.asInstanceOf[AnyRef]))
       v
     }
   }
-
-  /** Run `body` (function registration) the first time `tag` is seen for
-    * `spark`; later calls are no-ops. A `body` that throws is retried. */
-  def registerOnce(spark: SparkSession, tag: String)(body: => Unit): Unit =
-    if (!perSession(spark)(_.registered.contains(tag))) {
-      body
-      perSession(spark)(_.registered.add(tag))
-    }
 
   /** Session-independent plan identity: md5 of the canonicalized plan's
     * string PLUS its structural hashCode. The string alone is not faithful

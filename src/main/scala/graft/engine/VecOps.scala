@@ -2,9 +2,13 @@ package graft.engine
 
 import org.apache.spark.sql.catalyst.util.ArrayData
 
-/** Static vector kernels called from generated code (Expressions.VecDotExpr
-  * / VecCosineExpr). Operate directly on ArrayData — for UnsafeArrayData
-  * this reads doubles straight out of the row buffer, no boxing, no copy.
+/** Static vector kernels called from generated code: by
+  * Expressions.VecDotExpr / VecCosineExpr, and by the `StaticInvoke`s of
+  * the vector rows of GraftFunctions.functions and of the IVF, PQ and
+  * dedup operators (GraftFunctions.kernel), which pass centroid matrices
+  * and codebooks as plan-embedded constants. Operate directly on
+  * ArrayData — for UnsafeArrayData this reads doubles straight out of the
+  * row buffer, no boxing, no copy.
   *
   * Accumulation is strictly left-to-right so results are bit-identical to
   * the HOF `aggregate(zip_with(a, b, (x,y) -> x*y), 0D, (acc,v) -> acc+v)`
@@ -36,7 +40,7 @@ object VecOps {
   /** Cosine over ARRAY<FLOAT> ArrayData, reading floats in place — the
     * exact accumulation order of AnnLsh.cosine (fused dot/na/nb loop,
     * min-length, float→double widening per element), so the native
-    * expression reproduces the legacy `cosine_f` UDF bit-for-bit without
+    * call reproduces AnnLsh.cosine bit-for-bit without
     * the per-row array<float>→array<double> Cast allocation.
     */
   def cosineFloat(a: ArrayData, b: ArrayData): Double = {
@@ -124,6 +128,11 @@ object VecOps {
     ArrayData.toArrayData(idx)
   }
 
+  /** PQ training assignment: the nearest code of subvector `sv` in the
+    * `sub`-th codebook. */
+  def pqAssign(books: Array[Array[Array[Double]]], sub: Int, sv: ArrayData): Int =
+    nearestSubCode(books(sub), sv)
+
   /** Nearest code in one PQ subspace codebook by L2² — the exact loop of
     * the boxed assignment UDF it replaces (first minimum on ties).
     */
@@ -207,7 +216,7 @@ object VecOps {
     * vector, like Model.nearest there).
     */
   def ivfResidual(v: ArrayData, cents: Array[Array[Double]],
-                  unitCents: Array[Array[Double]]): Array[Double] = {
+                  unitCents: Array[Array[Double]]): ArrayData = {
     val nv = l2normalize(v)
     var best = 0; var bestD = Double.MaxValue
     var c = 0
@@ -220,7 +229,7 @@ object VecOps {
     val out = new Array[Double](nv.length)
     var i = 0
     while (i < nv.length) { out(i) = nv(i) - ch(i); i += 1 }
-    out
+    ArrayData.toArrayData(out)
   }
 
   /** cosineDistCent over a primitive vector (same op order). */
@@ -234,21 +243,6 @@ object VecOps {
       i += 1
     }
     if (na == 0 || nb == 0) 1.0 else 1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  /** Cluster index of the normalized vector (the argmin inside ivfResidual,
-    * exposed for the combined assign+encode row).
-    */
-  def ivfCluster(v: ArrayData, cents: Array[Array[Double]]): Int = {
-    val nv = l2normalize(v)
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < cents.length) {
-      val d = cosineDistArr(cents(c), nv)
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
   }
 
   /** Combined IVFADC index row: (cluster, residual PQ codes) in one pass —
@@ -311,7 +305,7 @@ object SetOps {
 }
 
 /** Static bitset kernels for the plan-embedded Bloom filter
-  * (Expressions.BloomAllSetExpr). The filter is a fixed Array[Long] —
+  * (Dedup.bloomDedup). The filter is a fixed Array[Long] —
   * m/64 words regardless of corpus size — so it rides in the serialized
   * plan like the ANN codebooks.
   */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.engine.SessionMemo
 
 /** Random-hyperplane LSH for cosine similarity over embedding vectors —
@@ -98,18 +98,10 @@ object AnnLsh {
     if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "annlsh") {
-    val u = spark.udf
-    // primitive-array signatures: Spark passes array<float/double> unboxed
-    u.register("ann_band_sigs", (v: Array[Float]) => bandSignatures(v))
-    u.register("ann_band_sigs_scaled",
-      (v: Array[Float], bits: Int) => bandSignatures(v, bits))
-    // SQL-surface convenience (the registered queries verify through the
-    // codegen VecCosineFloatExpr, which OperatorPropertySpec pins
-    // bit-identical to this body)
-    u.register("cosine_f", (a: Array[Float], b: Array[Float]) => cosine(a, b))
-    u.register("cosine_d", (a: Array[Double], b: Array[Double]) => cosineD(a, b))
-  }
+  /** Band signatures at `bits` bits per band, as a Column function (the
+    * embedding_neardup_lsh bucket key). */
+  val bandSigsScaledUdf = org.apache.spark.sql.functions.udf(
+    (v: Array[Float], bits: Int) => bandSignatures(v, bits)).withName("ann_band_sigs_scaled")
 
   /** Memoized row count per input version: the LSH bit width derives from
     * the corpus size, and bench reps / twin queries must not pay the count

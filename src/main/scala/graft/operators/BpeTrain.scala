@@ -41,11 +41,12 @@ object BpeTrain {
       .withColumn("syms", expr(s"concat(split(w, ''), array('$EndMark'))"))
       .select("syms", "freq")
 
+  private val fuse = udf((syms: Seq[String], a: String, b: String) => fusePair(syms, a, b))
+    .withName("bpe_fuse")
+
   /** Learn `merges` rules. Returns them in training order. */
   def train(spark: SparkSession, docs: DataFrame, textCol: String,
             merges: Int): Seq[(String, String)] = {
-    spark.udf.register("bpe_fuse",
-      (syms: Seq[String], a: String, b: String) => fusePair(syms, a, b))
     var cur = wordFreq(docs, textCol).localCheckpoint()
     val rules = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var i = 0
@@ -67,7 +68,7 @@ object BpeTrain {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         rules += ((a, b))
         cur = cur.withColumn("syms",
-          callUDF("bpe_fuse", col("syms"), lit(a), lit(b))).localCheckpoint()
+          fuse(col("syms"), lit(a), lit(b))).localCheckpoint()
       }
       i += 1
     }

@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.SessionMemo
+import graft.engine.{GraftFunctions, SessionMemo}
 
 /** Near-duplicate detection primitives for training-data pipelines: MinHash
   * signatures over n-gram shingles, SimHash, and token-set Jaccard. Pure
-  * Scala (unit-testable); Spark surface is registered UDFs + the bucketed
-  * plans in graft.queries.DedupQueries.
+  * Scala (unit-testable); Spark surface is the codegen expressions and
+  * UDF values the bucketed plans in graft.queries.DedupQueries apply.
   *
   * Scale design: all pairwise work is LSH-bucketed — signatures shuffle once
   * on (band, bandHash) and only bucket collisions generate candidate pairs,
@@ -301,8 +301,8 @@ object Dedup {
     * an mBits-wide bitset — `posCol` yields each row's k bit positions, the
     * distinct positions (≤ mBits values, REGARDLESS of corpus size) come
     * back to the driver, and the O(KB) word array rides in the probe plan
-    * (Expressions.BloomAllSetExpr), making the probe pass map-only with no
-    * shuffle and no broadcast of corpus keys.
+    * (BitsetOps.allSet over a plan-embedded constant), making the probe
+    * pass map-only with no shuffle and no broadcast of corpus keys.
     *
     * Guarantees: no false negatives (a clear bit proves the key is new), so
     * every true duplicate is dropped; false positives drop ~(1-e^{-kn/m})^k
@@ -320,9 +320,8 @@ object Dedup {
         require(p >= 0 && p < mBits, s"position $p outside [0, $mBits)")
         words(p >>> 6) |= 1L << (p & 63)
       }
-    val maybePresent = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.BloomAllSetExpr(
-        org.apache.spark.sql.GraftBridge.expression(posCol), words))
+    val maybePresent = GraftFunctions.kernel(
+      graft.engine.BitsetOps, "allSet", BooleanType, GraftFunctions.const(words), posCol)
     probe.where(!maybePresent)
   }
 
@@ -379,27 +378,12 @@ object Dedup {
   def hintIf(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
 
-  def register(spark: SparkSession): Unit = SessionMemo.registerOnce(spark, "dedup") {
-    val u = spark.udf
-    u.register("minhash_bands", (t: String) => minHashBands(t))
-    // bands from an already-built shingle-hash array: min over a multiset
-    // is order- and duplicate-invariant, so feeding the SORTED DISTINCT
-    // array (shingle_hashes_sorted) yields bit-identical bands to
-    // minhash_bands(text) — lets a plan tokenize/shingle ONCE and derive
-    // both the banding and the verify payload from the same checkpoint
-    u.register("minhash_bands_hashed",
-      (shs: Seq[Long]) => bandHashes(minHashSignature(shs.toArray)))
-    u.register("minhash_sig", (t: String) => minHashSignature(shingleHashes(t)))
-    u.register("minhash_bbit", (t: String, b: Int) =>
-      bBitSignature(minHashSignature(shingleHashes(t)), b))
-    u.register("bbit_similarity", (pa: Seq[Long], pb: Seq[Long], n: Int, b: Int) =>
-      bBitSimilarity(pa.toArray, pb.toArray, n, b))
-    u.register("shingle_jaccard", (a: String, b: String) => shingleJaccard(a, b))
-    u.register("shingle_hashes_sorted", (t: String) => shingleHashesSorted(t))
-    u.register("token_jaccard", (a: String, b: String) => tokenJaccard(a, b))
-    u.register("simhash64", (t: String) => simHash64(t))
-    u.register("simhash_chunks", (t: String) => simHashChunks(simHash64(t)))
-    u.register("simhash_block_keys", (t: String) => simHashBlockKeys(simHash64(t)))
-    u.register("hamming64", (a: Long, b: Long) => hamming(a, b))
-  }
+  // The SimHash kernels the dedup_simhash plan applies, as Column
+  // functions; the names label the plan's calls.
+  val simHash64Udf = udf((t: String) => simHash64(t)).withName("simhash64")
+  val simHashChunksUdf =
+    udf((t: String) => simHashChunks(simHash64(t))).withName("simhash_chunks")
+  val simHashBlockKeysUdf =
+    udf((t: String) => simHashBlockKeys(simHash64(t))).withName("simhash_block_keys")
+  val hamming64Udf = udf((a: Long, b: Long) => hamming(a, b)).withName("hamming64")
 }

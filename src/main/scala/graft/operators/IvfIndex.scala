@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
+import graft.engine.{GraftFunctions, VecOps}
 
 /** IVF (inverted-file) approximate nearest neighbor: a coarse k-means
   * quantizer partitions the corpus into cells; queries probe only the
@@ -77,7 +79,7 @@ object IvfIndex {
 
     val dim = centroids.headOption.map(_.length).getOrElse(0)
     for (_ <- 1 to iters) {
-      // native codegen assignment (engine.Expressions.NearestCentroidExpr):
+      // native codegen assignment (nearestCentroidCol):
       // the centroid matrix rides in the plan and the kernel reads doubles
       // straight from the row buffer — no Seq boxing per row, identical
       // argmin to the former UDF (same op order, first-min ties)
@@ -148,7 +150,7 @@ object IvfIndex {
   def kFor(n: Long): Int =
     math.max(8L, math.min(1L << 20, n / 2048L)).toInt
 
-  /** Ceiling of the FLAT quantizer's mechanics: NearestCentroidExpr embeds
+  /** Ceiling of the FLAT quantizer's mechanics: nearestCentroidCol embeds
     * the k×dim matrix in the serialized plan (4096×64 doubles ≈ 2 MB — the
     * most that should ever ship in a plan) and assignment scans all k
     * centroids per row. Past this, use trainTwoLevel/assignTwoLevel, whose
@@ -221,7 +223,7 @@ object IvfIndex {
     for (_ <- 1 to iters) {
       val joined = joinCodebooks(assigned, cb, fineBytes, "inner")
         .withColumn("__tl_f",
-          graft.engine.Expressions.nearestInCodebook(col("v"), col("__tl_cents")))
+          nearestInCodebook(col("v"), col("__tl_cents")))
       // Per-(cell, fine) dim-wise sums in ONE aggregate with a 2·dim-column
       // buffer, fully distributed (at k = 2²⁰ the means table is 1M rows of
       // dim-arrays: fine as a shuffle, fatal as a collect). Replaces the
@@ -298,7 +300,7 @@ object IvfIndex {
         model.codebooks, model.fineBytes, "left")
       .withColumn(outCol,
         col("__tl_c").cast("long") * model.kf +
-          graft.engine.Expressions.nearestInCodebook(v, col("__tl_cents")).cast("long"))
+          nearestInCodebook(v, col("__tl_cents")).cast("long"))
       .drop("__tl_c", "__tl_cents")
 
   /** Join rows (carrying `__tl_c`) to their coarse cell's fine codebook.
@@ -315,23 +317,27 @@ object IvfIndex {
     rows.join(side, Seq("__tl_c"), joinType)
   }
 
-  /** Native codegen centroid-assignment columns (no per-row boxing). */
-  private[operators] def nearestCentroidCol(
-      v: org.apache.spark.sql.Column, cents: Array[Array[Double]]) =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.NearestCentroidExpr(
-        org.apache.spark.sql.GraftBridge.expression(v), cents))
+  /** Native codegen centroid-assignment columns (no per-row boxing): the
+    * k×dim centroid matrix (a few KB) rides in the serialized plan, and the
+    * kernel reads the vector's doubles straight from the row buffer. */
+  private[operators] def nearestCentroidCol(v: Column, cents: Array[Array[Double]]) =
+    GraftFunctions.kernel(VecOps, "nearestCentroid", IntegerType, v, GraftFunctions.const(cents))
 
-  private[operators] def nearestCentroidsCol(
-      v: org.apache.spark.sql.Column, cents: Array[Array[Double]], n: Int) =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.NearestCentroidsExpr(
-        org.apache.spark.sql.GraftBridge.expression(v), cents, n))
+  /** The n nearest centroid indices (the probe list), distance asc with
+    * index tie-break — ordering-identical to Model.nearest. */
+  private[operators] def nearestCentroidsCol(v: Column, cents: Array[Array[Double]], n: Int) =
+    GraftFunctions.kernel(VecOps, "nearestCentroids", ArrayType(IntegerType, containsNull = false),
+      v, GraftFunctions.const(cents), lit(n))
+
+  /** Argmin over a codebook carried in a COLUMN (array<array<double>>) —
+    * the two-level quantizer's fine level, whose matrix arrives per row
+    * from a join on the coarse cell instead of riding in the plan. */
+  private def nearestInCodebook(v: Column, cents: Column) =
+    GraftFunctions.kernel(VecOps, "nearestInCodebook", IntegerType, v, cents)
 
   /** Top-k nearest neighbors for each query id, probing nprobe IVF cells. */
   def search(spark: SparkSession, emb: DataFrame, queryIds: Seq[Long],
              model: Model, nprobe: Int, topK: Int): DataFrame = {
-    AnnLsh.register(spark)
     val corpus = emb
       .withColumn("cluster", nearestCentroidCol(col("v"), model.centroids))
       .select(col("id").as("nid"), col("cluster"), col("v").as("nv"))

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import graft.engine.{GraftFunctions, VecOps}
 
 /** IVF-PQ: the composed production ANN shape — a coarse quantizer prunes
   * the corpus to `nprobe` cells per query, PQ codes (m ints/row) score the
@@ -43,13 +45,12 @@ object IvfPq {
     */
   def trainResidual(spark: SparkSession, emb: DataFrame, ivf: IvfIndex.Model,
                     m: Int, k: Int, iters: Int): ProductQuantizer.PQModel = {
-    // native codegen residual map (engine.Expressions.IvfResidualExpr):
-    // normalize → nearest cell → subtract unit centroid, one primitive pass
+    // native codegen residual map (VecOps.ivfResidual): normalize →
+    // nearest cell → subtract unit centroid, one primitive pass
     val unitCents = ivf.centroids.map(c => ProductQuantizer.l2normalize(c.toSeq))
-    val resCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.IvfResidualExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("v")),
-        ivf.centroids, unitCents))
+    val resCol = GraftFunctions.kernel(VecOps, "ivfResidual",
+      ArrayType(DoubleType, containsNull = false),
+      col("v"), GraftFunctions.const(ivf.centroids), GraftFunctions.const(unitCents))
     ProductQuantizer.train(spark,
       emb.select(col("id"), resCol.as("v")),
       m, k, iters, normalizeInput = false)
@@ -66,14 +67,16 @@ object IvfPq {
     import org.apache.spark.sql.expressions.Window
     require(!pqRes.normalize, "searchResidual needs a residual-trained model")
 
-    // native codegen assign+encode (engine.Expressions.IvfResidualEncodeExpr):
-    // the nearest-cell argmin runs ONCE for both the cluster id and the
+    // native codegen assign+encode (VecOps.ivfResidualEncode): the
+    // nearest-cell argmin runs ONCE for both the cluster id and the
     // residual codes (the UDF pair ran it twice per row)
     val unitCents = ivf.centroids.map(c => ProductQuantizer.l2normalize(c.toSeq))
-    val aeCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.IvfResidualEncodeExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("v")),
-        ivf.centroids, unitCents, pqRes.codebooks, pqRes.dsub))
+    val aeCol = GraftFunctions.kernel(VecOps, "ivfResidualEncode",
+      StructType(Seq(
+        StructField("cluster", IntegerType, nullable = false),
+        StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false))),
+      col("v"), GraftFunctions.const(ivf.centroids), GraftFunctions.const(unitCents),
+      GraftFunctions.const(pqRes.codebooks), lit(pqRes.dsub))
     val index = emb.select(col("id").as("nid"), aeCol.as("ac"))
       .select(col("nid"), col("ac.cluster").as("cluster"), col("ac.codes").as("codes"))
 
@@ -93,12 +96,9 @@ object IvfPq {
     }
     val tables = probePairs.map { case ((qid, c), t) =>
       ((qidx(qid).toLong << 32) | c.toLong) -> t }.toMap
-    val adcCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.PqAdcExpr(
-        org.apache.spark.sql.GraftBridge.expression(
-          shiftleft(col("qidx").cast("long"), 32)
-            .bitwiseOR(col("cluster").cast("long"))),
-        org.apache.spark.sql.GraftBridge.expression(col("codes")), tables))
+    val adcCol = ProductQuantizer.adcCol(
+      shiftleft(col("qidx").cast("long"), 32).bitwiseOR(col("cluster").cast("long")),
+      col("codes"), tables)
 
     val probes = broadcast(spark.createDataFrame(
       probePairs.map { case ((qid, c), _) => (qid, c, qidx(qid)) }.toSeq.sorted)
@@ -131,23 +131,16 @@ object IvfPq {
     import org.apache.spark.sql.expressions.Window
 
     // the stored index: cluster id + m-int code per vector — both columns
-    // native codegen (NearestCentroidExpr / PqEncodeExpr), no per-row boxing
-    val encCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.PqEncodeExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("v")),
-        pq.codebooks, pq.dsub, pq.normalize))
+    // native codegen, no per-row boxing
     val index = emb.select(col("id").as("nid"), col("v"))
       .withColumn("cluster", IvfIndex.nearestCentroidCol(col("v"), ivf.centroids))
-      .withColumn("codes", encCol)
+      .withColumn("codes", ProductQuantizer.encodeCol(col("v"), pq))
       .select("nid", "cluster", "codes")
 
     val queries = emb.where(col("id").isin(queryIds: _*))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
     val tables = queries.map { case (qid, qv) => qid -> pq.adcTable(qv) }.toMap
-    val adcCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.PqAdcExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("qid")),
-        org.apache.spark.sql.GraftBridge.expression(col("codes")), tables))
+    val adcCol = ProductQuantizer.adcCol(col("qid"), col("codes"), tables)
 
     // each query probes its nprobe nearest cells — the equi-join on
     // cluster IS the partition pruning

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+import graft.engine.{GraftFunctions, VecOps}
 
 /** Product quantization (PQ) for approximate nearest neighbor — the index-
   * footprint scale path next to IVF (IvfIndex) and hyperplane LSH (AnnLsh).
@@ -95,12 +97,11 @@ object ProductQuantizer {
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
 
-    // native codegen normalize (engine.Expressions.L2NormalizeExpr) — the
-    // same arithmetic as l2normalize without the per-row Seq boxing
+    // native codegen normalize (VecOps.l2normalized) — the same
+    // arithmetic as l2normalize without the per-row Seq boxing
     val nemb = if (normalizeInput)
-      emb.select(col("id"), org.apache.spark.sql.GraftBridge.column(
-        graft.engine.Expressions.L2NormalizeExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("v")))).as("v"))
+      emb.select(col("id"), GraftFunctions.kernel(VecOps, "l2normalized",
+        ArrayType(DoubleType, containsNull = false), col("v")).as("v"))
     else emb.select("id", "v")
 
     // deterministic init: evenly-spaced ids seed every subspace's codebook
@@ -119,14 +120,11 @@ object ProductQuantizer {
       .as(Seq("sub", "sv")))
 
     for (_ <- 1 to iters) {
-      // native codegen code-assignment (engine.Expressions.PqAssignExpr):
-      // same L2² loop and first-min tie-break as the former boxed UDF, but
-      // reading the subvector straight from the row buffer
-      val assign = org.apache.spark.sql.GraftBridge.column(
-        graft.engine.Expressions.PqAssignExpr(
-          org.apache.spark.sql.GraftBridge.expression(col("sub")),
-          org.apache.spark.sql.GraftBridge.expression(col("sv")),
-          codebooks))
+      // native codegen code-assignment (VecOps.pqAssign): same L2² loop
+      // and first-min tie-break as the former boxed UDF, but reading the
+      // subvector straight from the row buffer
+      val assign = GraftFunctions.kernel(VecOps, "pqAssign", IntegerType,
+        GraftFunctions.const(codebooks), col("sub"), col("sv"))
       val sums = subs
         .withColumn("c", assign)
         .select(col("sub"), col("c"), posexplode(col("sv")).as(Seq("d", "x")))
@@ -144,15 +142,25 @@ object ProductQuantizer {
   }
 
   /** Map-only encode: (id, codes array<int>) — the m-byte index rows.
-    * Native codegen (engine.Expressions.PqEncodeExpr): encodeOne's exact
+    * Native codegen (VecOps.pqEncode): encodeOne's exact
     * subspace loops reading straight from the row buffer; the codebook
     * matrix (m·k·dsub doubles) rides in the plan like the IVF centroids.
     */
   def encode(spark: SparkSession, emb: DataFrame, model: PQModel): DataFrame =
-    emb.select(col("id"), org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.PqEncodeExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("v")),
-        model.codebooks, model.dsub, model.normalize)).as("codes"))
+    emb.select(col("id"), encodeCol(col("v"), model).as("codes"))
+
+  /** The m PQ codes of vector column `v` against the model's codebooks. */
+  private[operators] def encodeCol(v: Column, model: PQModel): Column =
+    GraftFunctions.kernel(VecOps, "pqEncode", ArrayType(IntegerType, containsNull = false),
+      v, GraftFunctions.const(model.codebooks), lit(model.dsub), lit(model.normalize))
+
+  /** ADC distance of the `codes` column against the per-key table map
+    * (`key` = qid, or a packed query/cell key): Q·m·k doubles, a few
+    * hundred KB at most, riding in the plan like the centroid matrices. */
+  private[operators] def adcCol(key: Column, codes: Column,
+                                tables: Map[Long, Array[Array[Double]]]): Column =
+    GraftFunctions.kernel(VecOps, "adcLookup", DoubleType,
+      GraftFunctions.const(tables), key, codes)
 
   /** Top-k per query id: ADC scan over the code table, then exact cosine
     * rerank of the top rerank·topK candidates.
@@ -172,12 +180,9 @@ object ProductQuantizer {
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1))
     val tables = queries.map { case (qid, qv) => qid -> model.adcTable(qv) }.toMap
 
-    // native codegen ADC (engine.Expressions.PqAdcExpr): the Q·m·k table
-    // map rides in the plan; each scanned row costs m primitive lookups
-    val adcCol = org.apache.spark.sql.GraftBridge.column(
-      graft.engine.Expressions.PqAdcExpr(
-        org.apache.spark.sql.GraftBridge.expression(col("qid")),
-        org.apache.spark.sql.GraftBridge.expression(col("codes")), tables))
+    // native codegen ADC: the Q·m·k table map rides in the plan; each
+    // scanned row costs m primitive lookups
+    val adc = adcCol(col("qid"), col("codes"), tables)
 
     val qdf = broadcast(
       spark.createDataFrame(queries.map(q => Tuple1(q._1)).toSeq).toDF("qid"))
@@ -185,7 +190,7 @@ object ProductQuantizer {
 
     val wApprox = Window.partitionBy("qid").orderBy(col("adist").asc, col("id"))
     val cands = codes.crossJoin(qdf)
-      .withColumn("adist", adcCol)
+      .withColumn("adist", adc)
       .withColumn("arn", row_number().over(wApprox))
       .where(col("arn") <= topK * rerank)
       .select(col("qid"), col("id").as("nid"))

@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsOps {
 
+  /** The KLL quantile sketch at q = 0.1, 0.5, 0.9, 0.99, shared by
+    * stats_quantile_sketch and its checked twin. */
+  private val approxQuantiles = udaf(graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9, 0.99)))
+    .withName("approx_quantiles")
+
   /** Shared oracle for corpus_curation_v3 and its streaming twin. */
   private val curationV3OracleSql: String =
     """WITH base AS (SELECT doc_id, source, text FROM documents),
@@ -383,10 +388,10 @@ object AnalyticsOps {
     QueryDef(
       "agg_topk_custom",
       (s, d) => {
-        s.udf.register("topk3", udaf(graft.operators.TopK.topK(3)))
+        val topk3 = udaf(graft.operators.TopK.topK(3)).withName("topk3")
         T(s, d, "lineitem")
           .groupBy("l_returnflag")
-          .agg(expr("topk3(l_extendedprice, l_orderkey, l_linenumber)").as("top3"))
+          .agg(topk3(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")).as("top3"))
           .orderBy("l_returnflag")
       },
       Some("""SELECT l_returnflag,
@@ -406,11 +411,11 @@ object AnalyticsOps {
     QueryDef(
       "stats_approx_distinct",
       (s, d) => {
-        s.udf.register("hll_distinct", udaf(graft.operators.Hll.hll))
+        val hllDistinct = udaf(graft.operators.Hll.hll).withName("hll_distinct")
         T(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
-            expr("hll_distinct(CAST(l_orderkey AS STRING))").as("est"),
+            hllDistinct(col("l_orderkey").cast("string")).as("est"),
             countDistinct(col("l_orderkey")).as("exact_orders"))
           .select(col("l_returnflag"), col("exact_orders"),
             (abs(col("est") - col("exact_orders")).cast("double") /
@@ -432,11 +437,9 @@ object AnalyticsOps {
     QueryDef(
       "stats_quantile_sketch",
       (s, d) => {
-        s.udf.register("approx_quantiles",
-          udaf(graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9, 0.99))))
         T(s, d, "lineitem")
           .groupBy("l_returnflag")
-          .agg(expr("approx_quantiles(l_extendedprice)").as("price_quantiles"))
+          .agg(approxQuantiles(col("l_extendedprice")).as("price_quantiles"))
           .select(col("l_returnflag"),
             posexplode(col("price_quantiles")).as(Seq("q_idx", "q_value")))
           .orderBy("l_returnflag", "q_idx")
@@ -452,12 +455,10 @@ object AnalyticsOps {
     QueryDef(
       "stats_quantile_sketch_checked",
       (s, d) => {
-        s.udf.register("approx_quantiles",
-          udaf(graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9, 0.99))))
         val li = T(s, d, "lineitem").select("l_returnflag", "l_extendedprice")
         val qArr = array(lit(0.1), lit(0.5), lit(0.9), lit(0.99))
         val est = li.groupBy("l_returnflag")
-          .agg(expr("approx_quantiles(l_extendedprice)").as("qv"))
+          .agg(approxQuantiles(col("l_extendedprice")).as("qv"))
           .select(col("l_returnflag"), posexplode(col("qv")).as(Seq("q_idx", "est")))
           .withColumn("q", element_at(qArr, col("q_idx") + 1))
         broadcast(est).join(li, "l_returnflag")
@@ -486,10 +487,10 @@ object AnalyticsOps {
     QueryDef(
       "stats_cms_counts",
       (s, d) => {
-        s.udf.register("cms_4x1024", udaf(graft.operators.CountMin.agg(4, 1024)))
+        val cms = udaf(graft.operators.CountMin.agg(4, 1024)).withName("cms_4x1024")
         val toks = T(s, d, "documents")
           .select(explode(split(col("text"), " +")).as("tok"))
-        val sketch = toks.agg(expr("cms_4x1024(tok)").as("cms"))
+        val sketch = toks.agg(cms(col("tok")).as("cms"))
         val top = toks.groupBy("tok").agg(count(lit(1)).as("exact_count"))
           .orderBy(col("exact_count").desc, col("tok")).limit(20)
         top.crossJoin(broadcast(sketch))
@@ -1340,7 +1341,7 @@ object AnalyticsOps {
     QueryDef("stats_kmv_overlap",
       (s, d) => {
         val K = 64; val H = 281474976710656L // 2^48
-        s.udf.register("kmv64", udaf(graft.operators.Kmv.agg(K)))
+        val kmv64 = udaf(graft.operators.Kmv.agg(K)).withName("kmv64")
         val sh = T(s, d, "documents")
           .withColumn("ws", expr("filter(split(text, ' +'), x -> x != '')"))
           .select(col("source"), explode(expr(
@@ -1348,7 +1349,7 @@ object AnalyticsOps {
               |  THEN transform(sequence(1, size(ws) - 2), i -> concat_ws(' ', slice(ws, i, 3)))
               |  ELSE array(concat_ws(' ', ws)) END""".stripMargin)).as("g"))
           .withColumn("h", expr("cast(conv(substring(md5(g), 1, 12), 16, 10) as bigint)"))
-        val sk = sh.groupBy("source").agg(expr("kmv64(h)").as("kmv"))
+        val sk = sh.groupBy("source").agg(kmv64(col("h")).as("kmv"))
         def est(c: String) =
           s"""CASE WHEN size($c) < $K THEN cast(size($c) AS BIGINT)
              |  ELSE (${K - 1}L * ${H}L) div greatest(1L, element_at($c, $K)) END""".stripMargin

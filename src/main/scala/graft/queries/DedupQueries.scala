@@ -713,7 +713,6 @@ object DedupQueries {
     // MinHash + LSH banding: one shuffle on (band, hash); collisions only
     QueryDef("dedup_minhash_lsh",
       (s, d) => {
-        Dedup.register(s)
         val docs = docsWithDups(s, d)
         // the BROADCAST side is the hash-array payload below (~8 bytes per
         // token), not the text — estimate those bytes or a 10× corpus
@@ -724,10 +723,10 @@ object DedupQueries {
         // Tokenize + shingle + hash ONCE: the sorted distinct shingle-hash
         // array is both the verify payload AND the banding input (min over
         // a multiset is order/duplicate-invariant, so bands are
-        // bit-identical to minhash_bands(text)). Before the checkpoint the
+        // bit-identical to Dedup.minHashBands(text)). Before the checkpoint the
         // corpus text was scanned and shingled three times (banding + both
         // verify sides); at 30× that was the dominant CPU. Both steps run
-        // as native codegen expressions — same arithmetic as the UDFs,
+        // as native codegen expressions — same arithmetic as the Scala kernels,
         // minus the converter boxing (DedupSpec pins bit-identity).
         val payload = docs.withColumn(
           "shs", graft.engine.Expressions.shingleHashesSortedNative(
@@ -750,7 +749,7 @@ object DedupQueries {
           .repartition(s.sparkContext.defaultParallelism)
         // the verify then merge-counts |A ∩ B| with the native kernel
         // instead of re-deriving boxed Set[Long]s per candidate pair (the
-        // old shingle_jaccard UDF path; identical sets, identical double
+        // old Dedup.shingleJaccard UDF path; identical sets, identical double
         // division, so the output is bit-equal)
         cand
           .join(Dedup.hintIf(payload.select(col("doc_id").as("a"), col("shs").as("sha")), small), "a")
@@ -919,14 +918,13 @@ object DedupQueries {
     // (SimHashBlockSpec) while occupancy stays O(1) into the billions.
     QueryDef("dedup_simhash",
       (s, d) => {
-        Dedup.register(s)
         val base = docsWithDups(s, d)
         val useBlocks =
           graft.operators.AnnLsh.memoizedCount(base) > Dedup.SimHashBlockThreshold
-        val keyUdf = if (useBlocks) "simhash_block_keys" else "simhash_chunks"
+        val keyUdf = if (useBlocks) Dedup.simHashBlockKeysUdf else Dedup.simHashChunksUdf
         val sigs = base
-          .withColumn("sh", callUDF("simhash64", col("text")))
-          .withColumn("chunks", callUDF(keyUdf, col("text")))
+          .withColumn("sh", Dedup.simHash64Udf(col("text")))
+          .withColumn("chunks", keyUdf(col("text")))
         val buckets = sigs.select(col("doc_id"), col("sh"),
           posexplode(col("chunks")).as(Seq("chunk", "ch")))
         buckets.as("x").join(buckets.as("y"),
@@ -935,7 +933,7 @@ object DedupQueries {
           .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
             col("x.sh").as("sha"), col("y.sh").as("shb"))
           .distinct()
-          .withColumn("hamming", callUDF("hamming64", col("sha"), col("shb")))
+          .withColumn("hamming", Dedup.hamming64Udf(col("sha"), col("shb")))
           .where(col("hamming") <= 3)
           .select("a", "b", "hamming")
           .orderBy("a", "b")
@@ -1027,7 +1025,6 @@ object DedupQueries {
     // embedding cosine near-dup, brute-force verification (oracle-able)
     QueryDef("embedding_neardup_pairs",
       (s, d) => {
-        AnnLsh.register(s)
         graft.engine.GraftFunctions.register(s)
         val e = embWithDups(s, d)
         // the nested-loop pair evaluation is CPU-bound: spread the streamed
@@ -1039,7 +1036,7 @@ object DedupQueries {
           // (PlanShapeSpec lints every registered query for this)
           .join(broadcast(e.select(col("vec_id").as("b"), col("ve").as("vb")).as("y")),
             col("a") < col("b"))
-          // native codegen kernel, not the cosine_d UDF: this filter runs
+          // native codegen kernel, not a Scala UDF: this filter runs
           // on every one of the n²/2 joined pairs — the hottest vector
           // arithmetic in the repo (bit-identical accumulation order)
           .withColumn("cos", round(expr("vec_cosine_native(va, vb)"), 6))
@@ -1063,7 +1060,6 @@ object DedupQueries {
     // embedding near-dup via hyperplane LSH (the scale path: bucket join)
     QueryDef("embedding_neardup_lsh",
       (s, d) => {
-        AnnLsh.register(s)
         val e = embWithDups(s, d)
           .select(col("vec_id"), col("ve").cast("array<float>").as("vf"))
         // bucket width scales with the corpus: a fixed 8-bit band turns the
@@ -1073,7 +1069,7 @@ object DedupQueries {
         // The count is memoized per canonicalized plan — one job ever.
         val bits = AnnLsh.bitsFor(AnnLsh.memoizedCount(e))
         val buckets = e
-          .withColumn("sig", explode(callUDF("ann_band_sigs_scaled", col("vf"), lit(bits))))
+          .withColumn("sig", explode(AnnLsh.bandSigsScaledUdf(col("vf"), lit(bits))))
           .select("vec_id", "sig")
         // candidates carry ids ONLY through the bucket join + distinct
         // (shuffling the vectors with every band collision is the cost at
@@ -1090,10 +1086,12 @@ object DedupQueries {
           .join(Dedup.hintIf(e.select(col("vec_id").as("a"), col("vf").as("va")), small), "a")
           .join(Dedup.hintIf(e.select(col("vec_id").as("b"), col("vf").as("vb")), small), "b")
           // candidate-verify cosine as a codegen kernel over the float
-          // arrays in place — bit-identical to the cosine_f UDF
-          // (OperatorPropertySpec), no Array[Float] encoder boxing per pair
-          .withColumn("cos", round(
-            graft.engine.Expressions.vecCosineFloat(col("va"), col("vb")), 6))
+          // arrays in place — bit-identical to AnnLsh.cosine
+          // (OperatorPropertySpec), no Array[Float] encoder boxing per pair;
+          // the no-op casts keep a double array from being read as floats
+          .withColumn("cos", round(graft.engine.GraftFunctions.kernel(
+            graft.engine.VecOps, "cosineFloat", org.apache.spark.sql.types.DoubleType,
+            col("va").cast("array<float>"), col("vb").cast("array<float>")), 6))
           .where(col("cos") >= 0.9)
           .select("a", "b", "cos")
           .orderBy("a", "b")
@@ -1500,12 +1498,11 @@ object DedupQueries {
     // larger components — exactly what consolidation exists to find.
     QueryDef("dedup_lsh_clusters",
       (s, d) => {
-        Dedup.register(s)
         val docs = docsWithDups(s, d)
         // same one-tokenize structure as dedup_minhash_lsh: the sorted
         // shingle-hash checkpoint feeds banding AND both verify sides, and
         // the verify is the native merge kernel over the same hashed sets
-        // shingle_jaccard compared — identical pair set
+        // Dedup.shingleJaccard compared — identical pair set
         val small = Dedup.fitsBroadcast(docs, rowBytes = Some(
           lit(24L) + size(split(col("text"), " +")).cast("long") * 8L))
         val payload = docs.withColumn(

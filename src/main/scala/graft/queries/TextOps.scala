@@ -184,11 +184,10 @@ object TextOps {
     QueryDef(
       "text_heavy_hitters",
       (s, d) => {
-        s.udf.register("ss_topk",
-          udaf(graft.operators.SpaceSaving.agg(m = 256, k = 10)))
+        val ssTopk = udaf(graft.operators.SpaceSaving.agg(m = 256, k = 10)).withName("ss_topk")
         T(s, d, "documents")
           .select(explode(split(col("text"), " +")).as("tok"))
-          .agg(expr("ss_topk(tok)").as("top"))
+          .agg(ssTopk(col("tok")).as("top"))
           .select(posexplode(col("top")).as(Seq("rank", "entry")))
           .select(col("rank").cast("long").as("rank"),
             col("entry._1").as("tok"), col("entry._2").as("est_count"))
@@ -266,14 +265,13 @@ object TextOps {
       "text_bpe_apply",
       (s, d) => {
         val rules = graft.operators.BpeTrain.train(s, T(s, d, "documents"), "text", 12)
-        val tokenizeDoc = (text: String) => {
+        val tokenizeDoc = udf { (text: String) =>
           val words = text.split(" +").filter(_.nonEmpty)
           val toks = words.flatMap(w => graft.operators.BpeTrain.applyWord(w, rules))
           (toks.length.toLong, toks.mkString(" "))
-        }
-        s.udf.register("bpe_apply_doc", tokenizeDoc)
+        }.withName("bpe_apply_doc")
         T(s, d, "documents")
-          .withColumn("r", callUDF("bpe_apply_doc", col("text")))
+          .withColumn("r", tokenizeDoc(col("text")))
           .select(col("doc_id"),
             col("r._1").as("n_tokens"),
             expr("(CAST(length(regexp_replace(text, ' +', '')) AS BIGINT) * 10000) div r._1")

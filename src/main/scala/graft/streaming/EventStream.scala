@@ -100,14 +100,13 @@ object EventStream {
     * EXACTLY (the stats_cms_counts pattern, inside a watermarked window).
     */
   def hourlyCmsTopUsers(spark: SparkSession, dir: String): DataFrame = {
-    spark.udf.register("cms_user_stream",
-      org.apache.spark.sql.functions.udaf(graft.operators.CountMin.agg(4, 256)))
+    val cms = udaf(graft.operators.CountMin.agg(4, 256)).withName("cms_user_stream")
     val src = eventsSource(spark, dir)
     val events = graft.queries.T.normTs(src.stream())
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(expr("cms_user_stream(CAST(user_id AS STRING))").as("cms"))
+      .agg(cms(col("user_id").cast("string")).as("cms"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         col("cms"))
     val sketches = complete(agg, src)
@@ -140,8 +139,7 @@ object EventStream {
     */
   def hourlyDistinctUsers(spark: SparkSession, dir: String,
                           streaming: Boolean = true): DataFrame = {
-    spark.udf.register("hll_distinct_stream",
-      org.apache.spark.sql.functions.udaf(graft.operators.Hll.hll))
+    val hll = udaf(graft.operators.Hll.hll).withName("hll_distinct_stream")
     val src = if (streaming) Some(eventsSource(spark, dir)) else None
     val events =
       if (!streaming) graft.queries.T.events(spark, dir)
@@ -149,7 +147,7 @@ object EventStream {
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(expr("hll_distinct_stream(CAST(user_id AS STRING))").as("approx_users"),
+      .agg(hll(col("user_id").cast("string")).as("approx_users"),
         count(lit(1)).as("n_events"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         col("approx_users"), col("n_events"))
@@ -195,9 +193,8 @@ object EventStream {
     */
   def hourlyValueQuantiles(spark: SparkSession, dir: String,
                            streaming: Boolean = true): DataFrame = {
-    spark.udf.register("approx_quantiles_stream",
-      org.apache.spark.sql.functions.udaf(
-        graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9))))
+    val quantiles = udaf(graft.operators.QuantileSketch.agg(Array(0.1, 0.5, 0.9)))
+      .withName("approx_quantiles_stream")
     val src = if (streaming) Some(eventsSource(spark, dir)) else None
     val events =
       if (!streaming) graft.queries.T.events(spark, dir)
@@ -205,7 +202,7 @@ object EventStream {
     val agg = events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(expr("approx_quantiles_stream(value)").as("qs"),
+      .agg(quantiles(col("value")).as("qs"),
         count(lit(1)).as("n_events"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("h"),
         posexplode(col("qs")).as(Seq("q_idx", "q_value")), col("n_events"))

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Live demonstration of the simhash bucket-scheme switch at real scale:
@@ -42,7 +43,6 @@ object SimHashScaleDemo {
 
     val meter = new graft.Bench.StageMeter(spark)
 
-    graft.operators.Dedup.register(spark)
     val base = spark.read.parquet(s"$DemoDir/documents.parquet")
       .select("doc_id", "text")
     val perturbed = base.select(
@@ -51,10 +51,11 @@ object SimHashScaleDemo {
     val corpus = base.unionByName(perturbed)
     println(s"corpus docs = ${corpus.count()} (threshold = ${graft.operators.Dedup.SimHashBlockThreshold})")
 
-    def pairsWith(keyUdf: String): DataFrame = {
+    import graft.operators.Dedup.{hamming64Udf, simHash64Udf}
+    def pairsWith(keyUdf: UserDefinedFunction): DataFrame = {
       val sigs = corpus
-        .withColumn("sh", callUDF("simhash64", col("text")))
-        .withColumn("chunks", callUDF(keyUdf, col("text")))
+        .withColumn("sh", simHash64Udf(col("text")))
+        .withColumn("chunks", keyUdf(col("text")))
       val buckets = sigs.select(col("doc_id"), col("sh"),
         posexplode(col("chunks")).as(Seq("chunk", "ch")))
       buckets.as("x").join(buckets.as("y"),
@@ -63,7 +64,7 @@ object SimHashScaleDemo {
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
           col("x.sh").as("sha"), col("y.sh").as("shb"))
         .distinct()
-        .withColumn("hamming", callUDF("hamming64", col("sha"), col("shb")))
+        .withColumn("hamming", hamming64Udf(col("sha"), col("shb")))
         .where(col("hamming") <= 3)
         .select("a", "b", "hamming")
     }
@@ -78,9 +79,9 @@ object SimHashScaleDemo {
       (row.getLong(0), row.getString(1), sec, (meter.snapshot() - s0).shuffleWrite / 1048576.0)
     }
 
-    val (nC, dC, tC, mC) = digest(pairsWith("simhash_chunks"))
+    val (nC, dC, tC, mC) = digest(pairsWith(graft.operators.Dedup.simHashChunksUdf))
     println(f"chunks (4 x 16-bit)   : pairs=$nC digest=$dC wall=$tC%.1fs shuffle=$mC%.1fMB")
-    val (nB, dB, tB, mB) = digest(pairsWith("simhash_block_keys"))
+    val (nB, dB, tB, mB) = digest(pairsWith(graft.operators.Dedup.simHashBlockKeysUdf))
     println(f"blocks (Manku 3-of-6) : pairs=$nB digest=$dB wall=$tB%.1fs shuffle=$mB%.1fMB")
     println(s"outputs identical = ${nC == nB && dC == dB}")
 

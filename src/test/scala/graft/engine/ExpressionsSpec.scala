@@ -91,8 +91,7 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cover.getInt(1) == 81)
   }
 
-  test("minhash/shingle natives are bit-identical to the UDF surface and stay in codegen") {
-    graft.operators.Dedup.register(spark)
+  test("minhash/shingle natives are bit-identical to the Scala kernels and stay in codegen") {
     // deterministic multi-token corpus with repeats (so shingle sets have
     // duplicates to dedup) and short docs (the < n-token edge)
     val docs = spark.range(300).selectExpr(
@@ -103,12 +102,13 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |AS text""".stripMargin)
     val df = docs
       .withColumn("shs_n", Expressions.shingleHashesSortedNative(col("text")))
-      .withColumn("shs_u", callUDF("shingle_hashes_sorted", col("text")))
       .withColumn("bands_n", Expressions.minhashBandsNative(col("shs_n")))
-      .withColumn("bands_u", callUDF("minhash_bands", col("text")))
     df.collect().foreach { r =>
-      assert(r.getSeq[Long](2) == r.getSeq[Long](3), s"shs mismatch doc ${r.getLong(0)}")
-      assert(r.getSeq[Long](4) == r.getSeq[Long](5), s"bands mismatch doc ${r.getLong(0)}")
+      val text = r.getString(1)
+      assert(r.getSeq[Long](2) == graft.operators.Dedup.shingleHashesSorted(text).toSeq,
+        s"shs mismatch doc ${r.getLong(0)}")
+      assert(r.getSeq[Long](3) == graft.operators.Dedup.minHashBands(text).toSeq,
+        s"bands mismatch doc ${r.getLong(0)}")
     }
     // null-in-null-out (the expressions' documented semantic)
     val nr = spark.range(1).select(

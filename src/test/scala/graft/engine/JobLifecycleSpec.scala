@@ -178,6 +178,31 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rejects1 == Map(1L -> "irreparable_geometry"))
   }
 
+  test("degenerate path: an input under a directory with a space runs, and its rewrite is re-validated") {
+    // Spark lists such a file URI-encoded (file:/…/a%20b/…), which the
+    // session memo's input-version signature parses
+    val dir = java.nio.file.Files.createTempDirectory("graft path").resolve("a b")
+    val path = s"$dir/pts.parquet"
+    def writeInput(ids: Seq[Long]): Unit =
+      df("pid BIGINT, lat DOUBLE, lon DOUBLE, v DOUBLE", ids.zipWithIndex.map {
+        case (id, i) => R(id, 37.7 + i * 0.1, -122.4, 1.0) })
+        .write.mode("overwrite").parquet(path)
+    val job = Job("j", "1.0.0", 6, s"$dir/out", Seq(VectorInput(
+      "pts", Some(path), None, None, None, "pid",
+      GeometryType.Point, None, Some("lat"), Some("lon"), Method.Within, Seq("v"))))
+    writeInput(Seq(1L, 2L))
+    val (_, resolved, state) = GraftJob.run(spark, job)
+    assert(state.status == JobStatus.CompletedResolver)
+    GraftJob.write(resolved, s"$dir/out/resolved")
+    assert(spark.read.parquet(s"$dir/out/resolved").count() == 2)
+    // the same path rewritten in place with a duplicate id: the PK verdict
+    // memoized for the first version must not be reused
+    writeInput(Seq(1L, 1L))
+    val e = intercept[GraftJob.JobFailed](GraftJob.run(spark, job))
+    assert(e.state.status == JobStatus.Failed)
+    assert(e.state.errorMessage.exists(_.contains("unique_id")))
+  }
+
   test("quarantine_path parses from yaml and normalizes s3 scheme") {
     val y =
       """name: j

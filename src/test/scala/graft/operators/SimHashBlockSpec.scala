@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -47,10 +48,10 @@ class SimHashBlockSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(shared == 0)
   }
 
-  private def pairsWith(docs: DataFrame, keyUdf: String): Set[(Long, Long, Long)] = {
+  private def pairsWith(docs: DataFrame, keyUdf: UserDefinedFunction): Set[(Long, Long, Long)] = {
     val sigs = docs
-      .withColumn("sh", callUDF("simhash64", col("text")))
-      .withColumn("chunks", callUDF(keyUdf, col("text")))
+      .withColumn("sh", Dedup.simHash64Udf(col("text")))
+      .withColumn("chunks", keyUdf(col("text")))
     val buckets = sigs.select(col("doc_id"), col("sh"),
       posexplode(col("chunks")).as(Seq("chunk", "ch")))
     buckets.as("x").join(buckets.as("y"),
@@ -59,14 +60,13 @@ class SimHashBlockSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
         col("x.sh").as("sha"), col("y.sh").as("shb"))
       .distinct()
-      .withColumn("hamming", callUDF("hamming64", col("sha"), col("shb")))
+      .withColumn("hamming", Dedup.hamming64Udf(col("sha"), col("shb")))
       .where(col("hamming") <= 3)
       .select(col("a"), col("b"), col("hamming").cast("long").as("hamming"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 
   test("verified pair set is scheme-independent on the sf0.001 corpus") {
-    Dedup.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     // plant near-dups: exact copies (hamming 0, guaranteed pairs) and
@@ -75,8 +75,8 @@ class SimHashBlockSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edits = docs.select((col("doc_id") + 200000L).as("doc_id"),
       concat(col("text"), lit(" tail")).as("text"))
     val all = docs.unionByName(copies).unionByName(edits)
-    val chunkPairs = pairsWith(all, "simhash_chunks")
-    val blockPairs = pairsWith(all, "simhash_block_keys")
+    val chunkPairs = pairsWith(all, Dedup.simHashChunksUdf)
+    val blockPairs = pairsWith(all, Dedup.simHashBlockKeysUdf)
     assert(chunkPairs.nonEmpty, "fixture produced no hamming<=3 pairs")
     assert(chunkPairs == blockPairs,
       s"chunk-only: ${(chunkPairs -- blockPairs).take(5)}; " +

@@ -244,6 +244,16 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("building the swept queries binds no SQL name beyond the built-ins and the function table") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    assert(sweptPlans.nonEmpty)
+    val known = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet ++
+      graft.engine.GraftFunctions.functions.map(_._1)
+    val extra = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filterNot(known).distinct.sorted
+    assert(extra.isEmpty, s"query builds registered ${extra.mkString(", ")}")
+  }
+
   test("no registered batch query plans a CartesianProduct") {
     val offenders = sweptPlans.collect {
       case (n, p) if p.toString().contains("CartesianProduct") => n
