@@ -120,18 +120,25 @@ object Validator {
   private val NumericTypes: Set[DataType] =
     Set(IntegerType, LongType, FloatType, DoubleType, ShortType, ByteType)
 
-  def validate(spark: SparkSession, in: VectorInput, df: DataFrame,
-               withGeoJson: Boolean = false): DataFrame = {
+  def validate(spark: SparkSession, in: VectorInput, df: DataFrame): DataFrame = {
     // PK uniqueness (validator.py:15-36) — one aggregate pass, not two
-    // scans. A blocking job that gates every pipeline build, so the verdict
-    // is memoized per input version; a duplicate-id input keeps throwing.
+    // scans. The reference counts `select(uid).distinct()`, where NULL is
+    // one key; count_distinct skips NULL, so the NULLs are counted apart
+    // and add one key when present. A blocking job that gates every
+    // pipeline build, so the verdict is memoized per input version; a
+    // duplicate-id input keeps throwing.
     SessionMemo.getOrCompute(df, s"pk:${in.uniqueId}") {
-      val Array(nRows: Long, nKeys: Long) = df
-        .agg(count(lit(1)), count_distinct(col(in.uniqueId))).head()
+      val id = col(in.uniqueId)
+      val Array(nRows: Long, nNonNull: Long, nDistinct: Long) = df
+        .agg(count(lit(1)), count(id), count_distinct(id)).head()
         .toSeq.map(_.asInstanceOf[Long]).toArray
-      if (nRows != nKeys)
+      val nNull = nRows - nNonNull
+      val nKeys = nDistinct + (if (nNull > 0) 1 else 0)
+      if (nRows != nKeys) {
+        val nulls = if (nNull > 1) s" ($nNull NULL ids count as one key)" else ""
         throw ValidationError(
-          s"input ${in.name}: unique_id '${in.uniqueId}' has $nKeys distinct over $nRows rows")
+          s"input ${in.name}: unique_id '${in.uniqueId}' has $nKeys distinct over $nRows rows$nulls")
+      }
       true
     }
 
@@ -173,14 +180,7 @@ object Validator {
     // cannot be pushed through an Exchange, so the chain runs exactly once,
     // after the fan-out, and an empty array drops the row exactly like the
     // reference's dropna (geospatial.py:150-166).
-    val cleaned = fanned.withColumn(Cols.GeomWkt,
-      explode(array_compact(array(geomExpr))))
-    // compatibility opt-in: the reference always materializes BOTH
-    // geometry_geojson and geom_wkt (vector.py:119-124); our operators
-    // consume geom_wkt only, so the second column is derived on request
-    if (withGeoJson)
-      cleaned.withColumn("geometry_geojson", callUDF("st_asgeojson", col(Cols.GeomWkt)))
-    else cleaned
+    fanned.withColumn(Cols.GeomWkt, explode(array_compact(array(geomExpr))))
   }
 
   /** (repaired-WKT-or-null expression, source-is-null predicate) for the
@@ -225,7 +225,7 @@ object Validator {
   *   polyfill (U1) → explode → distinct-cell dimension (boundary + area
   *   computed once per cell, the reference's one real algorithmic
   *   optimization — SURVEY.md §4) → join back → ratio/total columns →
-  *   epilogue (parent, resolution) → repartition by h3_r3_parent.
+  *   epilogue (parent, resolution).
   *
   * Differences from the reference, chosen for scale:
   *   - unique_id + geom_wkt are carried through the explode instead of
@@ -236,18 +236,14 @@ object Validator {
   */
 object Indexer {
 
-  /** Output h3_index / h3_r3_parent are LONG cells; they become the
-    * reference's hex text only at the output projection
+  /** Output h3_index / h3_r3_parent are LONG cells with no sink layout;
+    * they become the reference's hex text only at the output projection
     * ([[Cols.hexCells]], applied by [[GraftJob.write]] and by queries that
-    * return cells).
-    *
-    * @param forWrite when true (the S5 sink path) the output is
-    *   repartitioned by h3_r3_parent to match the partitioned write layout;
-    *   the resolver path skips it (the group-by reshuffles on h3_index
-    *   anyway, so the parent shuffle would be pure waste).
+    * return cells), and only [[GraftJob.write]] clusters rows by
+    * h3_r3_parent.
     */
   def index(spark: SparkSession, in: VectorInput, validated: DataFrame,
-            res: Int, forWrite: Boolean = true): DataFrame = {
+            res: Int): DataFrame = {
     // Dispatch on METHOD, not geometry type. The reference guards the ratio
     // stage on method (h3_indexer.py:129/194/257: `if input.method == ...`);
     // for the declared-but-unimplemented PASS_THROUGH/CENTROID the ratio
@@ -348,14 +344,23 @@ object Indexer {
       case GT.Polygon => Cols.TotalAreaKm2
     }
 
-    // epilogue (h3_indexer.py:31-81); parent stays LONG for the repartition
-    // (hashing an int64 beats hashing a 15-char string)
-    val out = withRatio
-      .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached(${Cols.H3Index})"))
+    // The projection below evaluates its columns in output order, area
+    // before ratio. Ratio-path cells build the full CellInfo for the clip,
+    // so their area is read from that entry (one boundary and area per
+    // cell); an area-only lookup first would compute the area twice.
+    // WITHIN pairs never clip and use the area-only cache.
+    val area = in.method match {
+      case Method.Within => expr(s"h3_cell_area_cached(${Cols.H3Index})")
+      case _ => GraftFunctions.kernel(graft.geo.H3Geo, "cellInfoAreaKm2", DoubleType,
+        col(Cols.H3Index))
+    }
+
+    // epilogue (h3_indexer.py:31-81)
+    withRatio
+      .withColumn(Cols.H3AreaKm2, area)
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
       .withColumn(Cols.H3Resolution, lit(res))
-    val parted = if (forWrite) out.repartition(col(Cols.H3R3Parent)) else out
-    parted.select((Seq(
+      .select((Seq(
         col(Cols.H3Index),
         col(Cols.H3Resolution),
         col(Cols.H3R3Parent),
@@ -418,18 +423,10 @@ object Resolver {
     *
     * Accepts h3_index as LONG (the indexer's output) or hex STRING; every
     * STRING frame is unhexed on entry, so the group-by, fold and epilogue
-    * run on int64 cells and the cells become hex text only in the final
-    * projection ([[Cols.hexCells]]).
-    *
-    * @param forWrite when true (the sink path) the fold output is
-    *   repartitioned by h3_r3_parent to match the partitioned write
-    *   layout; consumers that re-sort or re-aggregate downstream pass
-    *   false and skip that full shuffle of the folded table (at 100 TB
-    *   the repartition is pure waste when an orderBy immediately
-    *   replaces the partitioning).
+    * run on int64 cells. The output keeps LONG h3_index / h3_r3_parent and
+    * no sink layout, like [[Indexer.index]]'s.
     */
-  def resolve(spark: SparkSession, perInput: Seq[DataFrame], res: Int,
-              forWrite: Boolean = true): DataFrame = {
+  def resolve(spark: SparkSession, perInput: Seq[DataFrame], res: Int): DataFrame = {
     val frames = perInput.map(longCells)
     // Fold: the per-input frames are post-aggregation (one row per cell),
     // so the N-way full-outer join on h3_index is exactly a union + one
@@ -470,25 +467,21 @@ object Resolver {
           .agg(max(col(allSums.head)).as(allSums.head),
             allSums.tail.map(c => max(col(c)).as(c)): _*)
       }
-    val withEpilogue = folded
+    folded
       .withColumn(Cols.H3Resolution, lit(res))
       .withColumn(Cols.H3R3Parent, expr(s"h3_parent_long(${Cols.H3Index}, 3)"))
       .withColumn(Cols.H3AreaKm2, expr(s"h3_cell_area_cached(${Cols.H3Index})"))
-    val parted =
-      if (forWrite) withEpilogue.repartition(col(Cols.H3R3Parent))
-      else withEpilogue
-    Cols.hexCells(parted.select((Seq(col(Cols.H3Index), col(Cols.H3Resolution),
+      .select((Seq(col(Cols.H3Index), col(Cols.H3Resolution),
         col(Cols.H3R3Parent), col(Cols.H3AreaKm2)) ++
-        folded.columns.filter(_.startsWith("sum_")).map(col)): _*))
+        folded.columns.filter(_.startsWith("sum_")).map(col)): _*)
   }
 
   /** Single-input resolve (main.py:78-85, h3_resolver.py:101-160): the
     * general [[resolve]] over one [[resolveInput]].
     */
   def resolveSingle(spark: SparkSession, indexed: DataFrame,
-                    inputColumns: Seq[String], res: Int,
-                    forWrite: Boolean = true): DataFrame =
-    resolve(spark, Seq(resolveInput(indexed, inputColumns)), res, forWrite)
+                    inputColumns: Seq[String], res: Int): DataFrame =
+    resolve(spark, Seq(resolveInput(indexed, inputColumns)), res)
 
   /** Incremental resolve: fold a newly resolved batch into an existing
     * resolved table of the SAME sum_ schema without recomputing history —
@@ -568,10 +561,10 @@ object GraftJob {
   }
 
   /** Validate → Index → Resolve; returns (per-input indexed, resolved,
-    * final job state). The indexed frames are persisted and carry LONG
-    * cells; the caller owns them and unpersists them once its writes are
-    * done. The resolved frame carries hex text; [[write]] writes both as
-    * hex. Status transitions mirror the reference
+    * final job state). Every frame carries LONG cells and no sink layout;
+    * [[write]] clusters and hexes them. The indexed frames are persisted;
+    * the caller owns them and unpersists them once its writes are done.
+    * Status transitions mirror the reference
     * (main.py:48-98): Pending → Validated → RunningIndexer →
     * CompletedIndexer → RunningResolver → CompletedResolver, or Failed with
     * the error message captured.
@@ -590,8 +583,7 @@ object GraftJob {
       // silently skipped exactly like the reference (main.py:52)
       val vectors = job.inputs.collect { case v: VectorInput => v }
       val validated = vectors.map { in =>
-        in.name -> Validator.validate(spark, in, loadInput(spark, in),
-          withGeoJson = job.materializeGeoJson)
+        in.name -> Validator.validate(spark, in, loadInput(spark, in))
       }.toMap
       // opt-in reject sink: one extra map-only pass per input that re-reads
       // the same splits and keeps only the rows validate() drops. Written
@@ -630,12 +622,17 @@ object GraftJob {
   final case class JobFailed(state: JobState, cause: Throwable)
     extends RuntimeException(state.errorMessage.getOrElse("job failed"), cause)
 
-  /** S5: partitioned snappy parquet (spark/spark.py:154-196). LONG cell
-    * columns are written as the reference's hex text ([[Cols.hexCells]]),
-    * so the h3_r3_parent partition directories are hex too.
+  /** S5: partitioned snappy parquet (spark/spark.py:154-196), the one
+    * owner of the on-disk form. Rows are clustered by h3_r3_parent (hashed
+    * as the LONG cell, before the hex projection), so each partition
+    * directory is written by one task. The partition count is explicit so AQE cannot coalesce a small frame's
+    * write into one serial task. LONG cell columns are written as the
+    * reference's hex text ([[Cols.hexCells]]), so the h3_r3_parent
+    * partition directories are hex too.
     */
   def write(df: DataFrame, path: String): Unit =
-    Cols.hexCells(df).write.mode("overwrite")
+    Cols.hexCells(df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      col(Cols.H3R3Parent))).write.mode("overwrite")
       .option("compression", "snappy")
       .partitionBy(Cols.H3Resolution, Cols.H3R3Parent)
       .parquet(path)

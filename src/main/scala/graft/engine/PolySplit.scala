@@ -94,7 +94,7 @@ object PolySplit {
     case _ => null
   }
 
-  private def rings(p: Polygon): (Array[LatLng], Seq[Array[LatLng]]) = {
+  private[engine] def rings(p: Polygon): (Array[LatLng], Seq[Array[LatLng]]) = {
     val outer = p.getExteriorRing.getCoordinates
       .map(c => LatLng.degrees(c.y, c.x)).dropRight(1)
     val holes = (0 until p.getNumInteriorRing).map(i =>
@@ -190,8 +190,12 @@ object PolySplit {
   }
 
   /** Phase 3: the task's output cells. Sentinel → the unchanged
-    * whole-geometry path; cover cell → bounded descendant enumeration with
-    * the SAME centroid-in-any-component test the BFS runs.
+    * whole-geometry path; cover cell → bounded descendant enumeration
+    * (≤ 7^(res - taskRes) candidate tests) with the SAME
+    * centroid-in-any-component test the BFS runs. Union over a
+    * [[H3.polygonCoarseCover]] = exactly the BFS polyfill: the cover is an
+    * ancestor superset and cellToChildren partitions cells by ancestor, so
+    * nothing is missed and nothing is emitted twice.
     */
   def cellsUnder(g: Geometry, task: Long, res: Int): Array[Long] = {
     if (task == Sentinel) return GraftFunctions.indexGeometry(g, res)

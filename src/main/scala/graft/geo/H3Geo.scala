@@ -130,6 +130,12 @@ object H3Geo {
     areaMemo.put(cell, java.lang.Double.valueOf(cellAreaKm2(cell))).doubleValue
   }
 
+  /** Cell area in km² read from the cell's [[CellInfo]], built on a miss:
+    * for cells whose ratio clips against the hexagon anyway, so the area
+    * and the clip share one entry whichever a projection evaluates first.
+    */
+  def cellInfoAreaKm2(cell: Long): Double = cellInfoCached(cell).areaKm2
+
   /** Entries in the CellInfo memo (test/diagnostics only). */
   private[graft] def memoSize: Int = infoMemo.size
   private[graft] def memoClear(): Unit = { infoMemo.clear(); areaMemo.clear() }

@@ -640,18 +640,6 @@ object H3 {
     cover.toArray
   }
 
-  /** The res-`res` descendants of `task` whose centroid lies inside the
-    * polygon — one bounded unit (≤ 7^(res - taskRes) candidate tests) of a
-    * split polyfill. Union over a [[polygonCoarseCover]] = exactly
-    * [[polygonToCells]]: the cover is an ancestor superset and
-    * cellToChildren partitions cells by ancestor, so nothing is missed and
-    * nothing is emitted twice.
-    */
-  def cellsUnderInPolygon(task: Long, outer: Array[LatLng],
-                          holes: Seq[Array[LatLng]], res: Int): Array[Long] =
-    cellToChildren(task, res)
-      .filter(c => pointInPolygon(cellToLatLng(c), outer, holes))
-
   /** Mean hexagon edge length in radians by resolution (published H3 table,
     * km on the sphere / earth radius).
     */

@@ -79,11 +79,6 @@ final case class Job(
     h3Resolution: Int,
     outputPath: String,
     inputs: Seq[JobInput],
-    /** also materialize the reference's geometry_geojson canonical column
-      * next to geom_wkt (vector.py:119-124); off by default — our polyfill
-      * sniffs encodings itself, so the column is a compatibility opt-in
-      */
-    materializeGeoJson: Boolean = false,
     /** when set, the rows validate() drops (null / irreparable geometry)
       * are written here as parquet partitioned by input name, each with a
       * reject_reason — instead of vanishing with only a count like the
@@ -154,10 +149,9 @@ object JobConfig {
         case Left(es) => errs ++= es.map(x => s"input ${e.getKey}: $x"); None
       }
     }
-    val geoJson = Option(root.get("materialize_geojson")).exists(_.asBoolean(false))
     val quarantine = opt(root, "quarantine_s3_path").orElse(opt(root, "quarantine_path"))
       .map(p => if (p.startsWith("s3://")) "s3a://" + p.stripPrefix("s3://") else p)
-    if (errs.isEmpty) Right(Job(name, version, res, out, inputs, geoJson, quarantine))
+    if (errs.isEmpty) Right(Job(name, version, res, out, inputs, quarantine))
     else Left(errs.toList)
   }
 

@@ -80,45 +80,42 @@ object GeoQueries {
     Method.PctArea, Seq("balance"))
 
   private def indexed(s: SparkSession, in: VectorInput, data: DataFrame,
-                      forWrite: Boolean = true, res: Int = Res): DataFrame = {
+                      res: Int = Res): DataFrame = {
     GraftFunctions.register(s)
-    Indexer.index(s, in, Validator.validate(s, in, data), res, forWrite)
+    Indexer.index(s, in, Validator.validate(s, in, data), res)
   }
 
   val qs: Seq[QueryDef] = Seq(
     // §2.7 POINT/WITHIN recipe end-to-end (U1 point path, U2, U3, F11, J1).
-    // forWrite = false: these queries end in a total orderBy, which plans
-    // its own range exchange and makes the sink path's repartition(
-    // h3_r3_parent) a full extra shuffle of the indexed frame that the
-    // sort immediately replaces (the same waste Resolver.resolve already
-    // documents on its forWrite=false path). Output columns, rows, and
-    // final order are byte-identical — only the dead exchange is gone.
     QueryDef("h3_index_points",
-      (s, d) => Cols.hexCells(indexed(s, pointsInput, pointsDf(s, d), forWrite = false))
+      (s, d) => Cols.hexCells(indexed(s, pointsInput, pointsDf(s, d)))
         .orderBy("h3_index", "point_id"),
       headline = true),
 
     // §2.7 LINE/PCT_LENGTH recipe (path cells, planar length ratio, F10).
-    // forWrite STAYS TRUE here and for polygons, unlike points: the final
-    // orderBy's range exchange samples its child by RE-EXECUTING it, so
-    // without a materialization boundary the expensive chain (parse →
-    // path-cells → ratio) runs twice per action — invisible at sf0.1
-    // (~0.1 s) but catastrophic at scale where the double pass also
-    // thrashes the bounded CellInfo memo (r12 10× soak: 13.7× wall slope
-    // with forWrite=false vs r11's 1.7× with the parent exchange; 8.9 M
-    // ratio calls/action = exactly 2× the pair count). The parent
+    // Unlike points, lines and polygons keep an explicit materialization
+    // boundary before the sort: the final orderBy's range exchange
+    // samples its child by RE-EXECUTING it, so without one the expensive
+    // chain (parse → path-cells → ratio) runs twice per action —
+    // invisible at sf0.1 (~0.1 s) but catastrophic at scale where the
+    // double pass also thrashes the bounded CellInfo memo (r12 10× soak:
+    // 13.7× wall slope without the boundary vs r11's 1.7× with it; 8.9 M
+    // ratio calls/action = exactly 2× the pair count). The h3_r3_parent
     // repartition is that boundary: the chain materializes once as
-    // shuffle files and the sort samples those. Points keep
-    // forWrite=false — their per-row chain is a native cell call (10×
-    // slope 2.1), so the dead exchange costs more than the re-execution.
+    // shuffle files and the sort samples those. Points skip it — their
+    // per-row chain is a native cell call (10× slope 2.1), so the extra
+    // exchange costs more than the re-execution.
     QueryDef("h3_index_lines",
-      (s, d) => Cols.hexCells(indexed(s, linesInput, linesDf(s, d)))
+      (s, d) => Cols.hexCells(indexed(s, linesInput, linesDf(s, d))
+          .repartition(col(Cols.H3R3Parent)))
         .orderBy("h3_index", "route_id"),
       headline = true),
 
-    // §2.7 POLYGON/PCT_AREA recipe (centroid polyfill, area ratio, F11)
+    // §2.7 POLYGON/PCT_AREA recipe (centroid polyfill, area ratio, F11);
+    // the same sort boundary as h3_index_lines
     QueryDef("h3_index_polygons",
-      (s, d) => Cols.hexCells(indexed(s, polysInput, polysDf(s, d)))
+      (s, d) => Cols.hexCells(indexed(s, polysInput, polysDf(s, d))
+          .repartition(col(Cols.H3R3Parent)))
         .orderBy("h3_index", "geo_id"),
       headline = true),
 
@@ -144,14 +141,14 @@ object GeoQueries {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val pf = Future(Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
+          indexed(s, pointsInput, pointsDf(s, d)),
           Seq("qty")).localCheckpoint())
         val gf = Future(Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false),
+          indexed(s, polysInput, polysDf(s, d)),
           Seq("balance")).localCheckpoint())
         val p = Await.result(pf, Duration.Inf)
         val g = Await.result(gf, Duration.Inf)
-        Resolver.resolve(s, Seq(p, g), Res, forWrite = false).orderBy("h3_index")
+        Cols.hexCells(Resolver.resolve(s, Seq(p, g), Res)).orderBy("h3_index")
       },
       headline = true),
 
@@ -165,7 +162,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val perCell = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
+          indexed(s, pointsInput, pointsDf(s, d)),
           Seq("qty"))
         perCell
           .withColumn("nbr", explode(callUDF("h3_grid_disk", col("h3_index"), lit(1))))
@@ -183,7 +180,7 @@ object GeoQueries {
     QueryDef("h3_compact_coverage",
       (s, d) => {
         GraftFunctions.register(s)
-        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
+        val idx = indexed(s, polysInput, polysDf(s, d))
         idx.groupBy("geo_id")
           .agg(collect_list("h3_index").as("cells"))
           .select(col("geo_id"),
@@ -203,7 +200,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val perCell = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
+          indexed(s, pointsInput, pointsDf(s, d)),
           Seq("qty"))
         val disks = perCell.withColumn("nbrs",
           callUDF("h3_grid_disk", col("h3_index"), lit(1)))
@@ -244,7 +241,7 @@ object GeoQueries {
     QueryDef("h3_compact_coverage_checked",
       (s, d) => {
         GraftFunctions.register(s)
-        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
+        val idx = indexed(s, polysInput, polysDf(s, d))
         val per = idx.groupBy("geo_id")
           .agg(collect_list("h3_index").as("cells"))
           .withColumn("compact", callUDF("h3_compact", col("cells")))
@@ -277,12 +274,12 @@ object GeoQueries {
       (s, d) => {
         val p = Resolver.rollupToRes(
           Resolver.resolveInput(
-            indexed(s, pointsInput, pointsDf(s, d), forWrite = false, res = Res + 1),
+            indexed(s, pointsInput, pointsDf(s, d), res = Res + 1),
             Seq("qty")), Res).localCheckpoint()
         val g = Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false),
+          indexed(s, polysInput, polysDf(s, d)),
           Seq("balance")).localCheckpoint()
-        Resolver.resolve(s, Seq(p, g), Res, forWrite = false).orderBy("h3_index")
+        Cols.hexCells(Resolver.resolve(s, Seq(p, g), Res)).orderBy("h3_index")
       }),
 
     // distributed point-in-polygon spatial join: H3 cells bucket both sides
@@ -522,11 +519,11 @@ object GeoQueries {
         val all = pointsDf(s, d)
         def res1(batch: org.apache.spark.sql.DataFrame) =
           Resolver.resolveSingle(s,
-            indexed(s, pointsInput, batch, forWrite = false),
+            indexed(s, pointsInput, batch),
             Seq("qty"), Res)
         val existing = res1(all.where(pmod(col("point_id"), lit(2)) === 0))
         val delta = res1(all.where(pmod(col("point_id"), lit(2)) === 1))
-        Resolver.mergeDelta(s, existing, delta, Res).orderBy("h3_index")
+        Cols.hexCells(Resolver.mergeDelta(s, existing, delta, Res)).orderBy("h3_index")
       }),
 
     // ORACLED invariants for the POINT/WITHIN recipe: every point indexes
@@ -601,7 +598,7 @@ object GeoQueries {
         val all = pointsDf(s, d)
         def res1(batch: org.apache.spark.sql.DataFrame) =
           Resolver.resolveSingle(s,
-            indexed(s, pointsInput, batch, forWrite = false),
+            indexed(s, pointsInput, batch),
             Seq("qty"), Res)
         val merged = Resolver.mergeDelta(s,
           res1(all.where(pmod(col("point_id"), lit(2)) === 0)),
@@ -635,7 +632,7 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val p7 = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false, res = Res + 1),
+          indexed(s, pointsInput, pointsDf(s, d), res = Res + 1),
           Seq("qty")).localCheckpoint()
         val rolled = Resolver.rollupToRes(p7, Res)
         val a = p7.agg(
@@ -779,7 +776,7 @@ object GeoQueries {
     // h3_smooth_disk_checked.
     QueryDef("h3_index_polygons_checked",
       (s, d) => {
-        val idx = indexed(s, polysInput, polysDf(s, d), forWrite = false)
+        val idx = indexed(s, polysInput, polysDf(s, d))
         val term = expr("CAST(round(balance * ratio, 6) AS DECIMAL(28,6))")
         val cellTot = idx.groupBy(col(Cols.H3Index))
           .agg(sum(term).as("ct"))
@@ -831,12 +828,12 @@ object GeoQueries {
       (s, d) => {
         GraftFunctions.register(s)
         val p = Resolver.resolveInput(
-          indexed(s, pointsInput, pointsDf(s, d), forWrite = false),
+          indexed(s, pointsInput, pointsDf(s, d)),
           Seq("qty")).localCheckpoint()
         val g = Resolver.resolveInput(
-          indexed(s, polysInput, polysDf(s, d), forWrite = false),
+          indexed(s, polysInput, polysDf(s, d)),
           Seq("balance")).localCheckpoint()
-        val folded = Resolver.resolve(s, Seq(p, g), Res, forWrite = false)
+        val folded = Resolver.resolve(s, Seq(p, g), Res)
         def cents(c: String) = sum(col(c).cast("decimal(18,2)"))
         def fix4(c: String) = sum(expr(s"CAST(round($c, 4) AS DECIMAL(28,4))"))
         val f = folded.agg(

@@ -64,8 +64,7 @@ object PolyfillScaleDemo {
       taskStats.clear()
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val t0 = System.nanoTime()
-      val out = Indexer.index(spark, in, Validator.validate(spark, in, polys),
-        res = 8, forWrite = false)
+      val out = Indexer.index(spark, in, Validator.validate(spark, in, polys), res = 8)
       val row = out.agg(count(lit(1)).as("n"),
         md5(concat_ws("|", sort_array(collect_list(concat_ws(":",
           col("geo_id"), col("h3_index"), round(col("ratio") * 1e9).cast("long")))))).as("dg"))

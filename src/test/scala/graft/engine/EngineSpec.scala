@@ -134,6 +134,18 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(s1 > 0.7 && s1 < 1.0001, s"g1 ratio sum $s1")
   }
 
+  test("clipped cells read their area from the CellInfo the ratio builds: no area-only lookups") {
+    // the indexer's projection evaluates h3_area_km2 before ratio; an
+    // area-only miss there would compute each clipped cell's area twice
+    graft.geo.H3Geo.memoClear()
+    val misses0 = graft.geo.H3Geo.areaMisses.get()
+    Seq(polysInput, linesInput).foreach { case (in, data) =>
+      assert(Indexer.index(spark, in, Validator.validate(spark, in, data), 6).collect().nonEmpty)
+    }
+    assert(graft.geo.H3Geo.areaMisses.get() == misses0)
+    assert(graft.geo.H3Geo.memoSize > 0)
+  }
+
   test("PASS_THROUGH/CENTROID validate but are not indexed (method dispatch)") {
     // the reference guards ratio on method and its final projection then
     // fails on the missing column — a PASS_THROUGH line must NOT be
@@ -175,7 +187,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def perCell(in: (VectorInput, DataFrame)): DataFrame = {
     val (vi, data) = in
     Resolver.resolveInput(
-      Indexer.index(spark, vi, Validator.validate(spark, vi, data), 6, forWrite = false),
+      Indexer.index(spark, vi, Validator.validate(spark, vi, data), 6),
       vi.inputColumns)
   }
 
@@ -189,9 +201,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("resolver: a frame's extra non-sum_ column does not change the folded rows") {
     val p = perCell(polysInput)
     val l = perCell(linesInput)
-    val plain = Resolver.resolve(spark, Seq(p, l), 6, forWrite = false)
-    val noted = Resolver.resolve(spark, Seq(p.withColumn("note", lit("x")), l), 6,
-      forWrite = false)
+    val plain = Resolver.resolve(spark, Seq(p, l), 6)
+    val noted = Resolver.resolve(spark, Seq(p.withColumn("note", lit("x")), l), 6)
     assert(noted.columns.toSeq == plain.columns.toSeq)
     val rows = plain.collect().toSet
     assert(rows.nonEmpty && noted.collect().toSet == rows)
@@ -204,8 +215,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val in = GeoQueries.pointsInput
     def res1(batch: org.apache.spark.sql.DataFrame) =
       Resolver.resolveSingle(spark,
-        Indexer.index(spark, in, Validator.validate(spark, in, batch), 6,
-          forWrite = false), Seq("qty"), 6)
+        Indexer.index(spark, in, Validator.validate(spark, in, batch), 6), Seq("qty"), 6)
     val merged = Resolver.mergeDelta(spark,
       res1(all.where(pmod(col("point_id"), lit(2)) === 0)),
       res1(all.where(pmod(col("point_id"), lit(2)) === 1)), 6)
@@ -230,13 +240,11 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       written)
     val pHex = spark.read.parquet(written)
     assert(pHex.schema(Cols.H3Index).dataType == org.apache.spark.sql.types.StringType)
-    val lLong = Indexer.index(spark, lin, Validator.validate(spark, lin, ldata), 6,
-      forWrite = false)
+    val lLong = Indexer.index(spark, lin, Validator.validate(spark, lin, ldata), 6)
     val mixed = Resolver.resolve(spark, Seq(
       Resolver.resolveInput(pHex, Seq("POPESTIMAT")),
       Resolver.resolveInput(lLong, Seq("emissions"))), 6)
-    val pLong = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 6,
-      forWrite = false)
+    val pLong = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 6)
     val uniform = Resolver.resolve(spark, Seq(
       Resolver.resolveInput(pLong, Seq("POPESTIMAT")),
       Resolver.resolveInput(lLong, Seq("emissions"))), 6)
@@ -248,7 +256,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("resolver: a hex-STRING-keyed frame resolves on LONG cells, no ScalaUDF") {
     val (in, data) = polysInput
     val perLong = Resolver.resolveInput(
-      Indexer.index(spark, in, Validator.validate(spark, in, data), 6, forWrite = false),
+      Indexer.index(spark, in, Validator.validate(spark, in, data), 6),
       Seq("POPESTIMAT")).localCheckpoint()
     // checkpointed so the STRING key is a genuine source column, not a
     // h3_hex projection the optimizer could fold away
@@ -261,10 +269,12 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fromLong = Resolver.resolve(spark, Seq(perLong), 6)
     val rows = fromHex.collect()
     assert(rows.nonEmpty && rows.toSet == fromLong.collect().toSet)
+    // the resolved cells stay LONG: only the sink and query outputs hex them
     rows.foreach { r =>
-      val cell = r.getAs[String](Cols.H3Index)
+      val cell = graft.h3.H3Index.toHexString(r.getAs[Long](Cols.H3Index))
       assert(r.getAs[Double](Cols.H3AreaKm2) == graft.geo.H3Geo.cellAreaKm2(cell))
-      assert(r.getAs[String](Cols.H3R3Parent) == graft.geo.H3Geo.parentRes3(cell))
+      assert(graft.h3.H3Index.toHexString(r.getAs[Long](Cols.H3R3Parent)) ==
+        graft.geo.H3Geo.parentRes3(cell))
     }
   }
 
@@ -279,8 +289,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mixed-resolution rollup conserves mass and lands on target-res keys") {
     val (pin, pdata) = pointsInput
-    val idx7 = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 7,
-      forWrite = false)
+    val idx7 = Indexer.index(spark, pin, Validator.validate(spark, pin, pdata), 7)
     val per7 = Resolver.resolveInput(idx7, Seq("population"))
     val rolled = Resolver.rollupToRes(per7, 6)
     // exact conservation: re-summing under the ancestor key loses nothing

@@ -6,8 +6,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.model._
 
 /** S4 JDBC option wiring (offline — asserts construction, not connection),
-  * job lifecycle metadata, resolution-scaled shuffle partitions, and the
-  * opt-in geometry_geojson compatibility column.
+  * job lifecycle metadata, resolution-scaled shuffle partitions, and whole
+  * jobs over degenerate inputs.
   */
 class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -178,6 +178,34 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rejects1 == Map(1L -> "irreparable_geometry"))
   }
 
+  /** `GraftJob.run` over a WITHIN point input with one row per id in
+    * `ids` (NULL allowed), each point in its own res-6 cell.
+    */
+  private def runPointJob(tag: String, ids: Seq[java.lang.Long]) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graftpk_$tag")
+    df("pid BIGINT, lat DOUBLE, lon DOUBLE, v DOUBLE", ids.zipWithIndex.map {
+      case (id, i) => R(id, 37.7 + i * 0.1, -122.4, 1.0) })
+      .write.mode("overwrite").parquet(s"$dir/pts.parquet")
+    GraftJob.run(spark, Job("j", "1.0.0", 6, s"$dir/out", Seq(VectorInput(
+      "pts", Some(s"$dir/pts.parquet"), None, None, None, "pid",
+      GeometryType.Point, None, Some("lat"), Some("lon"), Method.Within, Seq("v")))))
+  }
+
+  test("degenerate input: one NULL unique_id is one key and the job completes") {
+    // the reference's PK check counts select(uid).distinct(), where NULL
+    // is a key like any other (validator.py:15-36)
+    val (_, resolved, state) = runPointJob("onenull", Seq(null, 2L))
+    assert(state.status == JobStatus.CompletedResolver)
+    assert(resolved.count() == 2)
+  }
+
+  test("degenerate input: two NULL unique_ids fail PK validation, naming the NULLs") {
+    val e = intercept[GraftJob.JobFailed](runPointJob("twonull", Seq(null, null, 3L)))
+    assert(e.state.status == JobStatus.Failed)
+    assert(e.state.errorMessage.exists(m =>
+      m.contains("unique_id") && m.contains("2 NULL ids")), e.state.errorMessage)
+  }
+
   test("degenerate path: an input under a directory with a space runs, and its rewrite is re-validated") {
     // Spark lists such a file URI-encoded (file:/…/a%20b/…), which the
     // session memo's input-version signature parses
@@ -224,22 +252,6 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(job.quarantinePath.contains("s3a://b/rejects"))
   }
 
-  test("materialize_geojson opt-in adds the reference's second canonical column") {
-    val data = df("pid BIGINT, lat DOUBLE, lon DOUBLE, v DOUBLE",
-      Seq(R(1L, 37.7, -122.4, 10.0)))
-    val in = VectorInput("pts", Some(""), None, None, None, "pid",
-      GeometryType.Point, None, Some("lat"), Some("lon"), Method.Within, Seq("v"))
-    val validated = Validator.validate(spark, in, data, withGeoJson = true)
-    assert(validated.columns.contains("geometry_geojson"))
-    val gj = validated.select("geometry_geojson").head().getString(0)
-    assert(gj.contains("\"type\"") && gj.contains("Point"))
-    // parses back to the same point
-    val g = graft.geo.GeoIO.fromGeoJson(gj)
-    assert(math.abs(g.getCoordinate.x - -122.4) < 1e-9)
-    // default path stays single-column (documented divergence)
-    assert(!Validator.validate(spark, in, data).columns.contains("geometry_geojson"))
-  }
-
   test("raster inputs validate then no-op, exactly like the reference") {
     // a valid raster input parses (s3_uri checked) …
     val yaml =
@@ -275,7 +287,7 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(state.status == JobStatus.CompletedResolver)
   }
 
-  test("yaml config parses materialize_geojson") {
+  test("a yaml config carrying the retired materialize_geojson key still parses") {
     val yaml =
       """name: j
         |version: 1.0.0
@@ -293,7 +305,6 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         |    input_columns: [v]
         |""".stripMargin
     val job = JobConfig.fromYaml(yaml).toOption.get
-    assert(job.materializeGeoJson)
     assert(job.inputs.head.asInstanceOf[graft.model.VectorInput]
       .path.contains("s3a://b/p.parquet"))
   }

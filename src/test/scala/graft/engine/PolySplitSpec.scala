@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import scala.util.Random
 import graft.h3.{H3, LatLng}
+import org.locationtech.jts.geom.{Coordinate, GeometryFactory, Polygon}
 
 /** The split polyfill must be SET-IDENTICAL to the whole-polygon BFS —
   * that is the entire contract that lets the Indexer switch plans on a
@@ -37,11 +38,26 @@ class PolySplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  private def splitCells(outer: Array[LatLng], holes: Seq[Array[LatLng]],
-                         res: Int, k: Int): Set[Long] = {
+  /** The rings as the JTS polygon (degree coordinates) the engine reads. */
+  private def polygon(outer: Array[LatLng], holes: Seq[Array[LatLng]]): Polygon = {
+    val gf = new GeometryFactory()
+    def ring(r: Array[LatLng]) = gf.createLinearRing((r :+ r.head)
+      .map(p => new Coordinate(math.toDegrees(p.lng), math.toDegrees(p.lat))))
+    gf.createPolygon(ring(outer), holes.map(ring).toArray)
+  }
+
+  /** The whole-polygon BFS polyfill (the sentinel task's path). */
+  private def bfsCells(g: Polygon, res: Int): Set[Long] =
+    GraftFunctions.indexGeometry(g, res).toSet
+
+  /** The split polyfill at cover depth `k`, through the descendant filter
+    * `h3_cells_under` runs.
+    */
+  private def splitCells(g: Polygon, res: Int, k: Int): Set[Long] = {
+    val (outer, holes) = PolySplit.rings(g)
     val cover = H3.polygonCoarseCover(outer, holes, k)
     // ancestor partition: no cell may arrive from two tasks
-    val all = cover.flatMap(H3.cellsUnderInPolygon(_, outer, holes, res))
+    val all = cover.flatMap(PolySplit.cellsUnder(g, _, res))
     assert(all.length === all.distinct.length, "cover tasks emitted a duplicate cell")
     all.toSet
   }
@@ -53,12 +69,12 @@ class PolySplitSpec extends AnyFunSuite with BeforeAndAfterAll {
       val lng = -180 + 360 * rnd.nextDouble()
       val res = 5 + rnd.nextInt(3)                    // 5..7
       val radius = 8 + 60 * rnd.nextDouble()          // ~10..1500 cells
-      val outer = blob(rnd, lat, lng, radius, 12 + rnd.nextInt(20), 0.45)
-      val bfs = H3.polygonToCells(outer, Nil, res).toSet
+      val g = polygon(blob(rnd, lat, lng, radius, 12 + rnd.nextInt(20), 0.45), Nil)
+      val bfs = bfsCells(g, res)
       assert(bfs.nonEmpty, s"trial $trial produced an empty polyfill")
       for (d <- 1 to 4) {
         val k = math.max(0, res - d)
-        assert(splitCells(outer, Nil, res, k) === bfs,
+        assert(splitCells(g, res, k) === bfs,
           s"trial $trial lat=$lat lng=$lng res=$res depth=$d")
       }
     }
@@ -69,8 +85,9 @@ class PolySplitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outer = blob(rnd, 68.0, 25.0, 40, 24, 0.3)
     val hole = blob(rnd, 68.05, 25.1, 9, 10, 0.2)
     val res = 6
-    val bfs = H3.polygonToCells(outer, Seq(hole), res).toSet
-    val split = splitCells(outer, Seq(hole), res, res - 4)
+    val g = polygon(outer, Seq(hole))
+    val bfs = bfsCells(g, res)
+    val split = splitCells(g, res, res - 4)
     assert(bfs.nonEmpty && split === bfs)
   }
 

@@ -214,17 +214,19 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // excluded from the full-registry sweeps: streaming twins (building the
-  // frame RUNS the stream), k-means/BPE training and resolve pipelines
-  // (eager jobs at build time), the source round-trip and compaction
-  // execute (write files when built), and the PCA projection twin (runs
-  // collect/eigensolve jobs at build time). None of them contain a join
-  // that could degrade to a cartesian anyway.
+  // frame RUNS the stream), k-means/BPE training and the resolve pipelines
+  // that localCheckpoint their per-input frames (eager jobs at build
+  // time), the source round-trip and compaction execute (write files when
+  // built), and the PCA projection twin (runs collect/eigensolve jobs at
+  // build time). None of them contain a join that could degrade to a
+  // cartesian anyway.
   private val eager = Set("text_bpe_train", "text_bpe_apply",
-    "layout_compaction_execute", "embedding_pca_project_checked")
+    "layout_compaction_execute", "embedding_pca_project_checked",
+    "h3_resolve_multi", "h3_resolve_multi_checked",
+    "h3_resolve_multires", "h3_resolve_multires_checked")
   private def excluded(n: String) =
     n.contains("_stream") || n.startsWith("sim_ann") ||
-      n.startsWith("h3_resolve") || n == "geojson_source_roundtrip" ||
-      eager(n)
+      n == "geojson_source_roundtrip" || eager(n)
   // one shared sweep: building every registered query's physical plan is
   // the expensive part, so both full-registry lints read from this
   private lazy val sweptPlans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
@@ -295,20 +297,31 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("no shuffle directly re-shuffles a user-requested repartition (wasted exchange)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.{ProjectExec, FilterExec}
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
+      WholeStageCodegenExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     // An Exchange whose input — through partitioning-preserving unaries —
     // is an explicit repartition(col) means the first shuffle's KEYED
     // layout is destroyed before anything reads it: pure wasted data
-    // movement at scale. This is the class Resolver.resolve(forWrite=false)
-    // removed (the write-layout repartition immediately re-sorted by
-    // orderBy); the lint keeps it from creeping back. Round-robin
+    // movement at scale, e.g. a sink-layout h3_r3_parent repartition
+    // inside the engine, re-sorted by an orderBy or re-keyed by an
+    // aggregate (the sink layout belongs to GraftJob.write alone). In an
+    // executed plan Project/Filter sit inside WholeStageCodegen /
+    // InputAdapter, so those wrappers pass through too. Round-robin
     // fan-outs (REPARTITION_BY_NUM) are deliberately NOT flagged: the LSH
     // verifies fan candidate pairs back out for CPU-bound scoring, and
     // only this spec's no-broadcast session re-shuffles them (the real
     // session broadcasts the doc side).
+    //
+    // Allowed, and required to stay: the sort boundaries of h3_index_lines
+    // and h3_index_polygons. The orderBy's range exchange samples its
+    // child by re-executing it, so the h3_r3_parent repartition
+    // materializes the parse → polyfill → ratio chain once (r12 10× soak:
+    // 13.7× wall slope without it, 1.7× with it).
+    val boundaries = Set("h3_index_lines", "h3_index_polygons")
     def passThru(p: SparkPlan): Boolean = p match {
       case _: ProjectExec | _: FilterExec => true
+      case _: WholeStageCodegenExec | _: InputAdapter => true
       case _ => false
     }
     def innerUserShuffle(p: SparkPlan): Boolean = p match {
@@ -322,7 +335,8 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       if (bad.isEmpty) None else Some(n)
     }
-    assert(offenders.isEmpty,
-      s"queries re-shuffling a repartition output: ${offenders.mkString(", ")}")
+    assert(offenders.toSet == boundaries,
+      s"queries re-shuffling a repartition output: ${offenders.mkString(", ")} " +
+        s"(allowed exactly: ${boundaries.mkString(", ")})")
   }
 }
