@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.Geometry
 import graft.h3.{H3, H3Index, LatLng}
-import graft.geo.{GeoIO, Geodesic, H3Geo, Memo}
+import graft.geo.{GeoIO, GeodesicExact, H3Geo, Memo}
 import graft.operators.SpatialJoin
 
 /** The engine's SQL function surface — the role Sedona's function registry
@@ -203,8 +203,8 @@ object GraftFunctions {
     if (denom == 0.0) 0.0 else a.intersection(geom(hex)).getLength / denom
   }
 
-  def areaSpheroidKm2(g: UTF8String): Double = Geodesic.areaSqMeters(geom(g)) / 1e6
-  def lengthSpheroidKm(g: UTF8String): Double = Geodesic.lengthMeters(geom(g)) / 1000.0
+  def areaSpheroidKm2(g: UTF8String): Double = GeodesicExact.areaSqMeters(geom(g)) / 1e6
+  def lengthSpheroidKm(g: UTF8String): Double = GeodesicExact.lengthMeters(geom(g)) / 1000.0
   def asText(g: UTF8String): UTF8String = utf(GeoIO.toWkt(geom(g)))
   def asGeoJson(g: UTF8String): UTF8String = utf(GeoIO.toGeoJson(geom(g)))
   def point(lon: Double, lat: Double): UTF8String = utf(GeoIO.toWkt(GeoIO.point(lon, lat)))

@@ -1,9 +1,13 @@
 package graft.geo
 
+import org.locationtech.jts.geom.{Geometry, LineString, Polygon}
+
 /** Exact WGS84 geodesic inverse + ellipsoidal polygon area, matching the
   * semantics of GeographicLib's Geodesic.Inverse / PolygonArea (what Sedona's
   * ST_LengthSpheroid / ST_AreaSpheroid delegate to — reference call sites
-  * h3_indexer.py:202-204, 266-268; geospatial.py:128-135).
+  * h3_indexer.py:202-204, 266-268; geospatial.py:128-135). The engine's one
+  * geodesic solver: every length ([[lengthMeters]]) and area
+  * ([[areaSqMeters]], [[ringArea]]) goes through [[inverse]].
   *
   * Formulation (Karney 2013, "Algorithms for geodesics", public): reduce to
   * the auxiliary sphere — reduced latitude β with tanβ = (1−f)tanφ, equator
@@ -324,5 +328,37 @@ object GeodesicExact {
     if (area > TotalArea / 2) area -= TotalArea
     if (area <= -TotalArea / 2) area += TotalArea
     area
+  }
+
+  /** Geodesic length in meters of a (multi)linestring with lon/lat degree
+    * coordinates (ST_LengthSpheroid).
+    */
+  def lengthMeters(g: Geometry): Double = g match {
+    case l: LineString =>
+      val cs = l.getCoordinates
+      var total = 0.0
+      var i = 1
+      while (i < cs.length) {
+        total += distance(cs(i - 1).y, cs(i - 1).x, cs(i).y, cs(i).x)
+        i += 1
+      }
+      total
+    case other =>
+      (0 until other.getNumGeometries).map(i => lengthMeters(other.getGeometryN(i))).sum
+  }
+
+  /** Geodesic area in m² of a (multi)polygon with lon/lat degree coordinates
+    * (ST_AreaSpheroid). Holes are subtracted.
+    */
+  def areaSqMeters(g: Geometry): Double = g match {
+    case p: Polygon =>
+      def ring(cs: Array[org.locationtech.jts.geom.Coordinate]) =
+        math.abs(ringArea(cs.map(c => (c.x, c.y))))
+      val shell = ring(p.getExteriorRing.getCoordinates)
+      val holes = (0 until p.getNumInteriorRing)
+        .map(i => ring(p.getInteriorRingN(i).getCoordinates)).sum
+      shell - holes
+    case other =>
+      (0 until other.getNumGeometries).map(i => areaSqMeters(other.getGeometryN(i))).sum
   }
 }

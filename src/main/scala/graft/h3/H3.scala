@@ -679,7 +679,7 @@ object H3 {
   def pathCells(a: LatLng, b: LatLng, res: Int): Array[Long] = {
     val start = latLngToCell(a, res)
     val end = latLngToCell(b, res)
-    LocalIJ.gridPathCells(start, end).getOrElse(sampledPathCells(a, b, res))
+    LocalIJ.gridPathCells(start, end).getOrElse(geodesicPathCells(a, b, res))
   }
 
   /** Every cell the geodesic from `a` to `b` touches (dense quarter-edge
@@ -690,10 +690,7 @@ object H3 {
     * superset invariant. Also the fallback for [[pathCells]] where
     * local-IJ is undefined.
     */
-  def geodesicPathCells(a: LatLng, b: LatLng, res: Int): Array[Long] =
-    sampledPathCells(a, b, res)
-
-  private[h3] def sampledPathCells(a: LatLng, b: LatLng, res: Int): Array[Long] = {
+  def geodesicPathCells(a: LatLng, b: LatLng, res: Int): Array[Long] = {
     val d = a.distRads(b)
     val step = hexEdgeLengthRads(res) / 4
     val n = math.max(1, math.ceil(d / step).toInt)

@@ -110,9 +110,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val x = r.getDouble(0)
       assert(x >= 0.0 && x <= 1.0001, s"ratio $x out of range")
     }
-    // total_length_km consistent with Vincenty on the raw geometry
-    val l1 = out.where(col("route_id") === "r1").select(Cols.TotalLengthKm).head().getDouble(0)
-    assert(l1 > 10 && l1 < 20, s"r1 length $l1")
+    // total_length_km is st_length_spheroid_km of the input WKT, bit for bit
+    data.collect().foreach { r =>
+      val (id, wkt) = (r.getString(0), r.getString(1))
+      val total = out.where(col("route_id") === id).select(Cols.TotalLengthKm)
+        .distinct().collect().map(_.getDouble(0))
+      val want = spark.sql(s"SELECT st_length_spheroid_km('$wkt')").head().getDouble(0)
+      assert(total.toSeq == Seq(want), s"$id: total_length_km $total vs $want")
+    }
   }
 
   test("polygons PCT_AREA: repaired bow-tie, dropped null, ratios in (0,1]") {

@@ -178,6 +178,43 @@ class JobLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rejects1 == Map(1L -> "irreparable_geometry"))
   }
 
+  test("degenerate input: a polygon with a hole past the split threshold indexes as the unsplit job") {
+    val shell = "(10 50, 10.6 50, 10.6 50.4, 10 50.4, 10 50)"
+    val hole = "(10.2 50.1, 10.4 50.1, 10.4 50.3, 10.2 50.3, 10.2 50.1)"
+    val wkt = s"POLYGON ($shell, $hole)"
+    val dir = java.nio.file.Files.createTempDirectory("graftdeg_hole")
+    df("gid BIGINT, wkt STRING, v DOUBLE", Seq(R(1L, wkt, 1.0)))
+      .write.mode("overwrite").parquet(s"$dir/polys.parquet")
+    val job = Job("j", "1.0.0", 7, s"$dir/out", Seq(VectorInput(
+      "polys", Some(s"$dir/polys.parquet"), None, None, None, "gid",
+      GeometryType.Polygon, Some("wkt"), None, None, Method.PctArea, Seq("v"))))
+    /** (gid, h3_index, ratio) rows, the distinct total_area_km2 values and
+      * whether the plan took the split polyfill.
+      */
+    def indexedAt(threshold: Double) = PolySplit.withThreshold(threshold) {
+      val (indexed, _, state) = GraftJob.run(spark, job)
+      assert(state.status == JobStatus.CompletedResolver)
+      val f = indexed("polys")
+      val split = f.queryExecution.executedPlan.toString.contains("cellsUnderArray")
+      val rows = f.select("gid", Cols.H3Index, Cols.Ratio).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+      val totals = f.select(Cols.TotalAreaKm2).distinct().collect().map(_.getDouble(0)).toSeq
+      f.unpersist(true)
+      (rows, totals, split)
+    }
+    val (splitRows, splitTotals, splitEngaged) = indexedAt(10.0)
+    val (wholeRows, wholeTotals, wholeEngaged) = indexedAt(Double.MaxValue)
+    assert(splitEngaged && !wholeEngaged)
+    assert(splitRows.nonEmpty && splitRows == wholeRows)
+    // shell area minus hole area, both from the one geodesic solver
+    def ringM2(ring: String) = math.abs(graft.geo.GeodesicExact.ringArea(
+      ring.stripPrefix("(").stripSuffix(")").split(", ").map { xy =>
+        val Array(x, y) = xy.split(" ").map(_.toDouble); (x, y) }))
+    val want = (ringM2(shell) - ringM2(hole)) / 1e6
+    assert(splitTotals == Seq(want) && wholeTotals == Seq(want),
+      s"total_area_km2 $splitTotals / $wholeTotals vs $want")
+  }
+
   /** `GraftJob.run` over a WITHIN point input with one row per id in
     * `ids` (NULL allowed), each point in its own res-6 cell.
     */

@@ -64,17 +64,32 @@ class GeoSpec extends AnyFunSuite {
     assert(math.abs(fixed.get.getArea - 2.0) < 1e-9) // two unit triangles
   }
 
-  test("Vincenty inverse matches published WGS84 arcs") {
+  test("geodesic inverse matches published WGS84 arcs") {
     // one degree along the equator = a * pi/180
-    val eq = Geodesic.distanceMeters(0, 0, 0, 1)
+    val eq = GeodesicExact.distance(0, 0, 0, 1)
     assert(math.abs(eq - 111319.49079327358) < 1e-3, s"equator: $eq")
     // quarter meridian (equator to pole)
-    val qm = Geodesic.distanceMeters(0, 0, 90, 0)
+    val qm = GeodesicExact.distance(0, 0, 90, 0)
     assert(math.abs(qm - 10001965.7293) < 1.0, s"quarter meridian: $qm")
     // symmetry
     assert(math.abs(
-      Geodesic.distanceMeters(37.7, -122.4, 40.7, -74.0) -
-      Geodesic.distanceMeters(40.7, -74.0, 37.7, -122.4)) < 1e-6)
+      GeodesicExact.distance(37.7, -122.4, 40.7, -74.0) -
+      GeodesicExact.distance(40.7, -74.0, 37.7, -122.4)) < 1e-6)
+  }
+
+  test("antipodal lengths: the equatorial antipode is the half meridian") {
+    // twice the published quarter meridian (10,001,965.7293 m); the
+    // shortest path between equatorial antipodes runs over a pole
+    val halfMeridian = 20003931.4586
+    val antipode = "LINESTRING (0 0, 180 0)"
+    val m = GeodesicExact.lengthMeters(GeoIO.fromWkt(antipode))
+    assert(math.abs(m - halfMeridian) < 1e-3, s"lengthMeters: $m")
+    val km = graft.engine.GraftFunctions.lengthSpheroidKm(
+      org.apache.spark.unsafe.types.UTF8String.fromString(antipode))
+    assert(math.abs(km * 1000.0 - halfMeridian) < 1e-3, s"st_length_spheroid_km: $km")
+    // just short of the antipode: within 1 km below the half meridian
+    val near = GeodesicExact.lengthMeters(GeoIO.fromWkt("LINESTRING (0 0, 179.9 0)"))
+    assert(near < halfMeridian && near > halfMeridian - 1000.0, s"179.9: $near")
   }
 
   test("hexagon areas match reference README goldens") {
